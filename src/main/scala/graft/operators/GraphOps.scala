@@ -104,12 +104,26 @@ object GraphOps {
   private def declared(df: DataFrame, keys: Seq[String], n: Int): DataFrame =
     org.apache.spark.sql.graft.bridge.withDeclaredHashPartitioning(df, keys, n)
 
-  /** Partition count of a materialized checkpoint leaf — a free,
-    * data-adaptive size reading (AQE already coalesced the leaf's final
-    * shuffle from its actual bytes): no job, no driver collect. */
-  private def leafN(df: DataFrame): Int = df.queryExecution.analyzed match {
-    case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.getNumPartitions
-    case _ => df.rdd.getNumPartitions
+  /** Checkpoint a loop-invariant frame on a declared hash(`key`) layout,
+    * so the per-round joins against it never re-shuffle it. The layout is
+    * sized by the materialized leaf's partition count — a free,
+    * data-adaptive reading (AQE already coalesced the leaf's final
+    * shuffle from its actual bytes): no job, nothing collected. A
+    * 1-partition leaf satisfies any hash layout as-is, so small frames
+    * skip the second materialization. Returns the leaf and its count. */
+  private def invariantOn(df: DataFrame, key: String,
+                          reliable: Boolean): (DataFrame, Int) = {
+    val d0 = chk(df, reliable)
+    val n = math.max(1, d0.queryExecution.analyzed match {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.getNumPartitions
+      case _ => d0.rdd.getNumPartitions
+    })
+    if (n == 1) (declared(d0, Seq(key), 1), 1)
+    else {
+      val d = declared(chk(d0.repartition(n, col(key)), reliable), Seq(key), n)
+      release(d0)
+      (d, n)
+    }
   }
 
   /** Scale-adaptive loop partition count: sized from the frame's observed
@@ -131,12 +145,17 @@ object GraphOps {
   private def loopNCap(df: DataFrame): Int =
     df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200").toInt
 
-  /** Seed partition count before any row count is observable: the input
-    * plan's own partition count (scan parallelism is sized from input
-    * bytes — data-adaptive at every scale), capped by the session knob.
-    * Reading it plans the RDD but runs no job. */
-  private def seedN(df: DataFrame): Int =
-    math.max(1, math.min(loopNCap(df), df.rdd.getNumPartitions))
+  /** Seed partition count before any row count is observable: the input's
+    * PLANNED partition count, capped by the session knob (which is also
+    * the answer when the plan declares none — a plain scan, or an
+    * aggregate whose exchange the planner inserts only later).
+    * Read from the physical plan before execution — `df.rdd` would run
+    * the input's shuffle stages under AQE, and the seed checkpoint would
+    * then run them a second time. */
+  private def seedN(df: DataFrame): Int = {
+    val planned = df.queryExecution.sparkPlan.outputPartitioning.numPartitions
+    math.max(1, math.min(loopNCap(df), if (planned > 0) planned else Int.MaxValue))
+  }
 
   /** Unpersist a superseded localCheckpoint's blocks (no-op for reliable
     * checkpoint files). `Dataset.unpersist` only clears cache-manager
@@ -158,23 +177,10 @@ object GraphOps {
    */
   def bfsLevels(edges: DataFrame, roots: DataFrame, maxIter: Int = 20,
                 reliable: Boolean = false): DataFrame = {
-    // loop-invariant edge frame, joined on `src` by every BFS iteration:
-    // materialized ONCE (r18 persisted it so iterations stop re-deriving
-    // it from source; r19 additionally pins it to a declared hash(src)
-    // layout via a sized re-checkpoint, so the per-iteration frontier
-    // join never re-shuffles the edge side again — at corpus scale that
-    // was one full edge shuffle per BFS level). Blocks released after
-    // the loop: the returned `levels` references only frontier leaves.
-    val e0 = chk(edges.select(col("src"), col("target")), reliable)
-    val nE = math.max(1, leafN(e0))
-    val e =
-      if (leafN(e0) <= 1) declared(e0, Seq("src"), 1)
-      else {
-        val d = declared(chk(e0.repartition(nE, col("src")), reliable),
-          Seq("src"), nE)
-        release(e0)
-        d
-      }
+    // loop-invariant edge frame, joined on `src` by every BFS iteration
+    // (at corpus scale a re-shuffle was one full edge shuffle per level).
+    // Released after the loop: `levels` references only frontier leaves.
+    val (e, _) = invariantOn(edges.select(col("src"), col("target")), "src", reliable)
     var levels = roots.select(col("node_id")).distinct()
       .withColumn("level", lit(0))
     var frontier = levels
@@ -316,66 +322,115 @@ object GraphOps {
 
   /**
    * Connected components over the undirected view of the edge list:
-   * (node_id, component) where component = the minimum node id reachable.
-   * Hash-min label propagation PLUS pointer doubling: each round first
-   * takes the min over neighbor labels (1 hop), then shortcuts every
-   * label to its label's label — so label information travels 2^i hops
-   * after i rounds and convergence is O(log diameter), not O(diameter)
-   * (a 1M-node chain resolves in ~20 rounds instead of 1M). Each round
-   * is two joins + one aggregation, fully distributed; label frontiers
-   * are localCheckpoint'ed so plan depth stays constant; `maxIter`
-   * bounds adversarial topologies.
+   * (node_id, component) where component = the minimum node id reachable
+   * (a null endpoint yields one (null, null) row and joins nothing).
+   *
+   * Two regimes, decided once per call by sizing the symmetric edge view
+   * like every other loop ([[loopN]], `graft.loop.rowsPerPartition`):
+   *  - it fits ONE loop partition: union-find in one task
+   *    ([[unionFindComponents]]). The loop would run every stage as one
+   *    task anyway, and its ~30 jobs, planned and launched one after
+   *    another, cost far more in planning and job cadence than the work
+   *    on the data;
+   *  - otherwise: distributed label propagation with pointer doubling on
+   *    that many partitions ([[labelPropagation]]).
+   * `maxIter` bounds only the distributed loop (it guards against
+   * adversarial topologies); the one-task regime always completes.
    *
    * Beyond-parity: the reference has no component/closure operator — its
    * graph layer stops at BFS levels (reference GT:7-78).
    */
   def connectedComponents(edges: DataFrame, maxIter: Int = 20,
                           reliable: Boolean = false): DataFrame = {
-    // symmetric view via ONE explode pass, not union(edges, swapped):
-    // a self-union evaluates the upstream lineage twice in the same job,
-    // and CC callers feed it expensive lineages (the full MinHash
-    // signature pipeline, a distributed ordinal) — measured as the
-    // dominant cost of the dedup-CC gates before this change (round 18)
-    val sym0 = chk(edges.select(explode(array(
+    // symmetric view via ONE explode pass, not union(edges, swapped): a
+    // self-union evaluates the upstream lineage twice, and CC callers feed
+    // it expensive lineages (the MinHash signature pipeline, a distributed
+    // ordinal). Its row count rides the checkpoint job and sizes the regime.
+    val (sym0, symRows) = chkWithMetric(edges.select(explode(array(
         struct(col("src").as("a"), col("target").as("b")),
         struct(col("target").as("a"), col("src").as("b")))).as("__e__"))
       .select(col("__e__.a").as("a"), col("__e__.b").as("b"))
-      .distinct(), reliable)
-    // round 19 (verdict item 3): ALL loop frames share ONE hash layout so
-    // the per-round joins start co-partitioned and stop re-shuffling.
-    // nSym is data-adaptive — AQE already sized sym0's materialization
-    // from its bytes, so reading the leaf's partition count is a free,
-    // scale-correct answer (1 on a toy graph, input-sized on a corpus).
-    // The edge view is re-checkpointed ONCE partitioned by the join side
-    // `b` and the partitioning is DECLARED on the leaf (localCheckpoint
-    // drops it under AQE — see `declared`); labels/frontier leaves carry
-    // hash(node_id, nSym) the same way. Measured effect: the frontier
-    // join and the labels join plan ZERO exchanges; only the aggregation,
-    // the doubling self-join's left side and the final layout repartition
-    // move data — jobs per round drop from ~9 to ~4 and the corpus-sized
-    // edge view is never shuffled again after setup (guide §2.4).
-    // N == 1 fast path: a single-partition frame trivially satisfies ANY
-    // hash partitioning (all rows co-located), so tiny/derived graphs —
-    // the dedup-CC family's case — get the declared layout for free
-    // instead of paying a second materialization (measured: the rechk
-    // cost the small-CC gates 10-25% while buying nothing)
-    val nSym = math.max(1, leafN(sym0))
-    val sym =
-      if (leafN(sym0) <= 1) declared(sym0, Seq("b"), 1)
-      else {
-        val s = declared(chk(sym0.repartition(nSym, col("b")), reliable),
-          Seq("b"), nSym)
-        release(sym0)
-        s
+      .distinct(), count(lit(1)), reliable)
+    val n = loopN(sym0, symRows)
+    if (n == 1 && unionFindable(sym0.schema("b").dataType)) {
+      val out = chk(unionFindComponents(sym0), reliable)
+      release(sym0)
+      out
+    } else labelPropagation(sym0, n, maxIter, reliable)
+  }
+
+  /** Id types whose Catalyst values are hash-map keys with the loop join's
+    * equality; binary, floating-point, collated-string and nested ids
+    * take the distributed loop. */
+  private def unionFindable(dt: DataType): Boolean = dt match {
+    case StringType | ByteType | ShortType | IntegerType | LongType |
+         BooleanType | DateType | TimestampType | TimestampNTZType |
+         _: DecimalType => true
+    case _ => false
+  }
+
+  /** Components of the materialized symmetric view in one task: union-find
+    * with path compression over an O(nodes) map, always hanging the larger
+    * root under the smaller, so each root is its component's minimum under
+    * Catalyst's ordering of the id type — the order the loop's `min` uses
+    * (UTF-8 bytes for strings, which UTF-16 `compareTo` contradicts). */
+  private def unionFindComponents(sym: DataFrame): DataFrame = {
+    val dt = sym.schema("b").dataType
+    val rows = sym.queryExecution.toRdd.coalesce(1).mapPartitions { it =>
+      import org.apache.spark.sql.catalyst.InternalRow
+      val ord = org.apache.spark.sql.catalyst.types.PhysicalDataType.ordering(dt)
+      val parent = new java.util.HashMap[Any, Any]()
+      // map values are always the map's own copies (see `node`)
+      def find(x: Any): Any = {
+        var root = parent.get(x)
+        while (parent.get(root) != root) root = parent.get(root)
+        var c = x
+        while (c != root) { val up = parent.get(c); parent.put(c, root); c = up }
+        root
       }
+      def node(r: InternalRow, i: Int): Any = if (r.isNullAt(i)) null else {
+        val v = r.get(i, dt)
+        if (!parent.containsKey(v)) { val own = InternalRow.copyValue(v); parent.put(own, own) }
+        v
+      }
+      var sawNull = false
+      it.foreach { r =>
+        val (a, b) = (node(r, 0), node(r, 1))
+        if (a == null || b == null) sawNull = true
+        else {
+          val (ra, rb) = (find(a), find(b))
+          if (ord.lt(ra, rb)) parent.put(rb, ra) else if (ord.lt(rb, ra)) parent.put(ra, rb)
+        }
+      }
+      parent.keySet.toArray.iterator.map(k => InternalRow(k, find(k))) ++
+        Iterator.fill(if (sawNull) 1 else 0)(InternalRow(null, null))
+    }
+    org.apache.spark.sql.graft.bridge.internalCreateDataFrame(sym.sparkSession, rows,
+      StructType(Seq(StructField("node_id", dt), StructField("component", dt))))
+  }
+
+  /** The distributed regime of [[connectedComponents]] on `n` loop
+    * partitions over the materialized symmetric view `sym0` (released):
+    * hash-min label propagation PLUS pointer doubling. Each round takes
+    * the min over neighbor labels (1 hop), then shortcuts every label to
+    * its label's label, so label information travels 2^i hops after i
+    * rounds and convergence is O(log diameter), not O(diameter). Each
+    * round is two joins + one aggregation; label frontiers are
+    * checkpointed so plan depth stays constant. */
+  private def labelPropagation(sym0: DataFrame, n: Int, maxIter: Int,
+                               reliable: Boolean): DataFrame = {
+    // ALL loop frames share ONE declared hash layout (see `declared`):
+    // the edge view by its join side `b`, labels/frontier by node_id, so
+    // the frontier and labels joins plan ZERO exchanges and the edge view
+    // is never shuffled again after setup.
+    val sym = declared(chk(sym0.repartition(n, col("b")), reliable), Seq("b"), n)
+    release(sym0)
     // node set from the `b` side (sym is symmetric, so {a} == {b}): the
     // leaf is already hash(b)-partitioned, making the distinct free
-    val labels0 = declared(chk(
+    var labels = declared(chk(
       sym.select(col("b").as("node_id")).distinct()
         .withColumn("component", col("node_id")), reliable),
-      Seq("node_id"), nSym)
-    var labels = labels0
-    var prev: DataFrame = null // superseded label frame, released each round
+      Seq("node_id"), n)
     var i = 0
     var changed = 1L
     // delta propagation: only labels lowered LAST round can lower a
@@ -384,88 +439,71 @@ object GraphOps {
     // The changed set collapses geometrically; it is a projection of the
     // hash(node_id)-partitioned label leaf, so its join against the
     // hash(b)-partitioned edge view is exchange-free at any size.
-    var changedSet = labels0
-    while (i < maxIter && changed > 0) {
-      val nbrMin = sym.join(changedSet.select(col("node_id").as("b"), col("component")),
+    var changedSet = labels
+    // one round: hop (min over the neighbor labels that changed last round),
+    // then double. Returns its cache and its lazy result (__chg__ = lowered).
+    def round(cur: DataFrame, frontier: DataFrame): (DataFrame, DataFrame) = {
+      val nbrMin = sym.join(frontier.select(col("node_id").as("b"), col("component")),
           Seq("b"), "inner")
         // land the aggregation shuffle directly on the loop layout: a
         // planner-chosen exchange would use the session default count and
         // force a SECOND exchange to co-partition with the label leaf
-        .repartition(nSym, col("a"))
+        .repartition(n, col("a"))
         .groupBy(col("a").as("node_id"))
         .agg(min(col("component")).as("__nbr_min__"))
       // persist, not checkpoint: the self-join below reads `hopped` twice
       // and the cache dedups that within the SAME job that materializes
-      // `next` — a checkpoint here would add a whole extra eager job per
-      // round (measured ~1/3 of CC wall time at toy scale, pure
-      // scheduler overhead). Plan depth stays bounded because `labels`
+      // the round — a checkpoint here would add a whole extra eager job
+      // per round (measured ~1/3 of CC wall time at toy scale, pure
+      // scheduler overhead). Plan depth stays bounded because `cur`
       // is a checkpointed leaf.
-      val hopped = labels.join(nbrMin, Seq("node_id"), "left")
+      val hopped = cur.join(nbrMin, Seq("node_id"), "left")
         .select(col("node_id"), col("component").as("__old__"),
           least(col("component"), coalesce(col("__nbr_min__"), col("component")))
             .as("component"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       // pointer doubling: component <- component's component. Labels are
       // node ids, so the lookup is a self-join on the hopped labels.
-      // The change-count probe rides the checkpoint job (chkWithMetric)
-      // instead of a separate count plan+job per round; it still runs
-      // every round, including the last allowed one: a loop that exits
-      // at maxIter while labels are still moving has NON-MINIMAL labels
-      // — components silently split (same contract as ancestorClosure).
-      val hop2 = hopped.join(
+      (hopped, hopped.join(
           hopped.select(col("node_id").as("component"),
             col("component").as("__cc__")),
           Seq("component"), "left")
         .select(col("node_id"),
           coalesce(col("__cc__"), col("component")).as("component"),
-          (coalesce(col("__cc__"), col("component")) < col("__old__")).as("__chg__"))
-      // at nSym == 1 the layout repartition is a pure extra shuffle of the
-      // label set (AQE coalesces the self-join output to one partition
-      // anyway, and a 1-partition leaf is declarable as-is); above 1 it
-      // replaces the labels-side and frontier-side exchanges of the NEXT
-      // round, a net win of one exchange per round
-      val (next, changed2) = chkWithMetric(
-        if (nSym > 1) hop2.repartition(nSym, col("node_id")) else hop2,
+          (coalesce(col("__cc__"), col("component")) < col("__old__")).as("__chg__")))
+    }
+    while (i < maxIter && changed > 0) {
+      val (hopped, hop2) = round(labels, changedSet)
+      // The change-count probe rides the checkpoint job (chkWithMetric)
+      // instead of a separate count plan+job per round; it still runs
+      // every round, including the last allowed one: a loop that exits
+      // at maxIter while labels are still moving has NON-MINIMAL labels
+      // — components silently split (same contract as ancestorClosure).
+      // The layout repartition replaces the labels-side and frontier-side
+      // exchanges of the NEXT round, a net win of one exchange per round.
+      val (next, changed2) = chkWithMetric(hop2.repartition(n, col("node_id")),
         sum(when(col("__chg__"), 1L).otherwise(0L)), reliable)
-      val nextD =
-        if (nSym > 1) declared(next, Seq("node_id"), nSym)
-        else if (leafN(next) == 1) declared(next, Seq("node_id"), 1)
-        else next
+      val nextD = declared(next, Seq("node_id"), n)
       // `next` is materialized (checkpoint is eager) with truncated
-      // lineage — the intra-round cache and the superseded label frame
-      // are dead weight now; without the release up to ~2*maxIter block
-      // sets pin block-manager memory for the life of the job
+      // lineage: the round's cache and the superseded label frame would
+      // otherwise pin block-manager memory for the life of the job
       hopped.unpersist(false)
-      if (prev != null) release(prev)
-      prev = if (labels eq labels0) null else labels // labels0 never returned early, but keep release simple
+      release(labels)
       changed = changed2
       changedSet = nextD.filter(col("__chg__")).select(col("node_id"), col("component"))
       labels = nextD.drop("__chg__")
       i += 1
     }
     // the last allowed round may itself have COMPLETED convergence, so
-    // changed > 0 at exhaustion is not yet proof of failure: run one
-    // decoupled probe (would another hop-or-double lower any label?)
-    // and only then throw. Cost: one extra job, only on exhaustion.
+    // changed > 0 at exhaustion is not yet proof of failure: would one
+    // more round lower any label? Only then throw. Cost: one extra job,
+    // only on exhaustion.
     val unconverged = changed > 0 && {
-      val probeNbr = sym.join(
-          changedSet.select(col("node_id").as("b"), col("component")),
-          Seq("b"), "inner")
-        .groupBy(col("a").as("node_id"))
-        .agg(min(col("component")).as("__nbr_min__"))
-      val hopProbe = labels.join(probeNbr, Seq("node_id"), "left")
-        .select(col("node_id"), col("component"),
-          least(col("component"), coalesce(col("__nbr_min__"), col("component")))
-            .as("__h__"))
-      hopProbe.join(
-          hopProbe.select(col("node_id").as("__h__"), col("__h__").as("__hh__")),
-          Seq("__h__"), "left")
-        .filter(coalesce(col("__hh__"), col("__h__")) < col("component"))
-        .limit(1).count() > 0
+      val (hopped, hop2) = round(labels, changedSet)
+      try hop2.filter(col("__chg__")).limit(1).count() > 0
+      finally hopped.unpersist(false)
     }
     release(sym)
-    if (prev != null) release(prev)
-    if (!(labels eq labels0)) release(labels0)
     if (unconverged)
       throw new IllegalStateException(
         s"connectedComponents did not converge in $maxIter rounds " +
@@ -482,21 +520,9 @@ object GraphOps {
    */
   def forwardPaths(edges: DataFrame, roots: DataFrame, maxIter: Int = 20,
                    reliable: Boolean = false): DataFrame = {
-    // loop-invariant edge frame: previously re-SCANNED from source and
-    // re-shuffled by the join every round; checkpointed once on a
-    // declared hash(src) layout (r19) so rounds neither recompute nor
-    // re-shuffle it. Released after the loop — the returned `paths` is
-    // its own checkpoint leaf.
-    val e0 = chk(edges.select(col("src"), col("target")), reliable)
-    val nE = math.max(1, leafN(e0))
-    val e =
-      if (leafN(e0) <= 1) declared(e0, Seq("src"), 1)
-      else {
-        val d = declared(chk(e0.repartition(nE, col("src")), reliable),
-          Seq("src"), nE)
-        release(e0)
-        d
-      }
+    // loop-invariant edge frame, joined on `src` every round. Released
+    // after the loop — the returned `paths` is its own checkpoint leaf.
+    val (e, _) = invariantOn(edges.select(col("src"), col("target")), "src", reliable)
     val base = chk(roots.select(col("node_id")).distinct()
       .withColumn("n_paths", lit(1L)), reliable)
     // recompute counts from scratch each round: paths_i(v) = [v is root]
@@ -560,13 +586,13 @@ object GraphOps {
   def ancestorClosure(edges: DataFrame, maxIter: Int = 20,
                       reliable: Boolean = false): DataFrame = {
     val e = edges.select(col("src"), col("target"))
-    // round 19 (verdict item 3): every pair frame lives on an explicit
-    // hash(node_id, N) layout, declared on its checkpoint leaf (see
-    // `declared`), so the doubling join's frontier side plans ZERO
-    // exchanges round over round; N starts at the session's shuffle
-    // sizing and adapts to the observed closure size (loopN). The seed's
-    // dedup aggregate rides the layout exchange (subset clustering), and
-    // the emptiness probe rides the seeding checkpoint job.
+    // every pair frame lives on an explicit hash(node_id, N) layout,
+    // declared on its checkpoint leaf (see `declared`), so the doubling
+    // join's frontier side plans ZERO exchanges round over round; N starts
+    // at the input's planned sizing (seedN) and adapts to the observed
+    // closure size (loopN). The seed's dedup aggregate rides the layout
+    // exchange (subset clustering), and the emptiness probe rides the
+    // seeding checkpoint job.
     val nSeed = seedN(e)
     val (pairs0raw, seedVals) = chkWithMetrics(
       e.select(col("target").as("node_id"), col("src").as("anc"))
@@ -588,12 +614,10 @@ object GraphOps {
         .join(pairs.as("p"), col("q.node_id") === col("p.anc"))
         .select(col("p.node_id").as("node_id"), col("q.anc").as("anc"),
           (col("p.__dist__") + lit(pow)).as("__dist__"))
-      // fused round (r18 fused the probe into the checkpoint; r19 fuses
-      // the freshness anti-join into the round aggregate): ONE exchange
-      // lands old pairs ∪ raw candidates on the loop layout, ONE
-      // aggregate takes min(dist) and whether the pair existed before
-      // (max over the __old__ tag), and the fixpoint probe rides the
-      // same checkpoint job. min(dist) == the old dist for existing
+      // fused round: ONE exchange lands old pairs ∪ raw candidates on the
+      // loop layout, ONE aggregate takes min(dist) and whether the pair
+      // existed before (max over the __old__ tag), and the fixpoint probe
+      // rides the same checkpoint job. min(dist) == the old dist for existing
       // pairs — stored distances are exact shortest distances by the
       // doubling induction, and any composed candidate is the length of
       // SOME path, never shorter — so the frame is row-identical to the
@@ -650,23 +674,9 @@ object GraphOps {
     val allClosure = ancestorClosure(e, maxIter, reliable)
     // forward edge: target is NOT an ancestor of src (and not a self-loop)
     val backEdges = allClosure.select(col("node_id").as("src"), col("anc").as("target"))
-    // fwd is loop-invariant and joined on `target` by every enumeration
-    // hop below — checkpoint it twice (round 19): once to learn its
-    // data-adaptive size, once repartitioned by target with the layout
-    // DECLARED on the leaf, so the per-hop joins stop re-shuffling it
-    val fwd0 = chk(e.filter(col("src") =!= col("target"))
-      .join(backEdges, Seq("src", "target"), "left_anti"), reliable)
-    // N == 1 fast path: a 1-partition leaf satisfies any hash layout
-    // as-is — skip the second materialization on small graphs
-    val nF = math.max(1, leafN(fwd0))
-    val fwd =
-      if (leafN(fwd0) <= 1) declared(fwd0, Seq("target"), 1)
-      else {
-        val f = declared(chk(fwd0.repartition(nF, col("target")), reliable),
-          Seq("target"), nF)
-        release(fwd0)
-        f
-      }
+    // fwd is loop-invariant and joined on `target` by every enumeration hop
+    val (fwd, nF) = invariantOn(e.filter(col("src") =!= col("target"))
+      .join(backEdges, Seq("src", "target"), "left_anti"), "target", reliable)
     val fwdClosure = ancestorClosure(fwd, maxIter, reliable)
 
     val srcPaths = fwdClosure.groupBy(col("node_id").as("target"))
@@ -681,15 +691,13 @@ object GraphOps {
     // Each hop is ONE checkpointed frame carrying both the parent
     // extension and the has-any-parents flag; `ended` and the next
     // frontier are lazy filters over that materialized leaf, and the
-    // open-frontier probe is a cheap count on it — versus the previous
-    // two-checkpoints-plus-isEmpty per hop (3 eager jobs of scheduler
-    // cadence). Step frames accumulate until the output aggregates are
-    // materialized, because the completed-path union references them (a
+    // open-frontier probe rides its checkpoint. Step frames accumulate
+    // until the output aggregates are materialized, because the
+    // completed-path union references them (a
     // released localCheckpoint cannot recompute — the release-early
     // version crashed with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND).
     // loop-invariant, joined on `head` every hop: checkpointed ONCE on
-    // fwd's layout (r18 re-derived it — a distinct shuffle — per hop),
-    // so the per-hop parent-flag join plans zero exchanges
+    // fwd's layout, so the per-hop parent-flag join plans zero exchanges
     val hasParents = declared(chk(
       e.select(col("target").as("head")).repartition(nF, col("head"))
         .dropDuplicates("head").withColumn("__hp__", lit(true)), reliable),
@@ -786,17 +794,15 @@ object GraphOps {
     // State: (node_id, anc, __f__, __l__) — a time-respecting path
     // anc -> ... -> node_id whose FIRST edge ts is __f__ and LAST is
     // __l__. Tracking both endpoints makes segments COMPOSABLE, so the
-    // closure pointer-doubles (O(log path-length) rounds); the previous
-    // last-ts-only state could only extend one edge per round and
-    // silently truncated at maxIter, and its count-based fixpoint probe
-    // missed rounds that only lowered a pair's min last-ts.
+    // closure pointer-doubles (O(log path-length) rounds).
     // Pareto prune: (f', l') dominates (f, l) when f' >= f && l' <= l —
     // the dominating segment composes everywhere the dominated one does
     // and yields a dominating result, so dropping dominated rows keeps
-    // the closure exact while bounding state per (node, anc).
-    def prune(df: DataFrame): DataFrame = {
+    // the closure exact while bounding state per (node, anc). `extra`
+    // aggregates ride the (node_id, anc, __f__) aggregate.
+    def prune(df: DataFrame, extra: Column*): DataFrame = {
       val byF = df.groupBy("node_id", "anc", "__f__")
-        .agg(min("__l__").as("__l__"))
+        .agg(min("__l__").as("__l__"), extra: _*)
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("node_id", "anc").orderBy(col("__f__").desc)
         .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
@@ -804,9 +810,9 @@ object GraphOps {
         .filter(col("__dom__").isNull || col("__l__") < col("__dom__"))
         .drop("__dom__")
     }
-    // round 19 (verdict item 3): pair frames live on an explicit
-    // hash(node_id, N) layout declared on their checkpoint leaves, so the
-    // composition join's p side (keyed node_id) never re-shuffles; prune's
+    // pair frames live on an explicit hash(node_id, N) layout declared
+    // on their checkpoint leaves (see `declared`), so the composition
+    // join's p side (keyed node_id) never re-shuffles; prune's
     // (node_id, anc, __f__) aggregate and (node_id, anc) window both ride
     // the layout exchange (subset clustering). The initial emptiness
     // probe rides the seeding checkpoint job.
@@ -829,10 +835,9 @@ object GraphOps {
           col("p.__f__").as("__f__"), col("q.__l__").as("__l__"))
       // content-based fixpoint: both sides are Pareto sets, so any change
       // surfaces as a surviving row that pairs lacks (a pure removal can
-      // only be caused by a new dominating row). r18 fused the probe into
-      // the checkpoint; r19 fuses the freshness left-join into prune's own
-      // (node_id, anc, __f__) aggregate: __oldl__ = the OLD row's __l__
-      // for this (node_id, anc, __f__) group (pairs is unique on that key,
+      // only be caused by a new dominating row). The freshness test rides
+      // prune's own aggregate: __oldl__ = the OLD row's __l__ for this
+      // (node_id, anc, __f__) group (pairs is unique on that key,
       // so min-over-old reads exactly that row, null when absent), and a
       // surviving row is fresh iff __oldl__ <=> __l__ fails — identical to
       // "not found by the old four-key left join" because min(__l__) over
@@ -842,14 +847,7 @@ object GraphOps {
       val unioned = pairs.withColumn("__old__", lit(true))
         .unionByName(composed.withColumn("__old__", lit(false)))
         .repartition(nNext, col("node_id"))
-      val byF = unioned.groupBy("node_id", "anc", "__f__")
-        .agg(min("__l__").as("__l__"),
-          min(when(col("__old__"), col("__l__"))).as("__oldl__"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("node_id", "anc").orderBy(col("__f__").desc)
-        .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-      val prunedTagged = byF.withColumn("__dom__", min("__l__").over(w))
-        .filter(col("__dom__").isNull || col("__l__") < col("__dom__"))
+      val prunedTagged = prune(unioned, min(when(col("__old__"), col("__l__"))).as("__oldl__"))
         .select(col("node_id"), col("anc"), col("__f__"), col("__l__"),
           (!(col("__oldl__") <=> col("__l__"))).as("__fresh__"))
       val (next, vs) = chkWithMetrics(prunedTagged,

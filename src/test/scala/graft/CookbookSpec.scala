@@ -200,8 +200,9 @@ class CookbookSpec extends SparkTestBase {
   test("cookbook: graph-cc") {
     import spark.implicits._
     // cookbook:begin:graph-cc
-    // beyond the reference: connected components via pointer doubling —
-    // O(log diameter) rounds, no driver-side iteration over nodes
+    // beyond the reference: connected components. A graph that fits one
+    // loop partition (graft.loop.rowsPerPartition) is labeled by union-find
+    // in one task; a larger one by pointer doubling, O(log diameter) rounds
     val edges = Seq(("a", "b"), ("b", "c"), ("x", "y"))
       .toDF("src", "target")
     val comps = GraphOps.connectedComponents(edges)

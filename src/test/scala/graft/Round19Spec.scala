@@ -40,10 +40,13 @@ class Round19Spec extends SparkTestBase {
     val rnd = new scala.util.Random(19)
     val edges = (1 to 120).map(_ =>
       (f"n${rnd.nextInt(40)}%03d", f"n${rnd.nextInt(40)}%03d"))
-    val got = withLoopRows1 {
-      GraphOps.connectedComponents(edges.toDF("src", "target"))
-        .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    val (got, parts) = withLoopRows1 {
+      val cc = GraphOps.connectedComponents(edges.toDF("src", "target"))
+      (cc.collect().map(r => r.getString(0) -> r.getString(1)).toMap,
+        cc.rdd.getNumPartitions)
     }
+    // the labels came out of the distributed loop, on its sized layout
+    assert(parts > 1, s"loop ran on $parts partition(s)")
     // repeated find() collapses chains fully for the expected map
     val uf = unionFind(edges)
     val expected = uf.map { case (n, _) =>

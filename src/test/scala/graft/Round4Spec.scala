@@ -241,25 +241,30 @@ class Round4Spec extends SparkTestBase {
   test("connectedComponents throws at maxIter instead of splitting components") {
     import graft.operators.GraphOps
     import spark.implicits._
-    // 40-edge chain needs ~6 doubling rounds; 2 is not enough
-    val chain = (0 until 40).map(i => (s"n$i", s"n${i + 1}")).toDF("src", "target")
-    val e = intercept[IllegalStateException] {
-      GraphOps.connectedComponents(chain, maxIter = 2).count()
-    }
-    assert(e.getMessage.contains("did not converge"))
-    // and with budget it converges to one component
-    assert(GraphOps.connectedComponents(chain, maxIter = 10)
-      .select("component").distinct().count() == 1L)
-    // boundary: the MINIMAL sufficient budget must succeed (a graph
-    // whose final allowed round completes convergence is converged —
-    // the post-loop probe, not round exhaustion, decides)
-    val minIter = (1 to 10).find { m =>
-      try { GraphOps.connectedComponents(chain, maxIter = m).count(); true }
-      catch { case _: IllegalStateException => false }
-    }.get
-    assert(GraphOps.connectedComponents(chain, maxIter = minIter)
-      .select("component").distinct().count() == 1L)
-    assert(minIter > 2)
+    // the loop regime: at the default sizing this chain is labeled by
+    // union-find in one task, which maxIter does not bound
+    spark.conf.set("graft.loop.rowsPerPartition", "1")
+    try {
+      // 40-edge chain needs ~6 doubling rounds; 2 is not enough
+      val chain = (0 until 40).map(i => (s"n$i", s"n${i + 1}")).toDF("src", "target")
+      val e = intercept[IllegalStateException] {
+        GraphOps.connectedComponents(chain, maxIter = 2).count()
+      }
+      assert(e.getMessage.contains("did not converge"))
+      // and with budget it converges to one component
+      assert(GraphOps.connectedComponents(chain, maxIter = 10)
+        .select("component").distinct().count() == 1L)
+      // boundary: the MINIMAL sufficient budget must succeed (a graph
+      // whose final allowed round completes convergence is converged —
+      // the post-loop probe, not round exhaustion, decides)
+      val minIter = (1 to 10).find { m =>
+        try { GraphOps.connectedComponents(chain, maxIter = m).count(); true }
+        catch { case _: IllegalStateException => false }
+      }.get
+      assert(GraphOps.connectedComponents(chain, maxIter = minIter)
+        .select("component").distinct().count() == 1L)
+      assert(minIter > 2)
+    } finally spark.conf.unset("graft.loop.rowsPerPartition")
   }
 
   test("chunkByTokens: null text emits no chunks even with ANSI off") {
