@@ -27,14 +27,16 @@ import org.apache.spark.sql.SparkSession
  * Phase B (`concurrent`, round-14 verdict item 3): several rounds each
  * run a BATCH of gates genuinely simultaneously — 3 streaming gates
  * (whose state-partition override lives in a cloned session,
- * StreamingQueries.streamSession) alongside 5 batch gates — while a
+ * StreamingQueries.streamSession) alongside 7 batch gates — while a
  * prober thread polls the driver session's spark.sql.shuffle.partitions
- * the whole time. The soak session pins a DISTINCTIVE partition count
- * (12, vs the streaming clones' 8), so ANY leak of the streaming
- * override into the shared session — the exact hazard the pre-round-14
- * set/restore window documented as an assumption — would surface as a
- * probe anomaly or a batch-side conf assertion failure. This retires the
- * sequential-driver caveat with evidence instead of documentation.
+ * the whole time, and spark.sql.constraintPropagation.enabled, which the
+ * two graph-loop gates must never write. The soak session pins a
+ * DISTINCTIVE partition count (12, vs the streaming clones' 8), so ANY
+ * leak of the streaming override into the shared session — the exact
+ * hazard the pre-round-14 set/restore window documented as an
+ * assumption — would surface as a probe anomaly or a batch-side conf
+ * assertion failure. This retires the sequential-driver caveat with
+ * evidence instead of documentation.
  *
  * At the end, after one bare release (what a sequential driver does
  * between queries anyway), the session must hold ZERO cached plans and
@@ -77,7 +79,10 @@ object Soak {
       "q_stream_window_agg", "q_stream_dedup", "q_stream_distinct")
     val concurrentBatch = Seq(
       "q_inner_join", "q_agg_basic", "q_dedup_minhash_lsh",
-      "q_explode_json", "q_topk_per_group")
+      "q_explode_json", "q_topk_per_group",
+      // two graph loops in flight: each builds checkpoint leaves every
+      // round, which must never write the shared session conf
+      "q_graph_cc", "q_graph_time_forward")
     val qs = SparkEntry.queries
     (gates ++ concurrentStreaming ++ concurrentBatch)
       .foreach(g => require(qs.contains(g), s"unknown gate $g"))
@@ -123,12 +128,14 @@ object Soak {
       // ---- phase B: true concurrency (streaming + batch in flight) ----
       // a prober hammers the DRIVER session's conf for the whole phase;
       // the streaming gates' 8-partition override lives in cloned
-      // sessions, so the shared conf must read 12 at every sample
+      // sessions, so the shared conf must read 12 at every sample, and
+      // the graph loops' checkpoints must leave constraint propagation on
       @volatile var probing = true
       val probeSamples = new java.util.concurrent.atomic.AtomicLong(0)
       val prober = new Thread(() => {
         while (probing) {
-          if (spark.conf.get("spark.sql.shuffle.partitions") != DriverParts)
+          if (spark.conf.get("spark.sql.shuffle.partitions") != DriverParts ||
+              spark.conf.get("spark.sql.constraintPropagation.enabled") != "true")
             confAnomalies.incrementAndGet()
           probeSamples.incrementAndGet()
           Thread.sleep(1)
@@ -146,7 +153,12 @@ object Soak {
               if (isBatch &&
                   spark.conf.get("spark.sql.shuffle.partitions") != DriverParts)
                 confAnomalies.incrementAndGet()
-              val n = qs(g)(spark, sfDir).count()
+              // a finished frame's checkpoint blocks are freed the way a
+              // service frees them once it is done with a result (graph
+              // results are checkpoint leaves; no cache scope owns them)
+              val df = qs(g)(spark, sfDir)
+              val n = try df.count()
+                finally org.apache.spark.sql.graft.bridge.releaseCheckpoints(df)
               if (isBatch &&
                   spark.conf.get("spark.sql.shuffle.partitions") != DriverParts)
                 confAnomalies.incrementAndGet()
@@ -181,7 +193,7 @@ object Soak {
       val endStorage = storageUsed()
       val ok = cacheEmpty && persisted.isEmpty && confAnomalies.get == 0
       val json =
-        s"""{"note":"cache-scope + concurrency soak: $run sequential mixed gates (driver-scoped / pool-scoped(dead inherited scope) / pool-unscoped) then $concurrentRun gates run CONCURRENTLY ($rounds rounds x ${concurrentStreaming.size} streaming + ${concurrentBatch.size} batch in flight together) while a prober sampled the driver session's shuffle-partition conf; asserts zero leaked persists AND zero conf leaks from the streaming state-partition override (cloned sessions)","queries_run":$run,"gates":${gates.size},"patterns":4,"concurrent_rounds":$rounds,"concurrent_queries":$concurrentRun,"concurrent_in_flight":${concurrentStreaming.size + concurrentBatch.size},"conf_probe_samples":${probeSamples.get},"conf_anomalies":${confAnomalies.get},"driver_shuffle_partitions":$DriverParts,"stream_clone_shuffle_partitions":8,"cache_manager_empty":$cacheEmpty,"persisted_rdds":${persisted.size},"storage_bytes_baseline":$baselineStorage,"storage_bytes_end":$endStorage,"pass":$ok}"""
+        s"""{"note":"cache-scope + concurrency soak: $run sequential mixed gates (driver-scoped / pool-scoped(dead inherited scope) / pool-unscoped) then $concurrentRun gates run CONCURRENTLY ($rounds rounds x ${concurrentStreaming.size} streaming + ${concurrentBatch.size} batch in flight together) while a prober sampled the driver session's shuffle-partition and constraint-propagation conf; asserts zero leaked persists AND zero conf leaks from the streaming state-partition override (cloned sessions) or the graph loops' checkpoints","queries_run":$run,"gates":${gates.size},"patterns":4,"concurrent_rounds":$rounds,"concurrent_queries":$concurrentRun,"concurrent_in_flight":${concurrentStreaming.size + concurrentBatch.size},"conf_probe_samples":${probeSamples.get},"conf_anomalies":${confAnomalies.get},"driver_shuffle_partitions":$DriverParts,"stream_clone_shuffle_partitions":8,"cache_manager_empty":$cacheEmpty,"persisted_rdds":${persisted.size},"storage_bytes_baseline":$baselineStorage,"storage_bytes_end":$endStorage,"pass":$ok}"""
       val p = java.nio.file.Paths.get(outJson)
       if (p.getParent != null) java.nio.file.Files.createDirectories(p.getParent)
       java.nio.file.Files.write(p, json.getBytes("UTF-8"))

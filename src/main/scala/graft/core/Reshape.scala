@@ -176,17 +176,7 @@ object Reshape {
     val out = fetched.flatMap { case (kept, maps) =>
       maps.map(m => Row.fromSeq(kept ++ keys.map(k => m.getOrElse(k, ""))))
     }(Encoders.row(outSchema))
-    // Dataset.unpersist only clears cache-manager entries; a
-    // localCheckpoint's blocks belong to the RDD inside the plan's
-    // LogicalRDD leaf (same pattern as GraphOps.release)
-    val releaseBlocks = () => {
-      fetched.queryExecution.analyzed.collectLeaves().foreach {
-        case lr: org.apache.spark.sql.execution.LogicalRDD =>
-          lr.rdd.unpersist(false)
-        case _ =>
-      }
-    }
-    (out, releaseBlocks)
+    (out, () => org.apache.spark.sql.graft.bridge.releaseCheckpoints(fetched))
   }
 
   /** Split N string cols by `sep` into aligned row fan-out

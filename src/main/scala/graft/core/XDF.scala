@@ -79,8 +79,8 @@ case class XDF(df: DataFrame) {
     // the rest are non-empty iff non-null. The sweep is ONE pass at the
     // InternalRow level rather than an N-aggregate `agg`: Catalyst
     // analysis + codegen of N max(when(...)) aggregates is quadratic in
-    // column count (WideColsProbe, round 16: 8.5s at 1000 cols, 37s at
-    // 5000 — all driver-side), while this per-partition Boolean-array
+    // column count (measured: 8.5s at 1000 cols, 37s at 5000 — all
+    // driver-side), while this per-partition Boolean-array
     // sweep is linear, communicates the same per-partition bitmap a
     // map-side-combined agg would, and short-circuits a partition once
     // every column has been seen non-empty.

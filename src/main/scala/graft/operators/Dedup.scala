@@ -305,9 +305,9 @@ object Dedup {
         for { i <- 0 until 16; j <- (i + 1) until 16 } yield (1 << i) | (1 << j)
       else Nil)
     // one rep (min id) per occupied hash value: <= 65,536 rows;
-    // checkpointed via chk so reliable=true survives executor loss like
-    // the CC phase it feeds
-    val bucketReps = GraphOps.chk(
+    // a checkpoint leaf like the CC phase it feeds, so reliable=true
+    // survives executor loss here too
+    val bucketReps = org.apache.spark.sql.graft.bridge.checkpointLeaf(
       df.select(TextOps.simhash16(col(textCol)).as("__sh__"), col(idCol))
         .groupBy(col("__sh__"))
         .agg(min(col(idCol)).as("__rep__")), reliable)

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.graft.bridge.{checkpointLeaf, releaseCheckpoints}
 
 /**
  * Graph algorithms over edge-list DataFrames with the reference's
@@ -17,71 +18,46 @@ object GraphOps {
 
   /**
    * Iteration checkpoint strategy. `reliable = false` (default) uses
-   * `localCheckpoint` — fast, lineage-truncating, but blocks live only in
+   * local checkpoints — fast, lineage-truncating, but blocks live only in
    * executor block managers: an executor loss mid-iteration kills the job.
    * `reliable = true` writes reliable checkpoint files (caller must
    * `spark.sparkContext.setCheckpointDir(...)` first, typically on the
    * cluster's DFS) so iterative jobs survive executor loss — the mode to
    * run at cluster scale (see SCALE.md "Reliable checkpointing").
    *
-   * Constraint propagation is suppressed for the duration of the
-   * checkpoint: `Dataset.checkpoint` copies the source plan's constraint
-   * set onto the new LogicalRDD leaf, and when the source lineage holds a
-   * deduplicated SELF-JOIN of an earlier checkpoint (exactly what the
-   * pointer-doubling closures build every round) those constraints can
-   * reference rewritten attribute ids that no longer resolve —
-   * `java.util.NoSuchElementException: key not found: <attr>` from Union
-   * constraint rewriting at the next checkpoint. A constraint-free leaf
-   * only forgoes derived-filter inference on frames the loop re-filters
-   * anyway.
+   * Every loop frame is a [[checkpointLeaf]]: origin stats, no
+   * constraints, and the hash layout the loop placed declared on the
+   * leaf (`hashOn`/`n`), so per-round joins against it never re-shuffle
+   * it. `probes` are aggregates computed DURING the checkpoint's own job
+   * via `Dataset.observe` — the loops need a fixpoint probe every round,
+   * and a separate `count()` over the new leaf costs a full Catalyst plan
+   * + job per round (measured: about half of a small-graph closure gate's
+   * wall time is driver planning between jobs). A probe must be null-safe
+   * on an empty frame (sum -> null): a present-but-null value reads as 0,
+   * but a MISSING probe entry is an engine-contract breach
+   * (CollectMetricsExec failed to surface the node) and THROWS — reading
+   * it as 0 would make every iterative loop silently "converge" on round
+   * 1 with wrong results (ADVICE r18).
+   *
+   * Exactness note: probes that compare VALUE SUMS across rounds (e.g.
+   * forwardPaths' total-path fixpoint) additionally assume observed
+   * metrics are exact — true here because speculative execution is off
+   * in every shipped session config; a speculatively re-run task can
+   * double-count into a `Dataset.observe` accumulator.
    */
-  private[graft] def chk(df: DataFrame, reliable: Boolean): DataFrame = {
-    val conf = df.sparkSession.conf
-    val key = "spark.sql.constraintPropagation.enabled"
-    val prev = conf.get(key, "true")
-    conf.set(key, "false")
-    try if (reliable) df.checkpoint() else df.localCheckpoint()
-    finally conf.set(key, prev)
-  }
-
-  /** [[chk]] plus one aggregate metric computed DURING the checkpoint's
-    * materialization job via `Dataset.observe` — the loops below need a
-    * fixpoint probe every round, and a separate `count()` over the new
-    * leaf costs a full Catalyst plan + job per round (measured: about
-    * half of a small-graph closure gate's wall time is driver planning
-    * between jobs, and the probe is one of the two plans per round).
-    * The metric must be null-safe on an empty frame (sum -> null): a
-    * present-but-null value reads as 0, but a MISSING metric entry is an
-    * engine-contract breach (CollectMetricsExec failed to surface the
-    * node) and THROWS — reading it as 0 would make every iterative loop
-    * silently "converge" on round 1 with wrong results (ADVICE r18).
-    *
-    * Exactness note: probes that compare VALUE SUMS across rounds (e.g.
-    * forwardPaths' total-path fixpoint) additionally assume observed
-    * metrics are exact — true here because speculative execution is off
-    * in every shipped session config; a speculatively re-run task can
-    * double-count into a `Dataset.observe` accumulator. */
-  private def chkWithMetric(df: DataFrame, metric: Column,
-                            reliable: Boolean): (DataFrame, Long) = {
-    val (out, vs) = chkWithMetrics(df, Seq(metric), reliable)
-    (out, vs.head)
-  }
-
-  /** [[chkWithMetric]] for several aggregates riding the same checkpoint
-    * job (the loops below need a fixpoint probe AND the frame's row count
-    * — the count sizes the next round's partitioning, see [[loopN]]). */
-  private def chkWithMetrics(df: DataFrame, metrics: Seq[Column],
-                             reliable: Boolean): (DataFrame, Seq[Long]) = {
+  private def chk(df: DataFrame, reliable: Boolean, probes: Seq[Column],
+                  hashOn: Seq[String] = Nil,
+                  n: Option[Int] = None): (DataFrame, Seq[Long]) = {
     val observed = df.observe("__chk_probe__",
-      metrics.head.as("m0"), metrics.tail.zipWithIndex.map {
+      probes.head.as("m0"), probes.tail.zipWithIndex.map {
         case (m, i) => m.as(s"m${i + 1}") }: _*)
-    val out = chk(observed, reliable)
+    val out = checkpointLeaf(observed, reliable, hashOn, n)
     val row = observed.queryExecution.observedMetrics.getOrElse("__chk_probe__",
       throw new IllegalStateException(
-        "chkWithMetric: '__chk_probe__' missing from observedMetrics after " +
+        "chk: '__chk_probe__' missing from observedMetrics after " +
           "checkpoint materialization — the fixpoint probe did not run; " +
           "refusing to treat it as converged"))
-    val vs = metrics.indices.map { i =>
+    val vs = probes.indices.map { i =>
       Option(row.get(i)).map {
         case l: java.lang.Long    => l.longValue
         case i2: java.lang.Integer => i2.longValue
@@ -90,19 +66,6 @@ object GraphOps {
     }
     (out, vs)
   }
-
-  /** Declare the hash partitioning a checkpointed leaf is KNOWN to carry.
-    * `Dataset.localCheckpoint` documents partitioning preservation, but
-    * under AQE the capture reads `UnknownPartitioning` (Spark 4.1.2,
-    * measured by graft.tools.PartProbe) — so every loop round's join
-    * against the leaf re-shuffled it. The caller must have produced `df`
-    * from a plan whose FINAL exchange is `repartition(n, keys)` followed
-    * only by partition-preserving operators (filter/project/hash-agg on a
-    * superset of `keys`/window/observe) — then the materialized layout is
-    * exactly HashPartitioning(keys, n) and declaring it only restores
-    * what the engine dropped (the bridge re-checks the partition count). */
-  private def declared(df: DataFrame, keys: Seq[String], n: Int): DataFrame =
-    org.apache.spark.sql.graft.bridge.withDeclaredHashPartitioning(df, keys, n)
 
   /** Checkpoint a loop-invariant frame on a declared hash(`key`) layout,
     * so the per-round joins against it never re-shuffle it. The layout is
@@ -113,15 +76,12 @@ object GraphOps {
     * skip the second materialization. Returns the leaf and its count. */
   private def invariantOn(df: DataFrame, key: String,
                           reliable: Boolean): (DataFrame, Int) = {
-    val d0 = chk(df, reliable)
-    val n = math.max(1, d0.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.getNumPartitions
-      case _ => d0.rdd.getNumPartitions
-    })
-    if (n == 1) (declared(d0, Seq(key), 1), 1)
+    val d0 = checkpointLeaf(df, reliable, Seq(key))
+    val n = math.max(1, d0.queryExecution.toRdd.getNumPartitions)
+    if (n == 1) (d0, 1)
     else {
-      val d = declared(chk(d0.repartition(n, col(key)), reliable), Seq(key), n)
-      release(d0)
+      val d = checkpointLeaf(d0.repartition(n, col(key)), reliable, Seq(key), Some(n))
+      releaseCheckpoints(d0)
       (d, n)
     }
   }
@@ -157,18 +117,6 @@ object GraphOps {
     math.max(1, math.min(loopNCap(df), if (planned > 0) planned else Int.MaxValue))
   }
 
-  /** Unpersist a superseded localCheckpoint's blocks (no-op for reliable
-    * checkpoint files). `Dataset.unpersist` only clears cache-manager
-    * entries — a localCheckpoint's blocks belong to the RDD inside the
-    * plan's LogicalRDD leaf, so that is what gets unpersisted. Only ever
-    * called on frames that are provably not returned — a truncated-
-    * lineage frame cannot be recomputed once its blocks are gone. */
-  private def release(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collectLeaves().foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
-      case _ =>
-    }
-
   /**
    * BFS level assignment from root nodes (reference GT:7-78
    * `get_bfs_levels`): returns (node_id, level) with level 0 at roots;
@@ -190,15 +138,15 @@ object GraphOps {
       // checkpoint: materializes the frontier AND truncates lineage,
       // so iteration depth never grows the plan (a cache alone leaves a
       // recursive DAG that re-plans ever larger each round); the
-      // emptiness probe rides the same job (chkWithMetric), not a
+      // emptiness probe rides the same job (a `chk` probe), not a
       // separate isEmpty plan+job per round
-      val (next, n) = chkWithMetric(
+      val (next, Seq(n)) = chk(
         frontier.join(e, frontier("node_id") === e("src"), "inner")
           .select(col("target").as("node_id"), (col("level") + 1).as("level"))
           .join(levels.select(col("node_id").as("seen")),
             col("node_id") === col("seen"), "left_anti")
           .groupBy("node_id").agg(min("level").as("level")),
-        count(lit(1)), reliable)
+        reliable, Seq(count(lit(1))))
       if (n == 0L) done = true
       else {
         levels = levels.union(next)
@@ -209,7 +157,7 @@ object GraphOps {
     if (!done)
       graft.core.Log.warn(s"bfsLevels stopped at maxIter=$maxIter with a " +
         "non-empty frontier; nodes deeper than that are missing levels")
-    release(e)
+    releaseCheckpoints(e)
     levels
   }
 
@@ -346,15 +294,15 @@ object GraphOps {
     // self-union evaluates the upstream lineage twice, and CC callers feed
     // it expensive lineages (the MinHash signature pipeline, a distributed
     // ordinal). Its row count rides the checkpoint job and sizes the regime.
-    val (sym0, symRows) = chkWithMetric(edges.select(explode(array(
+    val (sym0, Seq(symRows)) = chk(edges.select(explode(array(
         struct(col("src").as("a"), col("target").as("b")),
         struct(col("target").as("a"), col("src").as("b")))).as("__e__"))
       .select(col("__e__.a").as("a"), col("__e__.b").as("b"))
-      .distinct(), count(lit(1)), reliable)
+      .distinct(), reliable, Seq(count(lit(1))))
     val n = loopN(sym0, symRows)
     if (n == 1 && unionFindable(sym0.schema("b").dataType)) {
-      val out = chk(unionFindComponents(sym0), reliable)
-      release(sym0)
+      val out = checkpointLeaf(unionFindComponents(sym0), reliable)
+      releaseCheckpoints(sym0)
       out
     } else labelPropagation(sym0, n, maxIter, reliable)
   }
@@ -419,18 +367,18 @@ object GraphOps {
     * checkpointed so plan depth stays constant. */
   private def labelPropagation(sym0: DataFrame, n: Int, maxIter: Int,
                                reliable: Boolean): DataFrame = {
-    // ALL loop frames share ONE declared hash layout (see `declared`):
+    // ALL loop frames share ONE declared hash layout (see `chk`):
     // the edge view by its join side `b`, labels/frontier by node_id, so
     // the frontier and labels joins plan ZERO exchanges and the edge view
     // is never shuffled again after setup.
-    val sym = declared(chk(sym0.repartition(n, col("b")), reliable), Seq("b"), n)
-    release(sym0)
+    val sym = checkpointLeaf(sym0.repartition(n, col("b")), reliable, Seq("b"), Some(n))
+    releaseCheckpoints(sym0)
     // node set from the `b` side (sym is symmetric, so {a} == {b}): the
     // leaf is already hash(b)-partitioned, making the distinct free
-    var labels = declared(chk(
+    var labels = checkpointLeaf(
       sym.select(col("b").as("node_id")).distinct()
-        .withColumn("component", col("node_id")), reliable),
-      Seq("node_id"), n)
+        .withColumn("component", col("node_id")),
+      reliable, Seq("node_id"), Some(n))
     var i = 0
     var changed = 1L
     // delta propagation: only labels lowered LAST round can lower a
@@ -474,24 +422,23 @@ object GraphOps {
     }
     while (i < maxIter && changed > 0) {
       val (hopped, hop2) = round(labels, changedSet)
-      // The change-count probe rides the checkpoint job (chkWithMetric)
+      // The change-count probe rides the checkpoint job (a `chk` probe)
       // instead of a separate count plan+job per round; it still runs
       // every round, including the last allowed one: a loop that exits
       // at maxIter while labels are still moving has NON-MINIMAL labels
       // — components silently split (same contract as ancestorClosure).
       // The layout repartition replaces the labels-side and frontier-side
       // exchanges of the NEXT round, a net win of one exchange per round.
-      val (next, changed2) = chkWithMetric(hop2.repartition(n, col("node_id")),
-        sum(when(col("__chg__"), 1L).otherwise(0L)), reliable)
-      val nextD = declared(next, Seq("node_id"), n)
+      val (next, Seq(changed2)) = chk(hop2.repartition(n, col("node_id")),
+        reliable, Seq(sum(when(col("__chg__"), 1L).otherwise(0L))), Seq("node_id"), Some(n))
       // `next` is materialized (checkpoint is eager) with truncated
       // lineage: the round's cache and the superseded label frame would
       // otherwise pin block-manager memory for the life of the job
       hopped.unpersist(false)
-      release(labels)
+      releaseCheckpoints(labels)
       changed = changed2
-      changedSet = nextD.filter(col("__chg__")).select(col("node_id"), col("component"))
-      labels = nextD.drop("__chg__")
+      changedSet = next.filter(col("__chg__")).select(col("node_id"), col("component"))
+      labels = next.drop("__chg__")
       i += 1
     }
     // the last allowed round may itself have COMPLETED convergence, so
@@ -503,7 +450,7 @@ object GraphOps {
       try hop2.filter(col("__chg__")).limit(1).count() > 0
       finally hopped.unpersist(false)
     }
-    release(sym)
+    releaseCheckpoints(sym)
     if (unconverged)
       throw new IllegalStateException(
         s"connectedComponents did not converge in $maxIter rounds " +
@@ -523,7 +470,7 @@ object GraphOps {
     // loop-invariant edge frame, joined on `src` every round. Released
     // after the loop — the returned `paths` is its own checkpoint leaf.
     val (e, _) = invariantOn(edges.select(col("src"), col("target")), "src", reliable)
-    val base = chk(roots.select(col("node_id")).distinct()
+    val base = checkpointLeaf(roots.select(col("node_id")).distinct()
       .withColumn("n_paths", lit(1L)), reliable)
     // recompute counts from scratch each round: paths_i(v) = [v is root]
     // + sum over in-edges of paths_{i-1}(u). A frontier-with-anti-join
@@ -540,23 +487,22 @@ object GraphOps {
         .groupBy(col("target").as("node_id"))
         .agg(sum("n_paths").as("n_paths"))
       // fixpoint probe (total path count) rides the checkpoint job as an
-      // observed metric; chkWithMetric reads a NULL sum (empty roots
-      // input) as 0
-      val (next, total) = chkWithMetric(
+      // observed metric; `chk` reads a NULL sum (empty roots input) as 0
+      val (next, Seq(total)) = chk(
         base.select(col("node_id"), col("n_paths"))
           .unionByName(contrib.select(col("node_id"), col("n_paths")))
           .groupBy("node_id").agg(sum("n_paths").as("n_paths")),
-        sum("n_paths"), reliable)
+        reliable, Seq(sum("n_paths")))
       if (total == prevTotal) done = true
       prevTotal = total
-      if (!(paths eq base)) release(paths) // superseded round's blocks
+      if (!(paths eq base)) releaseCheckpoints(paths) // superseded round's blocks
       paths = next
       i += 1
     }
     if (!done)
       graft.core.Log.warn(s"forwardPaths stopped at maxIter=$maxIter before " +
         "fixpoint; counts for nodes deeper than that are incomplete")
-    release(e)
+    releaseCheckpoints(e)
     paths
   }
 
@@ -587,21 +533,19 @@ object GraphOps {
                       reliable: Boolean = false): DataFrame = {
     val e = edges.select(col("src"), col("target"))
     // every pair frame lives on an explicit hash(node_id, N) layout,
-    // declared on its checkpoint leaf (see `declared`), so the doubling
+    // declared on its checkpoint leaf (see `chk`), so the doubling
     // join's frontier side plans ZERO exchanges round over round; N starts
     // at the input's planned sizing (seedN) and adapts to the observed
     // closure size (loopN). The seed's dedup aggregate rides the layout
     // exchange (subset clustering), and the emptiness probe rides the
     // seeding checkpoint job.
     val nSeed = seedN(e)
-    val (pairs0raw, seedVals) = chkWithMetrics(
+    var (pairs, Seq(rowsTotal)) = chk(
       e.select(col("target").as("node_id"), col("src").as("anc"))
         .repartition(nSeed, col("node_id"))
         .dropDuplicates("node_id", "anc")
         .withColumn("__dist__", lit(1L)),
-      Seq(count(lit(1))), reliable)
-    var pairs = declared(pairs0raw, Seq("node_id"), nSeed)
-    var rowsTotal = seedVals.head
+      reliable, Seq(count(lit(1))), Seq("node_id"), Some(nSeed))
     var i = 0
     var pow = 1L // frontier distance composed this round
     var converged = rowsTotal == 0L
@@ -623,20 +567,19 @@ object GraphOps {
       // SOME path, never shorter — so the frame is row-identical to the
       // previous union ∪ anti-join formulation at every round.
       val nNext = loopN(pairs, rowsTotal)
-      val (grown, vs) = chkWithMetrics(
+      val (grown, Seq(fresh, rows)) = chk(
         pairs.withColumn("__old__", lit(true))
           .unionByName(doubled.withColumn("__old__", lit(false)))
           .repartition(nNext, col("node_id"))
           .groupBy(col("node_id"), col("anc"))
           .agg(min(col("__dist__")).as("__dist__"),
             max(col("__old__")).as("__seen__")),
-        Seq(sum(when(!col("__seen__"), 1L).otherwise(0L)), count(lit(1))),
-        reliable)
-      release(pairs)
-      pairs = declared(grown, Seq("node_id"), nNext)
-        .select(col("node_id"), col("anc"), col("__dist__"))
-      converged = vs(0) == 0L
-      rowsTotal = vs(1)
+        reliable, Seq(sum(when(!col("__seen__"), 1L).otherwise(0L)), count(lit(1))),
+        Seq("node_id"), Some(nNext))
+      releaseCheckpoints(pairs)
+      pairs = grown.select(col("node_id"), col("anc"), col("__dist__"))
+      converged = fresh == 0L
+      rowsTotal = rows
       pow *= 2L
       i += 1
     }
@@ -698,10 +641,10 @@ object GraphOps {
     // version crashed with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND).
     // loop-invariant, joined on `head` every hop: checkpointed ONCE on
     // fwd's layout, so the per-hop parent-flag join plans zero exchanges
-    val hasParents = declared(chk(
+    val hasParents = checkpointLeaf(
       e.select(col("target").as("head")).repartition(nF, col("head"))
-        .dropDuplicates("head").withColumn("__hp__", lit(true)), reliable),
-      Seq("head"), nF)
+        .dropDuplicates("head").withColumn("__hp__", lit(true)),
+      reliable, Seq("head"), Some(nF))
     var completed = List.empty[DataFrame]
     var frames = List.empty[DataFrame]
     frames ::= hasParents
@@ -711,22 +654,20 @@ object GraphOps {
     // ways from a frame laid out hash(target, nF); rows never move, so
     // the leaf provably carries hash(head, nF) — declared so hop 1's
     // three-way join on head is exchange-free on every side.
-    val (active0raw, nActive0) = chkWithMetric(
+    var (active, Seq(nActive)) = chk(
       edges.select(col("target")).repartition(nF, col("target")).distinct()
         .select(col("target").as("dest"), col("target").as("head"),
           col("target").cast(StringType).as("path")),
-      count(lit(1)), reliable)
-    var active = declared(active0raw, Seq("head"), nF)
+      reliable, Seq(count(lit(1))), Seq("head"), Some(nF))
     frames ::= active
-    var nActive = nActive0
     var i = 0
     while (i < maxIter && nActive > 0L) {
-      val (step, nOpen) = chkWithMetric(active.join(
+      val (step, Seq(nOpen)) = chk(active.join(
           fwd.select(col("target").as("head"), col("src").as("__par__")),
           Seq("head"), "left")
         .join(hasParents, Seq("head"), "left")
         .select(col("dest"), col("path"), col("__par__"), col("__hp__")),
-        sum(when(col("__par__").isNotNull, 1L).otherwise(0L)), reliable)
+        reliable, Seq(sum(when(col("__par__").isNotNull, 1L).otherwise(0L))))
       frames ::= step
       completed ::= step.filter(col("__par__").isNull && col("__hp__").isNull)
         .select(col("dest"), col("path"))
@@ -752,7 +693,7 @@ object GraphOps {
     // tagged union — they share the (target, string) shape), then free
     // every iteration frame: the returned lazy plan must only reference
     // blocks that stay alive.
-    val aggs = chk(
+    val aggs = checkpointLeaf(
       srcPaths.select(col("target"), lit("sp").as("__k__"),
           col(s"$prefix:src_paths").as("__v__"))
         .unionByName(allPaths.select(col("target"), lit("ap").as("__k__"),
@@ -761,8 +702,7 @@ object GraphOps {
           .agg(concat_ws("|", sort_array(collect_set(col("path")))).as("__v__"))
           .select(col("target"), lit("an").as("__k__"), col("__v__"))),
       reliable)
-    frames.foreach(release)
-    release(fwdClosure); release(allClosure); release(fwd)
+    (frames ++ Seq(fwdClosure, allClosure, fwd)).foreach(releaseCheckpoints)
     def part(k: String, name: String): DataFrame =
       aggs.filter(col("__k__") === k).select(col("target"), col("__v__").as(name))
 
@@ -811,19 +751,17 @@ object GraphOps {
         .drop("__dom__")
     }
     // pair frames live on an explicit hash(node_id, N) layout declared
-    // on their checkpoint leaves (see `declared`), so the composition
+    // on their checkpoint leaves (see `chk`), so the composition
     // join's p side (keyed node_id) never re-shuffles; prune's
     // (node_id, anc, __f__) aggregate and (node_id, anc) window both ride
     // the layout exchange (subset clustering). The initial emptiness
     // probe rides the seeding checkpoint job.
     val nSeed = seedN(e)
-    val (pairs0raw, seedVals) = chkWithMetrics(
+    var (pairs, Seq(rowsTotal)) = chk(
       prune(e.select(col("target").as("node_id"),
         col("src").as("anc"), col("__ts__").as("__f__"),
         col("__ts__").as("__l__")).repartition(nSeed, col("node_id"))),
-      Seq(count(lit(1))), reliable)
-    var pairs = declared(pairs0raw, Seq("node_id"), nSeed)
-    var rowsTotal = seedVals.head
+      reliable, Seq(count(lit(1))), Seq("node_id"), Some(nSeed))
     var i = 0
     var converged = rowsTotal == 0L
     while (i < maxIter && !converged) {
@@ -850,14 +788,13 @@ object GraphOps {
       val prunedTagged = prune(unioned, min(when(col("__old__"), col("__l__"))).as("__oldl__"))
         .select(col("node_id"), col("anc"), col("__f__"), col("__l__"),
           (!(col("__oldl__") <=> col("__l__"))).as("__fresh__"))
-      val (next, vs) = chkWithMetrics(prunedTagged,
+      val (next, Seq(fresh, rows)) = chk(prunedTagged, reliable,
         Seq(sum(when(col("__fresh__"), 1L).otherwise(0L)), count(lit(1))),
-        reliable)
-      release(pairs)
-      pairs = declared(next, Seq("node_id"), nNext)
-        .select(col("node_id"), col("anc"), col("__f__"), col("__l__"))
-      converged = vs(0) == 0L
-      rowsTotal = vs(1)
+        Seq("node_id"), Some(nNext))
+      releaseCheckpoints(pairs)
+      pairs = next.select(col("node_id"), col("anc"), col("__f__"), col("__l__"))
+      converged = fresh == 0L
+      rowsTotal = rows
       i += 1
     }
     if (!converged)

@@ -2,7 +2,11 @@ package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, Partitioning,
+  PartitioningCollection}
+import org.apache.spark.sql.classic.{Dataset, ExpressionUtils}
+import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
+import org.apache.spark.sql.internal.SQLConf
 
 /** Column <-> Expression bridge. `ExpressionUtils` is private[sql], so
   * this one-file shim lives under the org.apache.spark.sql package — the
@@ -30,62 +34,86 @@ object bridge {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .internalCreateDataFrame(rows, schema)
 
-  /** Re-declare a checkpointed frame's KNOWN hash partitioning on its
-    * LogicalRDD leaf (round 19, verdict item 3).
+  /** Materialize `df` and return it as a checkpoint leaf: one SQL
+    * execution that runs the same jobs as `Dataset.checkpoint` (so
+    * listeners, job groups and `queryExecution.observedMetrics` see one
+    * action), checkpointed locally (`reliable = false`: blocks in the
+    * executors' block managers) or to the context's checkpoint directory.
     *
-    * `Dataset.localCheckpoint`/`checkpoint` are documented to preserve
-    * the physical plan's output partitioning on the new leaf, but under
-    * AQE (Spark 4.1.2, measured by graft.tools.PartProbe) the capture
-    * reads `AdaptiveSparkPlanExec.outputPartitioning` as
-    * `UnknownPartitioning`, so every iterative loop's per-round join
-    * re-shuffles the checkpointed side from scratch. When the caller has
-    * itself placed `repartition(n, cols)` as the FINAL operator under the
-    * checkpoint, the materialized RDD's layout provably IS
-    * `HashPartitioning(cols, n)` — AQE may not rewrite a user-specified
-    * partition count (REPARTITION_BY_NUM), and the checkpoint's
-    * `.map(_.copy())` is narrow — so declaring it on the leaf only
-    * restores information the engine dropped. MUST NOT be called with
-    * anything but the exact repartition spec that produced the frame:
-    * a wrong declaration silently mis-co-locates later joins.
+    * The leaf contract:
+    *  - statistics: the source's optimized-plan stats, as
+    *    `Dataset.checkpoint` stores them (they drive broadcast planning
+    *    over the leaf);
+    *  - constraints: none. Origin constraints copied from a lineage that
+    *    self-joins an earlier leaf can name attribute ids that no longer
+    *    resolve, and the next constraint inference over the leaf then
+    *    throws `NoSuchElementException: key not found`;
+    *  - layout: `hashOn = keys` declares HashPartitioning(keys, k), k the
+    *    materialized partition count, where that is sound. With
+    *    `numPartitions = Some(n)` the caller promises the final exchange
+    *    is `repartition(n, keys)` followed only by partition-preserving
+    *    operators, and k must equal n. With `None`, only a one-partition
+    *    result is declared (every key hashes into it). Without `hashOn`,
+    *    or on an empty 0-partition result, the leaf keeps the executed
+    *    plan's partitioning, which AQE reports as unknown: the engine
+    *    drops the layout a loop placed, and every later join would
+    *    re-shuffle the leaf.
     *
-    * No-op (returns the input) if the plan is not a bare LogicalRDD. */
-  def withDeclaredHashPartitioning(df: org.apache.spark.sql.DataFrame,
-                                   cols: Seq[String],
-                                   numPartitions: Int): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.execution.LogicalRDD
-    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-    df.queryExecution.analyzed match {
-      case lr: LogicalRDD =>
-        // an EMPTY frame can materialize to a 0-partition RDD; declaring a
-        // positive partition count on it would break the planner's
-        // co-partitioned zip assumptions — leave it undeclared (the empty
-        // frame costs nothing to shuffle anyway)
-        if (lr.rdd.getNumPartitions == 0) return df
-        val attrs = cols.map(c => lr.output.find(_.name == c).getOrElse(
-          throw new IllegalArgumentException(
-            s"withDeclaredHashPartitioning: column '$c' not in ${lr.output.map(_.name)}")))
-        require(lr.rdd.getNumPartitions == numPartitions,
-          s"withDeclaredHashPartitioning: declared $numPartitions partitions " +
-            s"but the materialized RDD has ${lr.rdd.getNumPartitions}")
-        // originStats/originConstraints are private ctor vals with no
-        // accessor — read them reflectively so the relabeled leaf keeps
-        // the stats Dataset.checkpoint stored (losing them would disable
-        // size-based broadcast planning over the leaf)
-        def priv[T](name: String): T = {
-          val f = classOf[LogicalRDD].getDeclaredField(name)
-          f.setAccessible(true)
-          f.get(lr).asInstanceOf[T]
-        }
-        val sess = priv[org.apache.spark.sql.classic.SparkSession]("session")
-        val relabeled = new LogicalRDD(
-          lr.output, lr.rdd,
-          HashPartitioning(attrs, numPartitions),
-          lr.outputOrdering, lr.isStreaming, lr.stream)(
-          sess,
-          priv[Option[org.apache.spark.sql.catalyst.plans.logical.Statistics]]("originStats"),
-          priv[Option[org.apache.spark.sql.catalyst.expressions.ExpressionSet]]("originConstraints"))
-        org.apache.spark.sql.classic.Dataset.ofRows(sess, relabeled)
-      case _ => df
+    * The frame is planned without constraint inference, under a clone of
+    * the session conf that only the calling thread sees; the shared conf
+    * is never written, so concurrent loops cannot observe each other.
+    * Loop lineages self-join earlier leaves, where inference only adds
+    * not-null filters; on q_graph_bfs it also costs one more AQE job. */
+  def checkpointLeaf(df: org.apache.spark.sql.DataFrame, reliable: Boolean,
+                     hashOn: Seq[String] = Nil,
+                     numPartitions: Option[Int] = None): org.apache.spark.sql.DataFrame = {
+    val session = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val qe = df.queryExecution
+    val output = qe.analyzed.output
+    val noInference = session.sessionState.conf.clone()
+    noInference.setConf(SQLConf.CONSTRAINT_PROPAGATION_ENABLED, false)
+    val (rdd, stats) = SQLConf.withExistingConf(noInference) {
+      val rows = SQLExecution.withNewExecutionId(qe,
+          Some(if (reliable) "checkpoint" else "localCheckpoint")) {
+        qe.executedPlan.resetMetrics()
+        val rows = qe.executedPlan.execute().map(_.copy())
+        if (reliable) rows.checkpoint() else rows.localCheckpoint()
+        rows.doCheckpoint() // the final job: computes and stores every partition
+        rows
+      }
+      val optimized = qe.optimizedPlan
+      (rows, LogicalRDD.buildOutputAssocForRewrite(optimized.output, output)
+        .map(LogicalRDD.rewriteStatistics(optimized.stats, _)))
     }
+    val k = rdd.getNumPartitions
+    val declare = hashOn.nonEmpty && k > 0 && (numPartitions.isDefined || k == 1)
+    if (declare) numPartitions.foreach(n =>
+      require(k == n, s"checkpointLeaf: declared $n partitions on " +
+        s"${hashOn.mkString(", ")} but the materialized RDD has $k"))
+    @scala.annotation.tailrec
+    def firstLeaf(p: Partitioning): Partitioning = p match {
+      case c: PartitioningCollection => firstLeaf(c.partitionings.head)
+      case other => other
+    }
+    val partitioning =
+      if (declare)
+        HashPartitioning(hashOn.map(c => output.find(_.name == c).getOrElse(
+          throw new IllegalArgumentException(
+            s"checkpointLeaf: column '$c' not in ${output.map(_.name)}"))), k)
+      else firstLeaf(qe.executedPlan.outputPartitioning)
+    Dataset.ofRows(session, LogicalRDD(output, rdd, partitioning,
+      qe.executedPlan.outputOrdering, df.isStreaming)(session, stats, None))
   }
+
+  /** Unpersist the blocks of every local checkpoint leaf under `df`
+    * (no-op for reliable checkpoint files). `Dataset.unpersist` only
+    * clears cache-manager entries; a local checkpoint's blocks belong to
+    * the RDD inside the plan's leaf. Call it only on frames that nothing
+    * returned still reads: a lineage-truncated frame cannot be recomputed
+    * once its blocks are gone. */
+  def releaseCheckpoints(df: org.apache.spark.sql.Dataset[_]): Unit =
+    df.queryExecution.analyzed.collectLeaves().foreach {
+      case lr: LogicalRDD => lr.rdd.unpersist(false)
+      case _ =>
+    }
 }

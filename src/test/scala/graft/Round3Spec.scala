@@ -272,6 +272,31 @@ class Round3Spec extends SparkTestBase {
     assert(files > 0, "reliable=true wrote no checkpoint files")
   }
 
+  test("reliable=true on the multi-partition declared layout matches local mode") {
+    // rowsPerPartition = 1 forces the distributed loops: CC's label
+    // propagation and the closure's doubling, on declared hash layouts
+    val rnd = new scala.util.Random(31)
+    val graph = (1 to 60).map(_ => (f"n${rnd.nextInt(30)}%02d", f"n${rnd.nextInt(30)}%02d"))
+      .toDF("src", "target")
+    val dag = (1 to 60).map { _ =>
+      val a = rnd.nextInt(20); (f"v$a%02d", f"v${a + 1 + rnd.nextInt(6)}%02d")
+    }.toDF("src", "target")
+    val runs = Seq[(String, Boolean => org.apache.spark.sql.DataFrame)](
+      "connectedComponents" -> (r => GraphOps.connectedComponents(graph, reliable = r)),
+      "ancestorClosure" -> (r => GraphOps.ancestorClosure(dag, reliable = r)))
+    spark.conf.set("graft.loop.rowsPerPartition", "1")
+    try runs.foreach { case (name, run) =>
+      val dir = graft.core.TempDirs.scratch(s"graft_chk_$name")
+      sc.setCheckpointDir(dir)
+      val reliable = run(true)
+      assert(reliable.rdd.getNumPartitions > 1, s"$name: the loop ran on one partition")
+      assert(reliable.collect().toSet == run(false).collect().toSet, name)
+      val files = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+        .filter(java.nio.file.Files.isRegularFile(_)).count()
+      assert(files > 0, s"$name: reliable=true wrote no checkpoint files")
+    } finally spark.conf.unset("graft.loop.rowsPerPartition")
+  }
+
   // ===== explodeJson inference cache scoping =====
 
   test("explodeJson inference cache is released by releaseInferredCaches") {

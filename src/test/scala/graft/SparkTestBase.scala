@@ -11,14 +11,13 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkTestBase {
+  /** The engine's recommended session config (GraftSession: AQE,
+    * cached-plan re-partitioning, GraftExtensions), on 4 local cores
+    * with 4 shuffle partitions. */
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
+    val s = GraftSession.builder("graft-test", 4)
       .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
