@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.XDF
+import graft.sources.ParquetIO
 
 /**
  * Property-based differential gates: randomly generated operator
@@ -290,7 +291,7 @@ object FuzzQueries {
 
   private def filtersOn(s: SparkSession, dir: String, t: Table,
                         fs: Seq[Filter]): XDF =
-    fs.foldLeft(XDF(s.read.parquet(s"$dir/${t.name}.parquet")
+    fs.foldLeft(XDF(ParquetIO.read(s, s"$dir/${t.name}.parquet")
       .select(t.cols.map(c => col(c.name)): _*)))((x, f) => f.fn(x))
 
   private def reshapeOracle(c: ReshapeCase): String = {
@@ -672,7 +673,7 @@ object FuzzQueries {
 
   private def textQuery(c: TextCase)(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.TextOps
-    val base = XDF(s.read.parquet(s"$dir/documents.parquet")
+    val base = XDF(ParquetIO.read(s, s"$dir/documents.parquet")
       .select("doc_id", "text", "lang", "source", "n_chars"))
     val m = c.fs.foldLeft(base)((x, f) => f.fn(x)).toDF
       .withColumn("n_tok", TextOps.tokenCount(col("text")))
@@ -731,11 +732,11 @@ object FuzzQueries {
     import graft.operators.GraphOps
     val ordersCols = tables.find(_.name == "orders").get.cols.map(_.name)
     val liCols = tables.find(_.name == "lineitem").get.cols.map(_.name)
-    val co = c.fo.foldLeft(XDF(s.read.parquet(s"$dir/orders.parquet")
+    val co = c.fo.foldLeft(XDF(ParquetIO.read(s, s"$dir/orders.parquet")
         .select(ordersCols.map(col): _*)))((a, f) => f.fn(a))
       .toDF.select(concat(lit("c"), col("o_custkey")).as("src"),
         concat(lit("o"), col("o_orderkey")).as("target"))
-    val op = c.fl.foldLeft(XDF(s.read.parquet(s"$dir/lineitem.parquet")
+    val op = c.fl.foldLeft(XDF(ParquetIO.read(s, s"$dir/lineitem.parquet")
         .select((liCols :+ "l_partkey").map(col): _*)))((a, f) => f.fn(a))
       .toDF.select(concat(lit("o"), col("l_orderkey")).as("src"),
         concat(lit("p"), col("l_partkey")).as("target")).distinct()
@@ -830,7 +831,7 @@ object FuzzQueries {
   }
 
   private def dedupDocs(s: SparkSession, dir: String, fs: Seq[Filter]): DataFrame =
-    fs.foldLeft(XDF(s.read.parquet(s"$dir/documents.parquet")
+    fs.foldLeft(XDF(ParquetIO.read(s, s"$dir/documents.parquet")
       .select("doc_id", "text", "lang", "source", "n_chars")))((x, f) => f.fn(x)).toDF
 
   private def dedupQuery(c: DedupCase)(s: SparkSession, dir: String): DataFrame = {
@@ -839,7 +840,7 @@ object FuzzQueries {
     // fixed-size eval benchmark (ids < 500 exist at every SF): a
     // corpus-scaling eval set saturates n-gram coverage at 10x and
     // empties the decontaminate cases (empty-vs-empty compare)
-    def evalDocs = s.read.parquet(s"$dir/documents.parquet")
+    def evalDocs = ParquetIO.read(s, s"$dir/documents.parquet")
       .filter(col("doc_id") % c.m === 0 && col("doc_id") < 500)
     c.kind match {
       case 0 =>
@@ -956,7 +957,7 @@ object FuzzQueries {
   }
 
   private def asofQuery(c: AsofCase)(s: SparkSession, dir: String): DataFrame = {
-    val left = c.fe.foldLeft(XDF(s.read.parquet(s"$dir/events.parquet")
+    val left = c.fe.foldLeft(XDF(ParquetIO.read(s, s"$dir/events.parquet")
         .select("event_id", "user_id", "event_type", "value")))((x, f) => f.fn(x))
       .toDF
       .withColumn("dts", date_add(to_date(lit("1992-01-01")),
@@ -964,7 +965,7 @@ object FuzzQueries {
     val orders = tables.find(_.name == "orders").get
     // filtersOn prunes to the fuzz table's declared columns, which would
     // drop o_orderdate — widen the scan by hand
-    val oBase = XDF(s.read.parquet(s"$dir/orders.parquet")
+    val oBase = XDF(ParquetIO.read(s, s"$dir/orders.parquet")
       .select((orders.cols.map(_.name) :+ "o_orderdate").map(col): _*))
     val right = c.fo.foldLeft(oBase)((x, f) => f.fn(x)).toDF
       .select(col("o_custkey").as("user_id"),
@@ -1115,7 +1116,7 @@ object FuzzQueries {
   private def sketchQuery(c: SketchCase)(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.Sketches
     def load(t: Table): DataFrame =
-      c.fs.foldLeft(XDF(s.read.parquet(s"$dir/${t.name}.parquet")
+      c.fs.foldLeft(XDF(ParquetIO.read(s, s"$dir/${t.name}.parquet")
         .select(t.cols.map(cc => col(cc.name)): _*)))((x, f) => f.fn(x)).toDF
     c.kind match {
       case 0 =>
@@ -1156,7 +1157,7 @@ object FuzzQueries {
             max("ord").as("max_ord"))
           .orderBy("shard")
       case _ =>
-        val docs = c.fs.foldLeft(XDF(s.read.parquet(s"$dir/documents.parquet")
+        val docs = c.fs.foldLeft(XDF(ParquetIO.read(s, s"$dir/documents.parquet")
           .select("doc_id", "text", "lang", "source", "n_chars")))(
             (x, f) => f.fn(x)).toDF
         graft.operators.Dedup.duplicatedNgramSpans(
@@ -1286,12 +1287,12 @@ object FuzzQueries {
     import graft.operators.RangeJoin
     def dayOf(cc: org.apache.spark.sql.Column) =
       datediff(to_date(cc), to_date(lit("1992-01-01"))).cast("long")
-    def li = c.ifs.foldLeft(XDF(s.read.parquet(s"$dir/lineitem.parquet")
+    def li = c.ifs.foldLeft(XDF(ParquetIO.read(s, s"$dir/lineitem.parquet")
       .select("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice",
         "l_returnflag", "l_linestatus", "l_shipdate", "l_partkey")))(
         (x, f) => f.fn(x)).toDF
     if (!c.overlap) {
-      val points = c.pfs.foldLeft(XDF(s.read.parquet(s"$dir/orders.parquet")
+      val points = c.pfs.foldLeft(XDF(ParquetIO.read(s, s"$dir/orders.parquet")
         .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority",
           "o_orderstatus", "o_orderdate")))((x, f) => f.fn(x)).toDF
         .filter(col("o_custkey") < 300)
@@ -1738,7 +1739,7 @@ object FuzzQueries {
       ((s: SparkSession, dir: String) => reshapeQuery(c)(s, dir))).toMap ++
     pipelines.map { case (name, t, filters, agg) =>
       name -> { (s: SparkSession, dir: String) =>
-        val base = XDF(s.read.parquet(s"$dir/${t.name}.parquet")
+        val base = XDF(ParquetIO.read(s, s"$dir/${t.name}.parquet")
           .select(t.cols.map(c => col(c.name)): _*))
         val filtered = filters.foldLeft(base)((x, f) => f.fn(x))
         agg match {
@@ -1762,7 +1763,7 @@ object FuzzQueries {
     }.toMap ++ joinPipelines.map { case (name, p, lFilters, rFilters, joinType, agg) =>
       name -> { (s: SparkSession, dir: String) =>
         def side(t: Table, fs: Seq[Filter]): XDF =
-          fs.foldLeft(XDF(s.read.parquet(s"$dir/${t.name}.parquet")
+          fs.foldLeft(XDF(ParquetIO.read(s, s"$dir/${t.name}.parquet")
             .select(t.cols.map(c => col(c.name)): _*)))((x, f) => f.fn(x))
         val l = side(p.lt, lFilters)
         val r = side(p.rt, rFilters)

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.sources.ParquetIO
 
 /**
  * The ONE testdata table loader shared by every correctness gate.
@@ -17,11 +18,14 @@ import org.apache.spark.sql.types._
  * always a timestamp column, whatever the file carries, and `tsMillis`
  * gives epoch millis from either timestamp flavor under the UTC sessions
  * every graft entrypoint builds.
+ *
+ * Tables load through `sources.ParquetIO.read`: the schema comes from the
+ * file's footer on the driver, so a load runs no Spark job.
  */
 private[graft] object Tables {
 
   def load(s: SparkSession, dir: String, name: String): DataFrame = {
-    val df = s.read.parquet(s"$dir/$name.parquet")
+    val df = ParquetIO.read(s, s"$dir/$name.parquet")
     if (name == "events") normalizeEventTs(df) else df
   }
 

@@ -6,6 +6,7 @@ import org.apache.spark.sql.types._
 import graft.functions.TextOps
 import graft.operators.{Dedup, Packing, Similarity}
 import graft.core.XDF
+import graft.sources.ParquetIO
 
 /**
  * Correctness-gate queries for the training-data pipeline operators
@@ -20,9 +21,9 @@ import graft.core.XDF
 object TrainingQueries {
 
   private def docs(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/documents.parquet")
+    ParquetIO.read(s, s"$dir/documents.parquet")
   private def embs(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/embeddings.parquet")
+    ParquetIO.read(s, s"$dir/embeddings.parquet")
       .withColumn("embedding", transform(col("embedding"), _.cast(DoubleType)))
 
   // ---- shared oracle SQL fragments ----
@@ -152,7 +153,7 @@ object TrainingQueries {
         .select("doc_id", "sh").orderBy("doc_id")),
 
     "q_agg_quantile" -> ((s, dir) =>
-      XDF(s.read.parquet(s"$dir/lineitem.parquet"))
+      XDF(ParquetIO.read(s, s"$dir/lineitem.parquet"))
         .aggregate(Seq("l_returnflag"), Seq("l_quantity"), Seq("quantile4"))
         .sort(Seq("l_returnflag")).toDF),
 

@@ -1073,7 +1073,10 @@ object XDF {
       .drop("__mid__", "__pid__", "__pos__", "__off__")
     (out, counts.values.sum)
   }
-  def apply(spark: SparkSession, path: String): XDF = XDF(spark.read.parquet(path))
+  /** A parquet table as an XDF, through `sources.ParquetIO.read`: the
+    * schema comes from one footer on the driver (no Spark job), or from
+    * `spark.read.parquet` where Spark's inference would read more. */
+  def apply(spark: SparkSession, path: String): XDF = XDF(graft.sources.ParquetIO.read(spark, path))
 
   /** List-of-maps -> DF with union-of-keys schema, "" for missing
     * (dataframe.py:5581-5611 from_maps). */

@@ -124,7 +124,7 @@ object TsvIO {
                       startDate: String, endDate: String,
                       format: String = "parquet"): DataFrame = {
     val df = format match {
-      case "parquet" => spark.read.parquet(basePath)
+      case "parquet" => ParquetIO.read(spark, basePath)
       case "tsv" =>
         // same per-cell decode as read(): cells on disk are URL-encoded
         val raw = spark.read.option("sep", "\t").option("header", "true").csv(basePath)

@@ -55,7 +55,7 @@ object StrictOnceSoak extends Serializable {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val docs = graft.sources.ParquetIO.read(spark, s"$sfDir/documents.parquet")
       .selectExpr("doc_id", "lang", "n_chars")
     val expected = docs.count()
 

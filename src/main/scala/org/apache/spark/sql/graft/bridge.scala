@@ -1,12 +1,22 @@
 package org.apache.spark.sql.graft
 
+import scala.util.control.NonFatal
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+import org.apache.parquet.hadoop.{Footer, ParquetFileWriter}
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.deploy.SparkHadoopUtil
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, Partitioning,
   PartitioningCollection}
 import org.apache.spark.sql.classic.{Dataset, ExpressionUtils}
 import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.util.HadoopFSUtils
 
 /** Column <-> Expression bridge. `ExpressionUtils` is private[sql], so
   * this one-file shim lives under the org.apache.spark.sql package — the
@@ -116,4 +126,50 @@ object bridge {
       case lr: LogicalRDD => lr.rdd.unpersist(false)
       case _ =>
     }
+
+  /** The data schema Spark's parquet inference gives `path`, read on the
+    * driver from the one footer that inference reads with schema merging
+    * off (`ParquetUtils.inferSchema`), with no job. The leaves are the
+    * path itself or its children, minus the names Spark's listing hides,
+    * sorted by path string; the footer is `_common_metadata`, else
+    * `_metadata`, else the first data file. It is read without row groups
+    * and converted by Spark's own `ParquetFileFormat.readSchemaFromFooter`,
+    * with the converter Spark's scan builds from the session conf
+    * (`binaryAsString`, `int96AsTimestamp`, `inferTimestampNTZ`,
+    * `nanosAsLong`, ...).
+    *
+    * None wherever inference would do more than read that one footer, or
+    * the footer does not give a schema: schema merging on, a glob or
+    * missing path, a subdirectory (partition discovery, a streaming sink
+    * log), no data file, or a listing, footer read or conversion that
+    * throws. The caller then defers to `spark.read.parquet`, which gives
+    * Spark's own result or error. */
+  def parquetFooterSchema(spark: org.apache.spark.sql.SparkSession,
+                          path: String): Option[StructType] = {
+    val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val root = new Path(path)
+    if (session.sessionState.conf.isParquetSchemaMergingEnabled ||
+        SparkHadoopUtil.get.isGlobPath(root)) None
+    else try {
+      val hadoopConf = session.sessionState.newHadoopConf()
+      val fs = root.getFileSystem(hadoopConf)
+      val status = fs.getFileStatus(root)
+      val children = if (status.isDirectory) fs.listStatus(root).toSeq else Seq(status)
+      val leaves = children
+        .filterNot(f => HadoopFSUtils.shouldFilterOutPathName(f.getPath.getName))
+        .sortBy(_.getPath.toString)
+      def named(name: String): Seq[FileStatus] = leaves.filter(_.getPath.getName == name)
+      val summaries = named(ParquetFileWriter.PARQUET_COMMON_METADATA_FILE) ++
+        named(ParquetFileWriter.PARQUET_METADATA_FILE)
+      val data = leaves.filterNot(summaries.contains)
+      if (children.exists(_.isDirectory) || data.isEmpty) None
+      else {
+        val file = (summaries ++ data).head
+        val footer = new Footer(file.getPath, ParquetFooterReader.readFooter(
+          HadoopInputFile.fromStatus(file, hadoopConf), SKIP_ROW_GROUPS))
+        Some(ParquetFileFormat.readSchemaFromFooter(footer,
+          new ParquetToSparkSchemaConverter(session.sessionState.conf)))
+      }
+    } catch { case NonFatal(_) => None }
+  }
 }

@@ -1,5 +1,7 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -8,6 +10,22 @@ import org.scalatest.BeforeAndAfterAll
 trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkTestBase.session
   def sc = spark.sparkContext
+
+  /** Jobs started while `body` runs (the listener bus is drained on both
+    * sides, so no earlier job leaks in and no late event is missed). */
+  def jobsOf[A](body: => A): (A, Int) = {
+    val jobs = new AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    org.apache.spark.sql.graft.bridge.waitListenerBusEmpty(sc)
+    sc.addSparkListener(l)
+    try {
+      val out = body
+      org.apache.spark.sql.graft.bridge.waitListenerBusEmpty(sc)
+      (out, jobs.get)
+    } finally sc.removeSparkListener(l)
+  }
 }
 
 object SparkTestBase {
