@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every SparkEntry query on SPARK_GRAFT_SF_DIR and
   * prints one JSON line {"metric":...,"queries":{...}} for the driver. */
@@ -80,20 +79,10 @@ object Bench {
         s.toIntOption.getOrElse(sys.error(
           s"SPARK_GRAFT_AQE_INITIAL_PARTITIONS must be an integer, got '$s'"))
       }
-    val sessionBuilder = SparkSession.builder()
+    // the shipped engine config (GraftSession), sized by the env knobs
+    val sessionBuilder = GraftSession.builder("graft-bench", shufflePartitions.toInt)
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // let AQE re-plan the output partitioning of cached plans: the
-      // dedup operators persist small derived frames (LSH bands, gram
-      // hashes) consumed twice, and with this off (the conservative
-      // default) every shuffle UNDER a persist runs at the raw
-      // shuffle-partition count with no coalescing — measured 1.2-1.5x
-      // on the minhashClusters gate family at sf0.1 (OPTIMIZATION_r18)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
     aqeInitial.foreach(n => sessionBuilder.config(
       "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
       n.toString))

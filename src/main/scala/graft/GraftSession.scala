@@ -23,6 +23,7 @@ object GraftSession {
       // persist a small derived frame for a provable double-read (LSH
       // bands, gram hashes, BFS edge lists) otherwise execute every
       // shuffle under the persist at the raw partition count, uncoalesced
+      // (measured 1.2-1.5x on the minhashClusters gate family at sf0.1)
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .withExtensions(new graft.plans.GraftExtensions)

@@ -1,7 +1,6 @@
 package graft
 
 import java.util.concurrent.Executors
-import org.apache.spark.sql.SparkSession
 
 /**
  * Long-session soak for the cache-scope machinery (round-13 verdict item
@@ -53,12 +52,9 @@ object Soak {
     // 12, deliberately NOT the streaming clones' 8: conf leak detection
     // needs the two values distinguishable
     val DriverParts = "12"
-    val spark = SparkSession.builder()
+    val spark = GraftSession.builder("graft-soak", DriverParts.toInt)
       .master("local[8]")
-      .config("spark.sql.shuffle.partitions", DriverParts)
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -10,9 +10,11 @@ import org.apache.spark.sql.graft.bridge.{checkpointLeaf, releaseCheckpoints}
  * convention columns `src` / `target` (reference:
  * python-packages/core/src/omigo_core/graph_traversal.py).
  *
- * Pregel-style shape: a driver loop of joins, each iteration fully
- * distributed; the frontier is cached and the loop exits on an empty
- * frontier (or maxIter). No GraphFrames dependency.
+ * Pregel-style shape: every iterative loop but [[removeDanglingEdges]]
+ * runs on one driver ([[fixpoint]]), a round of joins per superstep,
+ * each round fully distributed and checkpointed; a loop supplies only
+ * its seed, its round, its probe and its exhaustion action. No
+ * GraphFrames dependency.
  */
 object GraphOps {
 
@@ -118,6 +120,69 @@ object GraphOps {
   }
 
   /**
+   * The fixpoint driver: Pregel's superstep loop (Malewicz et al., SIGMOD
+   * 2010) with a checkpoint as the barrier. The loop supplies
+   *  - `seed`, its first state, and `rows`, the seed's row count (-1 when
+   *    not counted). A seed counted empty runs no round;
+   *  - `round`: from the live states (oldest first) and the partition
+   *    count for this round, the round's frame and its delta probe;
+   *  - `stop`, the fixpoint test on the previous and the new probe value
+   *    (the seed's "previous" value is `rows`);
+   *  - `exhausted`, called once on the last state when `maxIter` rounds
+   *    end short of the fixpoint: it warns or throws.
+   *
+   * The driver owns the rest. Each round is ONE [[chk]] job carrying the
+   * probe plus a row count, so a round costs no separate count plan+job.
+   * A checkpoint, not a cache: it truncates lineage, so the plan does not
+   * grow with the round count (a cache alone leaves a recursive DAG that
+   * re-plans ever larger each round). The row count sizes the next round
+   * (`size`: [[loopN]], unless the loop's layout is pinned to another
+   * frame's), and when the loop keeps a `layout` the leaf is declared
+   * hash(`layout`, that size), so the next round's joins on it plan no
+   * exchange. Persists a round tracks in [[graft.core.Caches]] are
+   * released once its leaf is materialized.
+   *
+   * Release. A released local checkpoint cannot recompute, so only frames
+   * nothing still reads are released. Without `keep` the state the new
+   * leaf supersedes is released every round (else maxIter copies pin
+   * block-manager memory). With `keep` the result reads every round's
+   * leaf (a union over them), so all are kept and returned, except an
+   * empty last leaf, which nothing reads. `reads` are the frames every
+   * round reads (loop-invariant edge leaves): never released as state,
+   * and released after the loop unless the result is one of them.
+   * Returns the live states: all kept ones with `keep`, else the last.
+   */
+  private def fixpoint(seed: DataFrame, rows: Long, maxIter: Int, reliable: Boolean,
+                       reads: Seq[DataFrame] = Nil, keep: Boolean = false,
+                       layout: Seq[String] = Nil,
+                       size: (DataFrame, Long) => Int = loopN)(
+                       round: (Seq[DataFrame], Int) => (DataFrame, Column),
+                       stop: (Long, Long) => Boolean = (_, d) => d == 0L,
+                       exhausted: DataFrame => Unit): Seq[DataFrame] = {
+    var states = Vector(seed)
+    var (prev, prevRows, i) = (rows, rows, 0)
+    var done = rows == 0L
+    try {
+      while (i < maxIter && !done) {
+        val n = size(states.last, prevRows)
+        val (leaf, Seq(d, r)) = graft.core.Caches.scoped {
+          val (frame, delta) = round(states, n)
+          chk(frame, reliable, Seq(delta, count(lit(1))), layout, Some(n))
+        }
+        done = stop(prev, d)
+        if (keep) { if (r > 0L || !done) states :+= leaf else releaseCheckpoints(leaf) }
+        else {
+          if (!reads.exists(_ eq states.last)) releaseCheckpoints(states.last)
+          states = Vector(leaf)
+        }
+        prev = d; prevRows = r; i += 1
+      }
+      if (!done) exhausted(states.last)
+      states
+    } finally reads.filterNot(f => states.exists(_ eq f)).foreach(releaseCheckpoints)
+  }
+
+  /**
    * BFS level assignment from root nodes (reference GT:7-78
    * `get_bfs_levels`): returns (node_id, level) with level 0 at roots;
    * unreachable nodes are absent. Cycle-tolerant — a node keeps its
@@ -127,38 +192,22 @@ object GraphOps {
                 reliable: Boolean = false): DataFrame = {
     // loop-invariant edge frame, joined on `src` by every BFS iteration
     // (at corpus scale a re-shuffle was one full edge shuffle per level).
-    // Released after the loop: `levels` references only frontier leaves.
     val (e, _) = invariantOn(edges.select(col("src"), col("target")), "src", reliable)
-    var levels = roots.select(col("node_id")).distinct()
-      .withColumn("level", lit(0))
-    var frontier = levels
-    var i = 0
-    var done = false
-    while (i < maxIter && !done) {
-      // checkpoint: materializes the frontier AND truncates lineage,
-      // so iteration depth never grows the plan (a cache alone leaves a
-      // recursive DAG that re-plans ever larger each round); the
-      // emptiness probe rides the same job (a `chk` probe), not a
-      // separate isEmpty plan+job per round
-      val (next, Seq(n)) = chk(
-        frontier.join(e, frontier("node_id") === e("src"), "inner")
+    // the seed stays lazy: checkpointing it would cost one more job
+    val seed = roots.select(col("node_id")).distinct().withColumn("level", lit(0))
+    // the result is the union of every level: the rounds' leaves are kept
+    fixpoint(seed, -1L, maxIter, reliable, reads = Seq(e), keep = true)(
+      round = { (levels, _) =>
+        val frontier = levels.last
+        (frontier.join(e, frontier("node_id") === e("src"), "inner")
           .select(col("target").as("node_id"), (col("level") + 1).as("level"))
-          .join(levels.select(col("node_id").as("seen")),
+          .join(levels.reduce(_ union _).select(col("node_id").as("seen")),
             col("node_id") === col("seen"), "left_anti")
-          .groupBy("node_id").agg(min("level").as("level")),
-        reliable, Seq(count(lit(1))))
-      if (n == 0L) done = true
-      else {
-        levels = levels.union(next)
-        frontier = next
-      }
-      i += 1
-    }
-    if (!done)
-      graft.core.Log.warn(s"bfsLevels stopped at maxIter=$maxIter with a " +
-        "non-empty frontier; nodes deeper than that are missing levels")
-    releaseCheckpoints(e)
-    levels
+          .groupBy("node_id").agg(min("level").as("level")), count(lit(1)))
+      },
+      exhausted = _ => graft.core.Log.warn(s"bfsLevels stopped at maxIter=$maxIter " +
+        "with a non-empty frontier; nodes deeper than that are missing levels")
+    ).reduce(_ union _)
   }
 
   /**
@@ -363,36 +412,34 @@ object GraphOps {
     * the min over neighbor labels (1 hop), then shortcuts every label to
     * its label's label, so label information travels 2^i hops after i
     * rounds and convergence is O(log diameter), not O(diameter). Each
-    * round is two joins + one aggregation; label frontiers are
-    * checkpointed so plan depth stays constant. */
+    * round is two joins + one aggregation. */
   private def labelPropagation(sym0: DataFrame, n: Int, maxIter: Int,
                                reliable: Boolean): DataFrame = {
-    // ALL loop frames share ONE declared hash layout (see `chk`):
-    // the edge view by its join side `b`, labels/frontier by node_id, so
-    // the frontier and labels joins plan ZERO exchanges and the edge view
-    // is never shuffled again after setup.
+    // ALL loop frames share ONE declared hash layout on n partitions (so
+    // the loop's size is pinned to n, whatever the label count): the edge
+    // view by its join side `b`, labels/frontier by node_id, so the
+    // frontier and labels joins plan ZERO exchanges and the edge view is
+    // never shuffled again after setup.
     val sym = checkpointLeaf(sym0.repartition(n, col("b")), reliable, Seq("b"), Some(n))
     releaseCheckpoints(sym0)
     // node set from the `b` side (sym is symmetric, so {a} == {b}): the
-    // leaf is already hash(b)-partitioned, making the distinct free
-    var labels = checkpointLeaf(
+    // leaf is already hash(b)-partitioned, making the distinct free.
+    // __chg__ marks the labels lowered last round; the seed marks all.
+    val seed = checkpointLeaf(
       sym.select(col("b").as("node_id")).distinct()
-        .withColumn("component", col("node_id")),
+        .withColumn("component", col("node_id")).withColumn("__chg__", lit(true)),
       reliable, Seq("node_id"), Some(n))
-    var i = 0
-    var changed = 1L
     // delta propagation: only labels lowered LAST round can lower a
     // neighbor this round — a stable neighbor's label was already folded
     // into v's min when it last changed (round 1 seeds with everyone).
     // The changed set collapses geometrically; it is a projection of the
     // hash(node_id)-partitioned label leaf, so its join against the
     // hash(b)-partitioned edge view is exchange-free at any size.
-    var changedSet = labels
-    // one round: hop (min over the neighbor labels that changed last round),
-    // then double. Returns its cache and its lazy result (__chg__ = lowered).
-    def round(cur: DataFrame, frontier: DataFrame): (DataFrame, DataFrame) = {
-      val nbrMin = sym.join(frontier.select(col("node_id").as("b"), col("component")),
-          Seq("b"), "inner")
+    // One round: hop (min over the neighbor labels that changed last
+    // round), then double; __chg__ = lowered.
+    def propagate(cur: DataFrame): DataFrame = {
+      val frontier = cur.filter(col("__chg__")).select(col("node_id").as("b"), col("component"))
+      val nbrMin = sym.join(frontier, Seq("b"), "inner")
         // land the aggregation shuffle directly on the loop layout: a
         // planner-chosen exchange would use the session default count and
         // force a SECOND exchange to co-partition with the label leaf
@@ -405,58 +452,41 @@ object GraphOps {
       // per round (measured ~1/3 of CC wall time at toy scale, pure
       // scheduler overhead). Plan depth stays bounded because `cur`
       // is a checkpointed leaf.
-      val hopped = cur.join(nbrMin, Seq("node_id"), "left")
+      val hopped = graft.core.Caches.track(cur.drop("__chg__").join(nbrMin, Seq("node_id"), "left")
         .select(col("node_id"), col("component").as("__old__"),
           least(col("component"), coalesce(col("__nbr_min__"), col("component")))
             .as("component"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
       // pointer doubling: component <- component's component. Labels are
       // node ids, so the lookup is a self-join on the hopped labels.
-      (hopped, hopped.join(
+      hopped.join(
           hopped.select(col("node_id").as("component"),
             col("component").as("__cc__")),
           Seq("component"), "left")
         .select(col("node_id"),
           coalesce(col("__cc__"), col("component")).as("component"),
-          (coalesce(col("__cc__"), col("component")) < col("__old__")).as("__chg__")))
+          (coalesce(col("__cc__"), col("component")) < col("__old__")).as("__chg__"))
     }
-    while (i < maxIter && changed > 0) {
-      val (hopped, hop2) = round(labels, changedSet)
-      // The change-count probe rides the checkpoint job (a `chk` probe)
-      // instead of a separate count plan+job per round; it still runs
-      // every round, including the last allowed one: a loop that exits
-      // at maxIter while labels are still moving has NON-MINIMAL labels
-      // — components silently split (same contract as ancestorClosure).
-      // The layout repartition replaces the labels-side and frontier-side
-      // exchanges of the NEXT round, a net win of one exchange per round.
-      val (next, Seq(changed2)) = chk(hop2.repartition(n, col("node_id")),
-        reliable, Seq(sum(when(col("__chg__"), 1L).otherwise(0L))), Seq("node_id"), Some(n))
-      // `next` is materialized (checkpoint is eager) with truncated
-      // lineage: the round's cache and the superseded label frame would
-      // otherwise pin block-manager memory for the life of the job
-      hopped.unpersist(false)
-      releaseCheckpoints(labels)
-      changed = changed2
-      changedSet = next.filter(col("__chg__")).select(col("node_id"), col("component"))
-      labels = next.drop("__chg__")
-      i += 1
-    }
-    // the last allowed round may itself have COMPLETED convergence, so
-    // changed > 0 at exhaustion is not yet proof of failure: would one
-    // more round lower any label? Only then throw. Cost: one extra job,
-    // only on exhaustion.
-    val unconverged = changed > 0 && {
-      val (hopped, hop2) = round(labels, changedSet)
-      try hop2.filter(col("__chg__")).limit(1).count() > 0
-      finally hopped.unpersist(false)
-    }
-    releaseCheckpoints(sym)
-    if (unconverged)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxIter rounds " +
-          "(graph diameter too deep for the doubling budget); raise " +
-          "maxIter — non-minimal labels would silently split components")
-    labels
+    // The change-count probe runs every round, including the last allowed
+    // one: a loop that exits at maxIter while labels are still moving has
+    // NON-MINIMAL labels — components silently split. The layout
+    // repartition replaces the labels-side and frontier-side exchanges of
+    // the NEXT round, a net win of one exchange per round.
+    fixpoint(seed, -1L, maxIter, reliable, reads = Seq(sym), layout = Seq("node_id"),
+        size = (_, _) => n)(
+      round = (labels, _) => (propagate(labels.last).repartition(n, col("node_id")),
+        sum(when(col("__chg__"), 1L).otherwise(0L))),
+      // the last allowed round may itself have COMPLETED convergence, so
+      // labels still moving at exhaustion are not yet proof of failure:
+      // would one more round lower any label? Only then throw. Cost: one
+      // extra job, only on exhaustion.
+      exhausted = labels => if (graft.core.Caches.scoped(
+          propagate(labels).filter(col("__chg__")).limit(1).count() > 0))
+        throw new IllegalStateException(
+          s"connectedComponents did not converge in $maxIter rounds " +
+            "(graph diameter too deep for the doubling budget); raise " +
+            "maxIter — non-minimal labels would silently split components")
+    ).last.drop("__chg__")
   }
 
   /**
@@ -467,8 +497,7 @@ object GraphOps {
    */
   def forwardPaths(edges: DataFrame, roots: DataFrame, maxIter: Int = 20,
                    reliable: Boolean = false): DataFrame = {
-    // loop-invariant edge frame, joined on `src` every round. Released
-    // after the loop — the returned `paths` is its own checkpoint leaf.
+    // loop-invariant edge frame, joined on `src` every round
     val (e, _) = invariantOn(edges.select(col("src"), col("target")), "src", reliable)
     val base = checkpointLeaf(roots.select(col("node_id")).distinct()
       .withColumn("n_paths", lit(1L)), reliable)
@@ -477,33 +506,20 @@ object GraphOps {
     // would freeze a node's count at its FIRST discovery depth and drop
     // contributions arriving via longer routes (root->a->b vs root->b).
     // After i rounds counts cover all paths of length <= i; fixpoint on
-    // a DAG within maxIter.
-    var paths = base
-    var i = 0
-    var done = false
-    var prevTotal = -1L
-    while (i < maxIter && !done) {
-      val contrib = paths.join(e, paths("node_id") === e("src"), "inner")
-        .groupBy(col("target").as("node_id"))
-        .agg(sum("n_paths").as("n_paths"))
-      // fixpoint probe (total path count) rides the checkpoint job as an
-      // observed metric; `chk` reads a NULL sum (empty roots input) as 0
-      val (next, Seq(total)) = chk(
-        base.select(col("node_id"), col("n_paths"))
+    // a DAG within maxIter, when the total path count stops moving.
+    fixpoint(base, -1L, maxIter, reliable, reads = Seq(e, base))(
+      round = { (paths, _) =>
+        val contrib = paths.last.join(e, paths.last("node_id") === e("src"), "inner")
+          .groupBy(col("target").as("node_id"))
+          .agg(sum("n_paths").as("n_paths"))
+        (base.select(col("node_id"), col("n_paths"))
           .unionByName(contrib.select(col("node_id"), col("n_paths")))
-          .groupBy("node_id").agg(sum("n_paths").as("n_paths")),
-        reliable, Seq(sum("n_paths")))
-      if (total == prevTotal) done = true
-      prevTotal = total
-      if (!(paths eq base)) releaseCheckpoints(paths) // superseded round's blocks
-      paths = next
-      i += 1
-    }
-    if (!done)
-      graft.core.Log.warn(s"forwardPaths stopped at maxIter=$maxIter before " +
-        "fixpoint; counts for nodes deeper than that are incomplete")
-    releaseCheckpoints(e)
-    paths
+          .groupBy("node_id").agg(sum("n_paths").as("n_paths")), sum("n_paths"))
+      },
+      stop = _ == _,
+      exhausted = _ => graft.core.Log.warn(s"forwardPaths stopped at maxIter=$maxIter " +
+        "before fixpoint; counts for nodes deeper than that are incomplete")
+    ).last
   }
 
   /**
@@ -533,62 +549,53 @@ object GraphOps {
                       reliable: Boolean = false): DataFrame = {
     val e = edges.select(col("src"), col("target"))
     // every pair frame lives on an explicit hash(node_id, N) layout,
-    // declared on its checkpoint leaf (see `chk`), so the doubling
-    // join's frontier side plans ZERO exchanges round over round; N starts
-    // at the input's planned sizing (seedN) and adapts to the observed
-    // closure size (loopN). The seed's dedup aggregate rides the layout
-    // exchange (subset clustering), and the emptiness probe rides the
-    // seeding checkpoint job.
+    // declared on its checkpoint leaf, so the doubling join's frontier
+    // side plans ZERO exchanges round over round; N starts at the input's
+    // planned sizing (seedN) and adapts to the observed closure size
+    // (loopN). The seed's dedup aggregate rides the layout exchange
+    // (subset clustering), and the emptiness probe rides the seeding
+    // checkpoint job.
     val nSeed = seedN(e)
-    var (pairs, Seq(rowsTotal)) = chk(
+    val (seed, Seq(rows)) = chk(
       e.select(col("target").as("node_id"), col("src").as("anc"))
         .repartition(nSeed, col("node_id"))
         .dropDuplicates("node_id", "anc")
         .withColumn("__dist__", lit(1L)),
       reliable, Seq(count(lit(1))), Seq("node_id"), Some(nSeed))
-    var i = 0
     var pow = 1L // frontier distance composed this round
-    var converged = rowsTotal == 0L
-    while (i < maxIter && !converged) {
-      // frontier (m reached-by a at exactly 2^i) ∧ (n reached-by m)
-      //   =>  (n reached-by a at 2^i + dist(m, n))
-      // q side filters the hash(node_id)-partitioned leaf — its join key
-      // IS the layout, no exchange; only the p side moves (by anc).
-      val doubled = pairs.filter(col("__dist__") === pow).as("q")
-        .join(pairs.as("p"), col("q.node_id") === col("p.anc"))
-        .select(col("p.node_id").as("node_id"), col("q.anc").as("anc"),
-          (col("p.__dist__") + lit(pow)).as("__dist__"))
-      // fused round: ONE exchange lands old pairs ∪ raw candidates on the
-      // loop layout, ONE aggregate takes min(dist) and whether the pair
-      // existed before (max over the __old__ tag), and the fixpoint probe
-      // rides the same checkpoint job. min(dist) == the old dist for existing
-      // pairs — stored distances are exact shortest distances by the
-      // doubling induction, and any composed candidate is the length of
-      // SOME path, never shorter — so the frame is row-identical to the
-      // previous union ∪ anti-join formulation at every round.
-      val nNext = loopN(pairs, rowsTotal)
-      val (grown, Seq(fresh, rows)) = chk(
-        pairs.withColumn("__old__", lit(true))
+    fixpoint(seed, rows, maxIter, reliable, layout = Seq("node_id"))(
+      round = { (states, n) =>
+        val pairs = states.last.select(col("node_id"), col("anc"), col("__dist__"))
+        // frontier (m reached-by a at exactly 2^i) ∧ (n reached-by m)
+        //   =>  (n reached-by a at 2^i + dist(m, n))
+        // q side filters the hash(node_id)-partitioned leaf — its join key
+        // IS the layout, no exchange; only the p side moves (by anc).
+        val doubled = pairs.filter(col("__dist__") === pow).as("q")
+          .join(pairs.as("p"), col("q.node_id") === col("p.anc"))
+          .select(col("p.node_id").as("node_id"), col("q.anc").as("anc"),
+            (col("p.__dist__") + lit(pow)).as("__dist__"))
+        pow *= 2L
+        // fused round: ONE exchange lands old pairs ∪ raw candidates on the
+        // loop layout, ONE aggregate takes min(dist) and whether the pair
+        // existed before (max over the __old__ tag), and the probe counts
+        // the new pairs. min(dist) == the old dist for existing pairs —
+        // stored distances are exact shortest distances by the doubling
+        // induction, and any composed candidate is the length of SOME
+        // path, never shorter — so the frame is row-identical to the
+        // previous union ∪ anti-join formulation at every round.
+        (pairs.withColumn("__old__", lit(true))
           .unionByName(doubled.withColumn("__old__", lit(false)))
-          .repartition(nNext, col("node_id"))
+          .repartition(n, col("node_id"))
           .groupBy(col("node_id"), col("anc"))
           .agg(min(col("__dist__")).as("__dist__"),
             max(col("__old__")).as("__seen__")),
-        reliable, Seq(sum(when(!col("__seen__"), 1L).otherwise(0L)), count(lit(1))),
-        Seq("node_id"), Some(nNext))
-      releaseCheckpoints(pairs)
-      pairs = grown.select(col("node_id"), col("anc"), col("__dist__"))
-      converged = fresh == 0L
-      rowsTotal = rows
-      pow *= 2L
-      i += 1
-    }
-    if (!converged)
-      throw new IllegalStateException(
+          sum(when(!col("__seen__"), 1L).otherwise(0L)))
+      },
+      exhausted = _ => throw new IllegalStateException(
         s"ancestorClosure did not converge in $maxIter doubling rounds " +
           s"(graph diameter > 2^$maxIter or a growing cycle closure); " +
           "raise maxIter — a truncated closure would be silently wrong")
-    pairs.select(col("node_id"), col("anc"))
+    ).last.select(col("node_id"), col("anc"))
   }
 
   /**
@@ -633,58 +640,44 @@ object GraphOps {
     // forward produce nothing — the cycle-guard recursion dead-ends).
     // Each hop is ONE checkpointed frame carrying both the parent
     // extension and the has-any-parents flag; `ended` and the next
-    // frontier are lazy filters over that materialized leaf, and the
-    // open-frontier probe rides its checkpoint. Step frames accumulate
-    // until the output aggregates are materialized, because the
-    // completed-path union references them (a
-    // released localCheckpoint cannot recompute — the release-early
-    // version crashed with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND).
+    // frontier are lazy filters over that materialized leaf. The hop
+    // leaves are kept until the output aggregates are materialized,
+    // because the completed-path union reads them.
     // loop-invariant, joined on `head` every hop: checkpointed ONCE on
     // fwd's layout, so the per-hop parent-flag join plans zero exchanges
     val hasParents = checkpointLeaf(
       e.select(col("target").as("head")).repartition(nF, col("head"))
         .dropDuplicates("head").withColumn("__hp__", lit(true)),
       reliable, Seq("head"), Some(nF))
-    var completed = List.empty[DataFrame]
-    var frames = List.empty[DataFrame]
-    frames ::= hasParents
-    // both loop probes (initial frontier size, per-hop open count) ride
-    // their frame's checkpoint job as observed metrics — no separate
-    // count plan+job per hop. The seed frontier aliases `target` three
-    // ways from a frame laid out hash(target, nF); rows never move, so
-    // the leaf provably carries hash(head, nF) — declared so hop 1's
-    // three-way join on head is exchange-free on every side.
-    var (active, Seq(nActive)) = chk(
+    // The seed frontier aliases `target` three ways from a frame laid out
+    // hash(target, nF); rows never move, so the leaf provably carries
+    // hash(head, nF) — declared so hop 1's three-way join on head is
+    // exchange-free on every side. Its count is the emptiness probe.
+    val (seed, Seq(nActive)) = chk(
       edges.select(col("target")).repartition(nF, col("target")).distinct()
         .select(col("target").as("dest"), col("target").as("head"),
           col("target").cast(StringType).as("path")),
       reliable, Seq(count(lit(1))), Seq("head"), Some(nF))
-    frames ::= active
-    var i = 0
-    while (i < maxIter && nActive > 0L) {
-      val (step, Seq(nOpen)) = chk(active.join(
-          fwd.select(col("target").as("head"), col("src").as("__par__")),
-          Seq("head"), "left")
-        .join(hasParents, Seq("head"), "left")
-        .select(col("dest"), col("path"), col("__par__"), col("__hp__")),
-        reliable, Seq(sum(when(col("__par__").isNotNull, 1L).otherwise(0L))))
-      frames ::= step
-      completed ::= step.filter(col("__par__").isNull && col("__hp__").isNull)
-        .select(col("dest"), col("path"))
-      active = step.filter(col("__par__").isNotNull)
-        .select(col("dest"), col("__par__").as("head"),
-          concat(col("path"), lit(sep), col("__par__")).as("path"))
-      nActive = nOpen
-      i += 1
-    }
-    // fwd is cycle-free by construction (every cycle edge is a back edge),
-    // so a non-empty frontier here means a forward path longer than
-    // maxIter — enumeration would silently drop those paths; refuse.
-    if (nActive > 0L)
-      throw new IllegalStateException(
+    val hops = fixpoint(seed, nActive, maxIter, reliable, reads = Seq(fwd, hasParents),
+        keep = true)(
+      round = { (states, _) =>
+        val active = if (states.size == 1) seed else states.last.filter(col("__par__").isNotNull)
+          .select(col("dest"), col("__par__").as("head"),
+            concat(col("path"), lit(sep), col("__par__")).as("path"))
+        (active.join(fwd.select(col("target").as("head"), col("src").as("__par__")),
+            Seq("head"), "left")
+          .join(hasParents, Seq("head"), "left")
+          .select(col("dest"), col("path"), col("__par__"), col("__hp__")),
+          sum(when(col("__par__").isNotNull, 1L).otherwise(0L)))
+      },
+      // fwd is cycle-free by construction (every cycle edge is a back
+      // edge), so open paths after maxIter hops are forward paths longer
+      // than that — enumeration would silently drop them; refuse.
+      exhausted = _ => throw new IllegalStateException(
         s"forwardEdgesOnly path enumeration exceeded maxIter=$maxIter hops " +
-          "with paths still open; raise maxIter or use the closure columns")
-    val complete = completed.reduceOption(_ unionByName _).getOrElse {
+          "with paths still open; raise maxIter or use the closure columns"))
+    val complete = hops.tail.map(_.filter(col("__par__").isNull && col("__hp__").isNull)
+        .select(col("dest"), col("path"))).reduceOption(_ unionByName _).getOrElse {
       val s = edges.sparkSession
       s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         StructType(Seq(StructField("dest", StringType), StructField("path", StringType))))
@@ -702,7 +695,7 @@ object GraphOps {
           .agg(concat_ws("|", sort_array(collect_set(col("path")))).as("__v__"))
           .select(col("target"), lit("an").as("__k__"), col("__v__"))),
       reliable)
-    (frames ++ Seq(fwdClosure, allClosure, fwd)).foreach(releaseCheckpoints)
+    (hops ++ Seq(fwdClosure, allClosure)).foreach(releaseCheckpoints)
     def part(k: String, name: String): DataFrame =
       aggs.filter(col("__k__") === k).select(col("target"), col("__v__").as(name))
 
@@ -751,58 +744,50 @@ object GraphOps {
         .drop("__dom__")
     }
     // pair frames live on an explicit hash(node_id, N) layout declared
-    // on their checkpoint leaves (see `chk`), so the composition
-    // join's p side (keyed node_id) never re-shuffles; prune's
-    // (node_id, anc, __f__) aggregate and (node_id, anc) window both ride
-    // the layout exchange (subset clustering). The initial emptiness
-    // probe rides the seeding checkpoint job.
+    // on their checkpoint leaves, so the composition join's p side (keyed
+    // node_id) never re-shuffles; prune's (node_id, anc, __f__) aggregate
+    // and (node_id, anc) window both ride the layout exchange (subset
+    // clustering). The initial emptiness probe rides the seeding
+    // checkpoint job.
     val nSeed = seedN(e)
-    var (pairs, Seq(rowsTotal)) = chk(
+    val (seed, Seq(rows)) = chk(
       prune(e.select(col("target").as("node_id"),
         col("src").as("anc"), col("__ts__").as("__f__"),
         col("__ts__").as("__l__")).repartition(nSeed, col("node_id"))),
       reliable, Seq(count(lit(1))), Seq("node_id"), Some(nSeed))
-    var i = 0
-    var converged = rowsTotal == 0L
-    while (i < maxIter && !converged) {
-      // compose: p = anc -> v (f1, l1), q = v -> w (f2 >= l1, l2)
-      //          =>  anc -> w (f1, l2)
-      val composed = pairs.as("p").join(pairs.as("q"),
-          col("p.node_id") === col("q.anc") && col("q.__f__") >= col("p.__l__"))
-        .select(col("q.node_id").as("node_id"), col("p.anc").as("anc"),
-          col("p.__f__").as("__f__"), col("q.__l__").as("__l__"))
-      // content-based fixpoint: both sides are Pareto sets, so any change
-      // surfaces as a surviving row that pairs lacks (a pure removal can
-      // only be caused by a new dominating row). The freshness test rides
-      // prune's own aggregate: __oldl__ = the OLD row's __l__ for this
-      // (node_id, anc, __f__) group (pairs is unique on that key,
-      // so min-over-old reads exactly that row, null when absent), and a
-      // surviving row is fresh iff __oldl__ <=> __l__ fails — identical to
-      // "not found by the old four-key left join" because min(__l__) over
-      // old ∪ candidates equals the old value exactly when the old row
-      // attains the minimum, i.e. when the row survives unchanged.
-      val nNext = loopN(pairs, rowsTotal)
-      val unioned = pairs.withColumn("__old__", lit(true))
-        .unionByName(composed.withColumn("__old__", lit(false)))
-        .repartition(nNext, col("node_id"))
-      val prunedTagged = prune(unioned, min(when(col("__old__"), col("__l__"))).as("__oldl__"))
-        .select(col("node_id"), col("anc"), col("__f__"), col("__l__"),
-          (!(col("__oldl__") <=> col("__l__"))).as("__fresh__"))
-      val (next, Seq(fresh, rows)) = chk(prunedTagged, reliable,
-        Seq(sum(when(col("__fresh__"), 1L).otherwise(0L)), count(lit(1))),
-        Seq("node_id"), Some(nNext))
-      releaseCheckpoints(pairs)
-      pairs = next.select(col("node_id"), col("anc"), col("__f__"), col("__l__"))
-      converged = fresh == 0L
-      rowsTotal = rows
-      i += 1
-    }
-    if (!converged)
-      throw new IllegalStateException(
+    val closure = fixpoint(seed, rows, maxIter, reliable, layout = Seq("node_id"))(
+      round = { (states, n) =>
+        val pairs = states.last.select(col("node_id"), col("anc"), col("__f__"), col("__l__"))
+        // compose: p = anc -> v (f1, l1), q = v -> w (f2 >= l1, l2)
+        //          =>  anc -> w (f1, l2)
+        val composed = pairs.as("p").join(pairs.as("q"),
+            col("p.node_id") === col("q.anc") && col("q.__f__") >= col("p.__l__"))
+          .select(col("q.node_id").as("node_id"), col("p.anc").as("anc"),
+            col("p.__f__").as("__f__"), col("q.__l__").as("__l__"))
+        // content-based fixpoint: both sides are Pareto sets, so any change
+        // surfaces as a surviving row that pairs lacks (a pure removal can
+        // only be caused by a new dominating row). The freshness test rides
+        // prune's own aggregate: __oldl__ = the OLD row's __l__ for this
+        // (node_id, anc, __f__) group (pairs is unique on that key,
+        // so min-over-old reads exactly that row, null when absent), and a
+        // surviving row is fresh iff __oldl__ <=> __l__ fails — identical to
+        // "not found by the old four-key left join" because min(__l__) over
+        // old ∪ candidates equals the old value exactly when the old row
+        // attains the minimum, i.e. when the row survives unchanged.
+        val unioned = pairs.withColumn("__old__", lit(true))
+          .unionByName(composed.withColumn("__old__", lit(false)))
+          .repartition(n, col("node_id"))
+        (prune(unioned, min(when(col("__old__"), col("__l__"))).as("__oldl__"))
+          .select(col("node_id"), col("anc"), col("__f__"), col("__l__"),
+            (!(col("__oldl__") <=> col("__l__"))).as("__fresh__")),
+          sum(when(col("__fresh__"), 1L).otherwise(0L)))
+      },
+      exhausted = _ => throw new IllegalStateException(
         s"timeBasedForwardEdgesOnly did not converge in $maxIter doubling " +
           "rounds; raise maxIter — a truncated temporal closure would be " +
           "silently wrong")
-    val timePaths = pairs.groupBy(col("node_id").as("target"))
+    ).last
+    val timePaths = closure.groupBy(col("node_id").as("target"))
       .agg(concat_ws(sep, sort_array(collect_set(col("anc")))).as(s"$prefix:src_paths"))
     val allPaths = ancestorClosure(e, maxIter, reliable)
       .groupBy(col("node_id").as("target"))

@@ -1,7 +1,6 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: write `.explain("formatted")` for named gate queries to
   * files, for the plans/r{N} before/after artifacts an optimization
@@ -19,14 +18,9 @@ object DumpPlans {
     val names = args.drop(2).toSeq
     Files.createDirectories(outDir)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
+    val spark = graft.GraftSession.builder("graft-dump-plans", 32)
       .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { name =>

@@ -2,7 +2,6 @@ package graft.tools
 
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.sql.SparkSession
 
 /** Law probe for `explodeMapsFetched(strictOnce = true)` (round-17,
   * verdict item 3). The shared test session runs `local[4]` where
@@ -35,12 +34,9 @@ object StrictOnceProbe extends Serializable {
 
   def main(args: Array[String]): Unit = {
     val outPath = args.headOption.getOrElse("target/strict_once_probe.json")
-    val spark = SparkSession.builder()
+    val spark = graft.GraftSession.builder("graft-strict-once-probe", 2)
       .master("local[2, 2]") // 2 threads, maxFailures = 2: one retry
-      .appName("graft-strict-once-probe")
-      .config("spark.sql.shuffle.partitions", "2")
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._

@@ -2,7 +2,6 @@ package graft.tools
 
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.sql.SparkSession
 
 /** Long-duration soak for `explodeMapsFetched(strictOnce = true)` — the
   * round-17 runtime path with no long-duration artifact (VERDICT r17,
@@ -45,13 +44,9 @@ object StrictOnceSoak extends Serializable {
     val sfDir = if (args.length > 0) args(0) else "/tmp/sf1"
     val outJson = if (args.length > 1) args(1) else "target/soak_strict.json"
     val iters = if (args.length > 2) args(2).toInt else 60
-    val spark = SparkSession.builder()
+    val spark = graft.GraftSession.builder("graft-strict-once-soak", 16)
       .master("local[8]")
-      .appName("graft-strict-once-soak")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 

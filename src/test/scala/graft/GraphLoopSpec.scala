@@ -17,6 +17,61 @@ class GraphLoopSpec extends SparkTestBase {
     try body finally spark.conf.unset("graft.loop.rowsPerPartition")
   }
 
+  /** One loop partition per row, layout-bound: the declared
+    * multi-partition layouts run and decide where rows meet, invariantOn's
+    * re-laid edge leaves (sized from a leaf AQE would otherwise coalesce
+    * to one partition) and every loop layout above one partition. */
+  private def multiPartition[A](body: => A): A = withLoopRows1(layoutBound(body))
+
+  // "｡" (U+FF61) sorts BELOW "😀" (U+1F600) in Spark's UTF-8 byte order
+  // but ABOVE it in UTF-16 `compareTo`
+  private val ids = Seq("｡", "😀", "a", "B", "é", "z9", "ß")
+  private val utf8: Ordering[String] = (x, y) =>
+    java.util.Arrays.compareUnsigned(x.getBytes("UTF-8"), y.getBytes("UTF-8"))
+
+  /** Seeded random edge lists over `nodes` unicode ids: DAGs (edges only
+    * from a lower to a higher index) or graphs with cycles and self-loops;
+    * the empty graph first. */
+  private def graphs(seed: Int, nodes: Int, dag: Boolean): Seq[Seq[(String, String)]] = {
+    val rnd = new scala.util.Random(seed)
+    def id(i: Int) = s"${ids(i % ids.size)}_$i"
+    Seq.empty[(String, String)] +: (1 to 4).map { _ =>
+      (1 to nodes + rnd.nextInt(nodes)).map { _ =>
+        val a = rnd.nextInt(nodes - 1)
+        if (dag) (id(a), id(a + 1 + rnd.nextInt(nodes - 1 - a)))
+        else if (rnd.nextInt(8) == 0) (id(a), id(a))
+        else (id(a), id(rnd.nextInt(nodes)))
+      }
+    }
+  }
+
+  /** The frame on 3 partitions, so loop inputs span partitions (a local
+    * Seq is one partition) and invariantOn re-lays its edge leaf. */
+  private def spread(df: DataFrame): DataFrame = df.repartition(3)
+
+  /** The frame's rows; its checkpoint leaves are released after, so a
+    * law's results do not wait for a GC to be freed. */
+  private def collectReleased(df: DataFrame): Array[Row] =
+    try df.collect() finally org.apache.spark.sql.graft.bridge.releaseCheckpoints(df)
+
+  /** Nodes reached from `u` by walks of one edge or more. */
+  private def reach(es: Seq[(String, String)], u: String): Set[String] = {
+    val adj = es.groupBy(_._1).map { case (k, v) => k -> v.map(_._2) }
+    var (seen, frontier) = (Set.empty[String], adj.getOrElse(u, Nil).toSet)
+    while (frontier.nonEmpty) {
+      seen ++= frontier
+      frontier = frontier.flatMap(adj.getOrElse(_, Nil)) -- seen
+    }
+    seen
+  }
+
+  /** Per target, its ancestors along `es`, sorted in Spark's order and
+    * joined as the closure columns are. */
+  private def ancestorsOf(es: Seq[(String, String)], nodes: Seq[String]): Map[String, String] = {
+    val rev = es.map(_.swap)
+    nodes.map(n => n -> reach(rev, n).toSeq.sorted(utf8).mkString(",")).toMap
+  }
+
   private def components(edges: DataFrame): Set[Row] =
     GraphOps.connectedComponents(edges).collect().toSet
 
@@ -137,5 +192,145 @@ class GraphLoopSpec extends SparkTestBase {
     val (_, loadJobs) = jobsOf(Tables.load(spark, dir, "orders"))
     val (_, jobs) = jobsOf(SparkEntry.queries("q_graph_cc")(spark, dir))
     assert(jobs - loadJobs >= 9, s"q_graph_cc builder ran $jobs jobs, $loadJobs of them loading")
+  }
+
+  test("law: bfsLevels equals a queue BFS (minimal level) on multi-partition layouts") {
+    graphs(31, 14, dag = false).zipWithIndex.foreach { case (es, g) =>
+      val nodes = es.flatMap(e => Seq(e._1, e._2)).distinct
+      val roots = (nodes.take(g % 3 + 1) :+ "orphan").distinct
+      val adj = es.groupBy(_._1).map { case (k, v) => k -> v.map(_._2) }
+      val level = scala.collection.mutable.Map(roots.map(_ -> 0): _*)
+      val queue = scala.collection.mutable.Queue(roots: _*)
+      while (queue.nonEmpty) {
+        val u = queue.dequeue()
+        adj.getOrElse(u, Nil).foreach { v =>
+          if (!level.contains(v)) { level(v) = level(u) + 1; queue.enqueue(v) }
+        }
+      }
+      val got = multiPartition(collectReleased(GraphOps.bfsLevels(
+          spread(es.toDF("src", "target")), roots.toDF("node_id"), maxIter = 64))
+        .map(r => r.getString(0) -> r.getInt(1)).toMap)
+      assert(got == level.toMap, s"edges $es")
+    }
+  }
+
+  test("law: forwardPaths equals a path-count DP on DAGs on multi-partition layouts") {
+    graphs(37, 14, dag = true).zipWithIndex.foreach { case (es, g) =>
+      // ids end in their index, the DAG's topological order
+      val nodes = es.flatMap(e => Seq(e._1, e._2)).distinct
+        .sortBy(_.split("_").last.toInt)
+      val roots = nodes.filter(_ => g % 2 == 0).take(3) ++ nodes.drop(4).take(1)
+      val paths = scala.collection.mutable.Map.empty[String, Long]
+      nodes.foreach { v =>
+        paths(v) = (if (roots.contains(v)) 1L else 0L) +
+          es.filter(_._2 == v).map(e => paths(e._1)).sum
+      }
+      val got = multiPartition(collectReleased(GraphOps.forwardPaths(
+          spread(es.toDF("src", "target")), roots.toDF("node_id"), maxIter = 64))
+        .map(r => r.getString(0) -> r.getLong(1)).toMap)
+      assert(got == paths.filter(_._2 > 0).toMap, s"edges $es roots $roots")
+    }
+  }
+
+  test("law: timeBasedForwardEdgesOnly equals naive temporal and plain reachability") {
+    val rnd = new scala.util.Random(41)
+    graphs(43, 10, dag = false).foreach { es0 =>
+      val es = es0.map { case (a, b) => (a, b, rnd.nextInt(6).toLong) }
+      // self-loops are dropped; a walk's edge timestamps never decrease,
+      // and arriving earliest dominates (it admits every later edge)
+      val walk = es.filter(e => e._1 != e._2)
+      def temporal(u: String): Set[String] = {
+        val best = scala.collection.mutable.Map.empty[String, Long]
+        var changed = true
+        while (changed) {
+          changed = false
+          walk.foreach { case (a, b, t) =>
+            if ((a == u || best.get(a).exists(_ <= t)) && best.get(b).forall(t < _)) {
+              best(b) = t; changed = true
+            }
+          }
+        }
+        best.keySet.toSet
+      }
+      val nodes = es.flatMap(e => Seq(e._1, e._2)).distinct
+      val srcPaths = nodes.map(w =>
+        w -> nodes.filter(u => temporal(u)(w)).sorted(utf8).mkString(",")).toMap
+      val allPaths = ancestorsOf(walk.map(e => (e._1, e._2)), nodes)
+      val expected = es.map { case (a, b, t) => (a, b, t, srcPaths(b), allPaths(b)) }
+      val got = multiPartition(collectReleased(GraphOps.timeBasedForwardEdgesOnly(
+          spread(es.toDF("src", "target", "ts")), "ts", "p")).map(r =>
+        (r.getAs[String]("src"), r.getAs[String]("target"), r.getAs[Long]("ts"),
+          r.getAs[String]("p:src_paths"), r.getAs[String]("p:all_paths"))).toSeq)
+      assert(got.sortBy(_.toString) == expected.sortBy(_.toString), s"edges $es")
+    }
+  }
+
+  test("law: forwardEdgesOnly's three columns equal a DFS enumeration") {
+    graphs(47, 9, dag = false).foreach { es =>
+      val nodes = es.flatMap(e => Seq(e._1, e._2)).distinct
+      // forward edge: not a self-loop, and its target does not reach its src
+      val fwd = es.filter { case (s, t) => s != t && !reach(es, t)(s) }
+      val hasParents = es.map(_._2).toSet
+      def paths(v: String): Seq[String] =
+        if (!hasParents(v)) Seq(v)
+        else fwd.filter(_._2 == v).map(_._1).distinct.flatMap(p => paths(p).map(v + "," + _))
+      val (srcPaths, allPaths) = (ancestorsOf(fwd, nodes), ancestorsOf(es, nodes))
+      val expected = es.map { case (s, t) =>
+        (s, t, srcPaths(t), allPaths(t), paths(t).distinct.sorted(utf8).mkString("|"))
+      }
+      val got = multiPartition(collectReleased(GraphOps.forwardEdgesOnly(
+          spread(es.toDF("src", "target")), "f"))
+        .map(r => (r.getAs[String]("src"), r.getAs[String]("target"),
+          r.getAs[String]("f:src_paths"), r.getAs[String]("f:all_paths"),
+          r.getAs[String]("f:ancestors"))).toSeq)
+      assert(got.sortBy(_.toString) == expected.sortBy(_.toString), s"edges $es")
+    }
+  }
+
+  test("law: no loop leaf outlives its result (default and one-row loop partitions)") {
+    val edges = Seq(("a", "b"), ("b", "c"), ("a", "c"), ("c", "d"), ("x", "y"))
+      .toDF("src", "target")
+    val timed = edges.withColumn("ts", lit(1L))
+    val roots = Seq("a").toDF("node_id")
+    val loops = Seq[(String, () => DataFrame)](
+      "bfsLevels" -> (() => GraphOps.bfsLevels(edges, roots)),
+      "forwardPaths" -> (() => GraphOps.forwardPaths(edges, roots)),
+      "connectedComponents" -> (() => GraphOps.connectedComponents(edges)),
+      "ancestorClosure" -> (() => GraphOps.ancestorClosure(edges)),
+      "forwardEdgesOnly" -> (() => GraphOps.forwardEdgesOnly(edges, "f")),
+      "timeBasedForwardEdgesOnly" ->
+        (() => GraphOps.timeBasedForwardEdgesOnly(timed, "ts", "t")))
+    for (sized <- Seq(false, true); (name, loop) <- loops) {
+      val before = sc.getPersistentRDDs.keySet
+      val result = if (sized) withLoopRows1(loop()) else loop()
+      result.collect()
+      org.apache.spark.sql.graft.bridge.releaseCheckpoints(result)
+      val left = sc.getPersistentRDDs.keySet -- before
+      assert(left.isEmpty, s"$name (rowsPerPartition=1: $sized) left RDDs $left")
+    }
+  }
+
+  test("bfsLevels at maxIter warns and returns the levels up to maxIter, no deeper") {
+    val chain = (0 until 10).map(i => (s"n$i", s"n${i + 1}")).toDF("src", "target")
+    val got = collectReleased(GraphOps.bfsLevels(chain, Seq("n0").toDF("node_id"), maxIter = 3))
+      .map(r => r.getString(0) -> r.getInt(1)).toMap
+    assert(got == (0 to 3).map(i => s"n$i" -> i).toMap)
+  }
+
+  test("forwardPaths at maxIter warns and counts only paths of at most maxIter hops") {
+    // a ladder: n_i -> n_{i+1} and n_i -> n_{i+2}, so path counts keep
+    // growing with the hop budget
+    val es = (0 until 8).flatMap(i => Seq((s"n$i", s"n${i + 1}"), (s"n$i", s"n${i + 2}")))
+    // paths from n0 of at most 3 hops, counted by endpoint
+    var paths = Seq(List("n0"))
+    var all = paths
+    (1 to 3).foreach { _ =>
+      paths = paths.flatMap(p => es.filter(_._1 == p.head).map(e => e._2 :: p))
+      all ++= paths
+    }
+    val expected = all.groupBy(_.head).map { case (v, ps) => v -> ps.size.toLong }
+    val got = collectReleased(GraphOps.forwardPaths(es.toDF("src", "target"),
+        Seq("n0").toDF("node_id"), maxIter = 3)).map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(got == expected)
   }
 }

@@ -20,6 +20,9 @@ class Round19Spec extends SparkTestBase {
     try body finally spark.conf.unset("graft.loop.rowsPerPartition")
   }
 
+  /** The laws below run under the shipped config, then layout-bound. */
+  private def shippedThenLayoutBound(body: => Unit): Unit = { body; layoutBound(body) }
+
   private def unionFind(edges: Seq[(String, String)]): Map[String, String] = {
     val parent = scala.collection.mutable.Map.empty[String, String]
     def find(x: String): String = {
@@ -40,19 +43,22 @@ class Round19Spec extends SparkTestBase {
     val rnd = new scala.util.Random(19)
     val edges = (1 to 120).map(_ =>
       (f"n${rnd.nextInt(40)}%03d", f"n${rnd.nextInt(40)}%03d"))
-    val (got, parts) = withLoopRows1 {
-      val cc = GraphOps.connectedComponents(edges.toDF("src", "target"))
-      (cc.collect().map(r => r.getString(0) -> r.getString(1)).toMap,
-        cc.rdd.getNumPartitions)
-    }
-    // the labels came out of the distributed loop, on its sized layout
-    assert(parts > 1, s"loop ran on $parts partition(s)")
     // repeated find() collapses chains fully for the expected map
     val uf = unionFind(edges)
     val expected = uf.map { case (n, _) =>
       var r = n; while (uf(r) != r) r = uf(r); n -> r
     }
-    assert(got == expected)
+    shippedThenLayoutBound {
+      val (got, parts) = withLoopRows1 {
+        val cc = GraphOps.connectedComponents(edges.toDF("src", "target"))
+        try (cc.collect().map(r => r.getString(0) -> r.getString(1)).toMap,
+          cc.rdd.getNumPartitions)
+        finally org.apache.spark.sql.graft.bridge.releaseCheckpoints(cc)
+      }
+      // the labels came out of the distributed loop, on its sized layout
+      assert(parts > 1, s"loop ran on $parts partition(s)")
+      assert(got == expected)
+    }
   }
 
   test("law: ancestorClosure on the multi-partition declared layout equals naive closure") {
@@ -62,10 +68,6 @@ class Round19Spec extends SparkTestBase {
       val a = rnd.nextInt(25); val b = a + 1 + rnd.nextInt(10)
       (f"v$a%03d", f"v$b%03d")
     }.distinct
-    val got = withLoopRows1 {
-      GraphOps.ancestorClosure(edges.toDF("src", "target"))
-        .collect().map(r => (r.getString(0), r.getString(1))).toSet
-    }
     // naive reachability
     val adjIn = edges.groupBy(_._2).map { case (t, es) => t -> es.map(_._1).toSet }
     def ancestors(n: String): Set[String] = {
@@ -79,7 +81,14 @@ class Round19Spec extends SparkTestBase {
     }
     val nodes = edges.flatMap(e => Seq(e._1, e._2)).distinct
     val expected = nodes.flatMap(n => ancestors(n).map(a => (n, a))).toSet
-    assert(got == expected)
+    shippedThenLayoutBound {
+      val got = withLoopRows1 {
+        val closure = GraphOps.ancestorClosure(edges.toDF("src", "target"))
+        try closure.collect().map(r => (r.getString(0), r.getString(1))).toSet
+        finally org.apache.spark.sql.graft.bridge.releaseCheckpoints(closure)
+      }
+      assert(got == expected)
+    }
   }
 
   test("law: timeBasedForwardEdgesOnly is layout-invariant (multi-partition == default)") {

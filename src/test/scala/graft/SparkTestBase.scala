@@ -11,6 +11,17 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkTestBase.session
   def sc = spark.sparkContext
 
+  /** `body` with AQE coalescing and broadcast joins off, so every loop
+    * layout keeps its multi-partition count (no leaf is coalesced to one
+    * partition) and decides where rows meet (a broadcast join ignores
+    * both sides' layouts, and test graphs are small enough to broadcast). */
+  def layoutBound[A](body: => A): A = {
+    val confs = Seq("spark.sql.adaptive.coalescePartitions.enabled" -> "false",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally confs.foreach { case (k, _) => spark.conf.unset(k) }
+  }
+
   /** Jobs started while `body` runs (the listener bus is drained on both
     * sides, so no earlier job leaks in and no late event is missed). */
   def jobsOf[A](body: => A): (A, Int) = {
