@@ -5,12 +5,18 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /**
- * SparkSessionExtensions entry point: registers graft's native
- * expressions for SQL use. Activate with
+ * SparkSessionExtensions entry point. Activate with
  * `.config("spark.sql.extensions", "graft.plans.GraftExtensions")` or
- * `.withExtensions(new GraftExtensions)` — after which
- * `spark.sql("SELECT mmh3_64(s) FROM t")` plans the codegen'd native
- * expression, no UDF registration per session.
+ * `.withExtensions(new GraftExtensions)` (GraftSession does). It registers:
+ *  - graft's native expressions for SQL use: after it,
+ *    `spark.sql("SELECT mmh3_64(s) FROM t")` plans the codegen'd native
+ *    expression, no UDF registration per session;
+ *  - `SortInPlace`, an AQE query-stage preparation rule: a global sort's
+ *    range exchange becomes `CoalesceExec(1)` when AQE partition
+ *    coalescing is on, the sort's input is at most
+ *    `spark.sql.adaptive.advisoryPartitionSizeInBytes` by its logical
+ *    size estimate, and the plan shows it runs as exactly one partition.
+ *    The sort then needs no sample job and no map-stage job.
  */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
@@ -34,5 +40,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         case _ => throw new IllegalArgumentException(
           "mmh3_64(expr[, seed]) takes 1 or 2 arguments")
       }))
+    e.injectQueryStagePrepRule(SortInPlace)
   }
 }

@@ -2,11 +2,17 @@ package graft.tools
 
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 import org.apache.spark.scheduler._
+import org.apache.spark.sql.Observation
+import org.apache.spark.sql.functions.{count, lit}
 
 /** Dev tool: per-gate Spark job/stage/task counts + wall time, to tell
   * scheduler-cadence-bound gates (many tiny jobs: iterative loops,
-  * checkpoint probes) from data-bound ones. Not part of the driver
-  * contract. Usage: runMain graft.tools.JobProfile q_graph_cc ... */
+  * checkpoint probes) from data-bound ones. Each gate runs as the
+  * benchmark runs it: the builder call, then a noop write of every
+  * column (a `count()` would let the optimizer drop work the gate's
+  * consumer pays for, such as the presentation sort), rows counted with
+  * `observe`. Not part of the driver contract.
+  * Usage: runMain graft.tools.JobProfile q_graph_cc ... */
 object JobProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -54,7 +60,11 @@ object JobProfile {
       val (j0, s0, t0, tt0) = (jobs.get, stages.get, tasks.get, taskTimeMs.get)
       val w0 = System.nanoTime()
       val n = graft.core.Caches.scoped {
-        graft.SparkEntry.queries(name)(spark, sfDir).count()
+        val obs = Observation()
+        graft.SparkEntry.queries(name)(spark, sfDir)
+          .observe(obs, count(lit(1)).as("rows"))
+          .write.format("noop").mode("overwrite").save()
+        obs.get("rows")
       }
       val wall = (System.nanoTime() - w0) / 1e9
       graft.core.Caches.release()

@@ -74,8 +74,10 @@ class Round10Spec extends SparkTestBase {
       df.collect() // finalize AQE
       val plan = unwrap(df.queryExecution.executedPlan)
       // the ONLY allowed exchange is the presentation orderBy's range
-      // partitioning; a HashPartitioning exchange means the join or the
-      // groupBy re-shuffled data the buckets already co-located
+      // partitioning (which graft.plans.SortInPlace removes when the
+      // sort's input is small and runs as one partition); a
+      // HashPartitioning exchange means the join or the groupBy
+      // re-shuffled data the buckets already co-located
       val hashShuffles = shuffles(plan).filter(_.outputPartitioning match {
         case _: org.apache.spark.sql.catalyst.plans.physical.HashPartitioning => true
         case _ => false
@@ -143,21 +145,26 @@ class Round10Spec extends SparkTestBase {
     assume(new java.io.File(s"$dir/documents.parquet").exists())
     val docs = spark.read.parquet(s"$dir/documents.parquet")
       .select("doc_id", "text").filter(col("text").isNotNull).limit(200)
-    def cachedCount: Int =
-      spark.sparkContext.getPersistentRDDs.size
+    // the ids of the session's persisted RDDs: the law follows only the
+    // RDDs the two operator calls create, so leaves of earlier suites that
+    // ContextCleaner frees meanwhile cannot move it
+    def persisted: Set[Int] =
+      spark.sparkContext.getPersistentRDDs.keySet.toSet
     graft.core.Caches.release() // clean slate
-    val before = cachedCount
+    val before = persisted
     // both round-9 ADVICE offenders: the span gram frame and the bloom
     // eval-gram frame
     graft.operators.Dedup.duplicatedNgramSpans(docs, "doc_id", "text", 8).count()
     val eval = docs.filter(col("doc_id") % 17 === 0)
     graft.operators.Dedup
       .decontaminateBloom(docs, "doc_id", "text", eval, "text", n = 3).count()
-    assert(cachedCount > before,
+    val created = persisted -- before
+    assert(created.nonEmpty,
       "expected the operators to persist intermediates (did the persist move?)")
     graft.core.Caches.release()
-    assert(cachedCount <= before,
-      s"Caches.release() left operator frames pinned: $cachedCount > $before")
+    val pinned = created.intersect(persisted)
+    assert(pinned.isEmpty,
+      s"Caches.release() left operator frames pinned: RDDs ${pinned.toSeq.sorted}")
   }
 
   test("gate plan audit: q_etl_scan reads only the 2 selected date partitions") {
