@@ -13,9 +13,11 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
  *    expression, no UDF registration per session;
  *  - `SortInPlace`, an AQE query-stage preparation rule: a global sort's
  *    range exchange becomes `CoalesceExec(1)` when AQE partition
- *    coalescing is on, the sort's input is at most
- *    `spark.sql.adaptive.advisoryPartitionSizeInBytes` by its logical
- *    size estimate, and the plan shows it runs as exactly one partition.
+ *    coalescing is on, the sort's input is, by its logical size
+ *    estimate, small enough for AQE to coalesce it into one partition
+ *    (`spark.sql.adaptive.coalescePartitions.minPartitionSize` under the
+ *    default `parallelismFirst`), and the plan shows it runs as exactly
+ *    one partition.
  *    The sort then needs no sample job and no map-stage job.
  */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {

@@ -5,8 +5,8 @@ import org.apache.spark.sql.catalyst.expressions.PlanExpression
 import org.apache.spark.sql.catalyst.optimizer.{BuildLeft, BuildRight}
 import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.{CoalesceExec, FileSourceScanExec, RDDScanExec,
-  ScanFileListing, SparkPlan, UnaryExecNode}
+import org.apache.spark.sql.execution.{CoalesceExec, FileSourceScanExec, ListingPartition,
+  PartitionedFileUtil, RDDScanExec, SparkPlan, UnaryExecNode}
 import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, CoalesceShufflePartitions,
   ShuffleQueryStageExec}
 import org.apache.spark.sql.execution.datasources.FilePartition
@@ -29,9 +29,10 @@ import org.apache.spark.sql.internal.SQLConf
  * `SinglePartition` satisfies the sort's `OrderedDistribution`, when all
  * three hold:
  *  - AQE partition coalescing is on;
- *  - `child`'s logical size estimate is at most
- *    `spark.sql.adaptive.advisoryPartitionSizeInBytes`, so AQE would
- *    coalesce the reduce side to one partition anyway;
+ *  - `child`'s logical size estimate is at most the size that AQE's
+ *    `CoalesceShufflePartitions` always packs into one partition (see
+ *    `small`), so AQE would coalesce the reduce side to one partition
+ *    anyway;
  *  - `child` runs as exactly one partition, read from the plan without
  *    running anything (see `onePartition`).
  * Scan, sort and consumer then run as one job. User repartitions
@@ -49,9 +50,23 @@ case class SortInPlace(session: SparkSession) extends Rule[SparkPlan] {
         CoalesceExec(1, child)
     }
 
-  private def small(p: SparkPlan): Boolean =
-    p.logicalLink.exists(_.stats.sizeInBytes <=
-      BigInt(conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)))
+  /** Whether `p`'s logical size estimate fits the one partition AQE's
+    * coalescing would make of it. `CoalesceShufflePartitions` packs up to
+    * a target that never falls below
+    * `spark.sql.adaptive.coalescePartitions.minPartitionSize` (1 MB by
+    * default). Only when the coalesced partition count has no floor
+    * (`parallelismFirst` off and no `minPartitionNum`) does the target
+    * reach `spark.sql.adaptive.advisoryPartitionSizeInBytes`; with the
+    * default `parallelismFirst`, a larger input is spread over up to
+    * `defaultParallelism` partitions. */
+  private def small(p: SparkPlan): Boolean = {
+    val minSize = conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE)
+    val target =
+      if (conf.getConf(SQLConf.COALESCE_PARTITIONS_PARALLELISM_FIRST) ||
+          conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_NUM).isDefined) minSize
+      else minSize.max(conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES))
+    p.logicalLink.exists(_.stats.sizeInBytes <= BigInt(target))
+  }
 
   /** Whether `p` runs as exactly one partition, where the plan states it
     * without running a job, executing a subtree or evaluating a
@@ -64,7 +79,7 @@ case class SortInPlace(session: SparkSession) extends Rule[SparkPlan] {
     case s: FileSourceScanExec =>
       !s.bucketedScan &&
         !(s.partitionFilters ++ s.dataFilters).exists(_.exists(_.isInstanceOf[PlanExpression[_]])) &&
-        oneSplit(s.selectedPartitions)
+        oneSplit(s)
     case s: RDDScanExec => s.rdd.isCheckpointed && s.rdd.getNumPartitions == 1
     case r: AQEShuffleReadExec => r.partitionSpecs.size == 1
     case s: ShuffleQueryStageExec if s.isMaterialized =>
@@ -81,18 +96,24 @@ case class SortInPlace(session: SparkSession) extends Rule[SparkPlan] {
     case _ => false
   }
 
-  /** Whether the scan's read RDD has one partition, from its file listing
-    * alone. `FilePartition.getFilePartitions` packs the files' splits
-    * largest first, each adding its length plus the open cost, and starts
-    * a new partition when the next split would pass `maxSplitBytes`; so
-    * one partition holds every file, unsplit, when their lengths plus the
-    * open cost of all but one fit. The scan's `inputRDD` would say the
-    * same, but building it builds the file reader and broadcasts the
-    * Hadoop conf (about 14 ms a scan node on a 4-core host), and every
-    * AQE re-plan makes new scan nodes. */
-  private def oneSplit(listing: ScanFileListing): Boolean = {
-    val lengths = listing.filePartitionIterator.flatMap(_.files.map(_.getLen)).toSeq
-    lengths.nonEmpty && lengths.sum + (lengths.size - 1) * conf.filesOpenCostInBytes <=
-      FilePartition.maxSplitBytes(session, listing)
+  /** Whether the scan's read RDD has one partition, asked of Spark's own
+    * split and packing rules (`PartitionedFileUtil.splitFiles`,
+    * `FilePartition.getFilePartitions`) over the scan's file listing, as
+    * the scan's non-bucketed read builds them. The scan's `inputRDD`
+    * would say the same, but building it builds the file reader and
+    * broadcasts the Hadoop conf (about 14 ms a scan node on a 4-core
+    * host), and every AQE re-plan makes new scan nodes. */
+  private def oneSplit(s: FileSourceScanExec): Boolean = {
+    val listing = s.selectedPartitions
+    val maxSplitBytes = FilePartition.maxSplitBytes(session, listing)
+    val splits = listing.filePartitionIterator.flatMap { case ListingPartition(values, _, files) =>
+      files.flatMap { f =>
+        val path = f.getPath
+        PartitionedFileUtil.splitFiles(f, path,
+          s.relation.fileFormat.isSplitable(session, s.relation.options, path),
+          maxSplitBytes, values)
+      }
+    }.toSeq.sortBy(-_.length)
+    FilePartition.getFilePartitions(session, splits, maxSplitBytes).size == 1
   }
 }

@@ -3,7 +3,6 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.graft.bridge
 import graft.core.XDF
 
 /**
@@ -12,12 +11,10 @@ import graft.core.XDF
  * header row, every cell URL-encoded (quote_plus), `.gz` transparent.
  *
  * Spark-first: `spark.read.csv` handles distributed listing, splitting
- * and gz decode; the header line is read on the driver
- * (`bridge.csvHeaderSchema`), so a read runs no job; per-cell URL-decode
- * is the built-in `url_decode` expression (codegen'd). Multi-path reads
- * union with schema evolution (reference merges with dfutils.merge). S3
- * paths work unchanged via the s3a:// filesystem when the cluster
- * provides it.
+ * and gz decode; per-cell URL-decode is the built-in `url_decode`
+ * expression (codegen'd). Multi-path reads union with schema evolution
+ * (reference merges with dfutils.merge). S3 paths work unchanged via the
+ * s3a:// filesystem when the cluster provides it.
  */
 object TsvIO {
 
@@ -25,14 +22,13 @@ object TsvIO {
     * Differing headers across paths reconcile by union-of-columns with
     * "" defaults (reference dfutils.py:9-90 merge semantics). */
   def read(spark: SparkSession, paths: Seq[String], sep: String = "\t"): DataFrame = {
-    // all strings; the engine's surface is string-typed
-    val options = Map("sep" -> sep, "header" -> "true", "inferSchema" -> "false")
     val dfs = paths.map { p =>
-      val reader = spark.read.options(options)
-      val raw = bridge.csvHeaderSchema(spark, p, options) match {
-        case Some(schema) => reader.schema(schema).csv(p)
-        case None => reader.csv(p)
-      }
+      val raw = spark.read
+        .option("sep", sep)
+        .option("header", "true")
+        // all strings; the engine's surface is string-typed
+        .option("inferSchema", "false")
+        .csv(p)
       // url_decode is form-decoding (URLDecoder): '+' already maps to
       // space, no pre-pass needed
       raw.select(raw.columns.map(c => url_decode(col(c)).as(c)): _*)

@@ -1,28 +1,21 @@
 package org.apache.spark.sql.graft
 
 import scala.util.control.NonFatal
-import java.nio.charset.StandardCharsets.UTF_8
-import com.univocity.parsers.csv.CsvParser
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.hadoop.io.Text
-import org.apache.hadoop.io.compress.CompressionCodecFactory
-import org.apache.hadoop.util.LineReader
 import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
 import org.apache.parquet.hadoop.{Footer, ParquetFileWriter}
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.deploy.SparkHadoopUtil
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.csv.CSVOptions
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, Partitioning,
   PartitioningCollection}
 import org.apache.spark.sql.classic.{Dataset, ExpressionUtils}
 import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
-import org.apache.spark.sql.execution.datasources.csv.CSVUtils
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
   ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.HadoopFSUtils
 
 /** Column <-> Expression bridge. `ExpressionUtils` is private[sql], so
@@ -176,74 +169,6 @@ object bridge {
           HadoopInputFile.fromStatus(file, hadoopConf), SKIP_ROW_GROUPS))
         Some(ParquetFileFormat.readSchemaFromFooter(footer,
           new ParquetToSparkSchemaConverter(session.sessionState.conf)))
-      }
-    } catch { case NonFatal(_) => None }
-  }
-
-  /** The all-string schema Spark's CSV inference gives `path` under
-    * `options` with a header and `inferSchema` off, read on the driver
-    * with no job. Inference names the columns from the first non-empty
-    * line of the scan (`TextInputCSVDataSource.infer`, a `take(1)` job),
-    * over the path itself or its children minus the names Spark's listing
-    * hides. This reads the first non-empty line of each of those files
-    * through the Hadoop FS and the file's codec, and when every file
-    * starts with the same line (as the part files of one CSV write do),
-    * parses it with the options' CSV parser and names the columns with
-    * Spark's `CSVUtils.makeSafeHeader` (empty cells `_c<i>`, duplicates
-    * suffixed with their index).
-    *
-    * None wherever inference would do more than read that line, or the
-    * files do not give one schema: no header, `inferSchema`, `multiLine`,
-    * a comment prefix, a line separator or a charset other than UTF-8, a
-    * glob or missing path, a subdirectory, more files than Spark lists on
-    * the driver (`parallelPartitionDiscoveryThreshold`), files whose first
-    * lines differ (which one Spark reads depends on its split order), no
-    * non-empty line, or a listing or read that throws. The caller then
-    * defers to `spark.read.csv`, which gives Spark's own result or error. */
-  def csvHeaderSchema(spark: org.apache.spark.sql.SparkSession, path: String,
-                      options: Map[String, String]): Option[StructType] = {
-    val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    val conf = session.sessionState.conf
-    val root = new Path(path)
-    if (SparkHadoopUtil.get.isGlobPath(root)) None
-    else try {
-      val parsed = new CSVOptions(options, conf.csvColumnPruning, conf.sessionLocalTimeZone)
-      if (!parsed.headerFlag || parsed.inferSchemaFlag || parsed.multiLine ||
-          parsed.isCommentSet || parsed.lineSeparator.isDefined ||
-          !UTF_8.name.equalsIgnoreCase(parsed.charset)) None
-      else {
-        val hadoopConf = session.sessionState.newHadoopConfWithOptions(options)
-        val fs = root.getFileSystem(hadoopConf)
-        val status = fs.getFileStatus(root)
-        val children = (if (status.isDirectory) fs.listStatus(root).toSeq else Seq(status))
-          .filterNot(f => HadoopFSUtils.shouldFilterOutPathName(f.getPath.getName))
-        if (children.exists(_.isDirectory) ||
-            children.size > conf.parallelPartitionDiscoveryThreshold) None
-        else {
-          val codecs = new CompressionCodecFactory(hadoopConf)
-          def firstLine(f: FileStatus): Option[String] = {
-            val raw = fs.open(f.getPath)
-            try {
-              val in = Option(codecs.getCodec(f.getPath))
-                .map(_.createInputStream(raw)).getOrElse(raw)
-              try {
-                val reader = new LineReader(in, hadoopConf)
-                val text = new Text
-                Iterator.continually(reader.readLine(text))
-                  .takeWhile(_ > 0)
-                  .map(_ => new String(text.getBytes, 0, text.getLength, UTF_8))
-                  .find(_.trim.nonEmpty)
-              } finally in.close()
-            } finally raw.close()
-          }
-          children.flatMap(firstLine).distinct match {
-            case Seq(line) =>
-              Option(new CsvParser(parsed.asParserSettings).parseLine(line)).map(row =>
-                StructType(CSVUtils.makeSafeHeader(row, conf.caseSensitiveAnalysis, parsed)
-                  .map(StructField(_, StringType, nullable = true)).toSeq))
-            case _ => None
-          }
-        }
       }
     } catch { case NonFatal(_) => None }
   }

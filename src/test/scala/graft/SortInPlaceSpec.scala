@@ -13,8 +13,9 @@ import graft.sources.ParquetIO
   * one partition sorts that partition in place, with no range exchange
   * and no sample job, and returns the rows, in the order, that the range
   * exchange's sort returns. Wherever the input runs as more than one
-  * partition, is above the advisory size, or AQE coalescing is off, and
-  * for user repartitions, the range exchange stays. */
+  * partition, is above the size AQE's coalescing packs into one
+  * partition, or AQE coalescing is off, and for user repartitions, the
+  * range exchange stays. */
 class SortInPlaceSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
 
   private def scratch(name: String): String =
@@ -123,6 +124,22 @@ class SortInPlaceSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     finally bridge.releaseCheckpoints(leaf)
   }
 
+  test("a one-partition checkpoint leaf above the coalescing target keeps its range exchange") {
+    // the advisory size stays at its 64 MB default: under parallelismFirst
+    // AQE spreads an input above minPartitionSize over several partitions
+    val leaf = bridge.checkpointLeaf(read(onePart), reliable = false)
+    try withConf(tinyMinPartition) {
+      assert(leaf.rdd.getNumPartitions == 1)
+      val df = leaf.orderBy("k")
+      val got = df.collect().toSeq
+      assertRangeExchange(df)
+      // AQE reads that exchange in more than one partition: a sort in
+      // place would have run in one task
+      assert(df.queryExecution.toRdd.getNumPartitions > 1, df.queryExecution.executedPlan)
+      assert(got == read(onePart).orderBy("k").collect().toSeq)
+    } finally bridge.releaseCheckpoints(leaf)
+  }
+
   test("empty input sorts in place to no rows") {
     val empty = scratch("empty")
     rows.filter(lit(false)).coalesce(1).write.parquet(empty)
@@ -130,15 +147,29 @@ class SortInPlaceSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     assert(sameAsRangeSort(() => read(onePart).filter(col("s") === "none").orderBy("k")).isEmpty)
   }
 
-  test("the range exchange stays: multi-split input, above the advisory size, coalescing or AQE off") {
+  /** A coalesced partition of at least 16 bytes, so the 40-row table is
+    * above the size AQE packs into one partition. */
+  private val tinyMinPartition = "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "16"
+
+  test("the range exchange stays: multi-split input, above the coalescing target, coalescing or AQE off") {
     val want = read(onePart).orderBy("k").collect().toSeq
     val multi = read(table("three", 3)).orderBy("k")
     assert(multi.collect().toSeq == want)
     assertRangeExchange(multi)
-    withConf("spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "16") {
+    withConf(tinyMinPartition) {
       val big = read(onePart).orderBy("k")
       assert(big.collect().toSeq == want)
       assertRangeExchange(big)
+    }
+    // without parallelismFirst the target is the advisory size
+    withConf(tinyMinPartition,
+        "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false") {
+      assertInPlace(read(onePart).orderBy("k"))
+      withConf("spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "16") {
+        val big = read(onePart).orderBy("k")
+        assert(big.collect().toSeq == want)
+        assertRangeExchange(big)
+      }
     }
     coalescingOff {
       val off = read(onePart).orderBy("k")
