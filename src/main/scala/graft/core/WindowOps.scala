@@ -48,9 +48,9 @@ object WindowOps {
   /**
    * Globally contiguous 0-based ordinals over the sorted distinct window
    * values, WITHOUT a single-partition window: `XDF.globalOrdinal`
-   * range-partitions + locally sorts, then lifts per-partition positions
-   * to global ranks with a broadcast offset join — Tungsten end to end,
-   * no RDD hop, no corpus-sized row-format round-trip. A
+   * sorts globally, then lifts per-partition positions to global ranks
+   * with literal per-partition offsets — Tungsten end to end, no RDD
+   * hop, no corpus-sized row-format round-trip. A
    * `row_number().over(Window.orderBy(...))` here would move every
    * distinct value to ONE task — fine for a handful of categorical
    * values, a straight scale-killer when the window column is

@@ -193,7 +193,7 @@ case class XDF(df: DataFrame) {
 
   /** 1-based sequence number, prepended (dataframe.py:1707-1729).
     * Ordered by `orderCols` to be deterministic under parallelism;
-    * computed as a distributed global ordinal (range partition + local
+    * computed as a distributed global ordinal (a global sort + local
     * positions + per-partition offsets, XDF.globalOrdinal) — no
     * single-task window. */
   def addSeqNum(name: String = "sno", orderCols: Seq[String]): XDF =
@@ -1012,67 +1012,64 @@ object XDF {
   /**
    * Distributed 1-based global ordinal in `sortExprs` order — the
    * scale-safe replacement for `row_number().over(Window.orderBy(...))`,
-   * which moves the whole table to ONE task. Range-partition + local
-   * sort gives a partition-major total order; within a partition,
-   * `monotonically_increasing_id` encodes the local position in its low
-   * 33 bits by construction, and per-partition offsets (one count row
-   * per partition, driver-side cumsum) lift positions to global ranks.
-   * No single-task stage anywhere; ties across partitions land in the
-   * same range partition, so tie ordering is no weaker than the global
-   * window's. Determinism note: the frame is evaluated by two jobs
-   * (counts + output) over the SAME physical plan, so the range
-   * sampler's partition boundaries are identical in both.
+   * which moves the whole table to ONE task. A global sort gives a
+   * partition-major total order, and [[scanOrdinalWithCount]] numbers it.
+   * The sort's range exchange runs only where the input needs it: a
+   * small one-split input is sorted in place (`plans.SortInPlace`) inside
+   * the ordinal's one checkpoint job. Ties land in one range partition,
+   * so tie ordering is no weaker than the global window's.
    */
   private[graft] def globalOrdinal(d: DataFrame, sortExprs: Seq[Column],
                                    outCol: String): DataFrame =
     globalOrdinalWithCount(d, sortExprs, outCol)._1
 
-  /** [[globalOrdinal]] plus the input's row count, read off the ordinal
-    * machinery's own per-partition counts — callers that need the
-    * cardinality anyway (zip validation, window sizing) save a whole
-    * count job over the input. */
+  /** [[globalOrdinal]] plus the input's row count, observed during the
+    * ordinal's own checkpoint job — callers that need the cardinality
+    * anyway (zip validation, window sizing) save a whole count job over
+    * the input. */
   private[graft] def globalOrdinalWithCount(d: DataFrame, sortExprs: Seq[Column],
                                             outCol: String): (DataFrame, Long) =
-    scanOrdinalWithCount(
-      d.repartitionByRange(sortExprs: _*).sortWithinPartitions(sortExprs: _*),
-      outCol, base = 1L)
+    scanOrdinalWithCount(d.orderBy(sortExprs: _*), outCol, base = 1L)
 
-  /** Partition-major (scan-order) ordinal without any shuffle or RDD
-    * hop — the Tungsten-native `zipWithIndex`: within a partition
-    * `monotonically_increasing_id` encodes the local position in its
-    * low 33 bits; per-partition counts (one row each, driver cumsum)
-    * lift positions to global ranks. The marked frame is MATERIALIZED
-    * (localCheckpoint) before the counts job: the counts and output
-    * actions otherwise re-plan independently, and range-partitioner
-    * sampling / AQE coalescing can assign different partition
-    * memberships per action, silently corrupting the offsets. The
-    * offsets join back via a broadcast of the tiny (pid, offset) frame
-    * — map-side, no shuffle, O(1) per-row lookup at any partition
-    * count. */
+  /** [[scanOrdinalWithCount]] without the count. */
   private[graft] def scanOrdinal(d: DataFrame, outCol: String,
                                  base: Long = 0L): DataFrame =
     scanOrdinalWithCount(d, outCol, base)._1
 
+  /** Partition-major (scan-order) ordinal from `base`, plus the row count,
+    * without any shuffle or RDD hop — the Tungsten-native `zipWithIndex`:
+    * within a partition `monotonically_increasing_id` encodes the
+    * partition in its high bits and the local position in its low 33.
+    * The marked frame is MATERIALIZED as one checkpoint leaf, its row
+    * count observed in the same job: offsets read off a re-planned frame
+    * could see other partition memberships (range sampling, AQE
+    * coalescing) and corrupt the ranks. On a one-partition leaf the rank
+    * is the position, and the leaf's job is the only one. On more, one
+    * job counts each partition's rows and the offsets are a literal array
+    * indexed by partition — a map-side lookup, no join and no broadcast. */
   private[graft] def scanOrdinalWithCount(d: DataFrame, outCol: String,
                                           base: Long = 0L): (DataFrame, Long) = {
-    import org.apache.spark.sql.functions._
-    val spark = d.sparkSession
-    val marked = d
-      .withColumn("__mid__", monotonically_increasing_id())
-      .withColumn("__pid__", shiftright(col("__mid__"), 33).cast("int"))
-      .withColumn("__pos__", col("__mid__").bitwiseAND(lit((1L << 33) - 1)))
-      .localCheckpoint()
-    val counts = marked.groupBy(col("__pid__")).count()
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val pids = counts.keys.toSeq.sorted
-    val offsets = pids.zip(pids.scanLeft(0L)((acc, p) => acc + counts(p))).toMap
-    import spark.implicits._
-    val offsetsDf = pids.map(p => (p, offsets(p))).toDF("__pid__", "__off__")
-    val out = marked.join(broadcast(offsetsDf), Seq("__pid__"), "left")
-      .withColumn(outCol, coalesce(col("__off__"), lit(0L)) + col("__pos__") + lit(base))
-      .drop("__mid__", "__pid__", "__pos__", "__off__")
-    (out, counts.values.sum)
+    val observed = d.withColumn("__mid__", monotonically_increasing_id())
+      .observe("__ordinal_rows__", count(lit(1)).as("rows"))
+    val marked = org.apache.spark.sql.graft.bridge.checkpointLeaf(observed, reliable = false)
+    val rows = observed.queryExecution.observedMetrics.get("__ordinal_rows__")
+      .map(_.getLong(0)).getOrElse(throw new IllegalStateException(
+        "scanOrdinal: the row count was not observed during the checkpoint job"))
+    val pid = shiftright(col("__mid__"), 33).cast("int")
+    val pos = col("__mid__").bitwiseAND(lit((1L << 33) - 1))
+    val rank =
+      if (rows == 0 || marked.queryExecution.toRdd.getNumPartitions <= 1) pos
+      else {
+        val counts = d.sparkSession.sparkContext.runJob(marked.select(pid).queryExecution.toRdd,
+          (it: Iterator[org.apache.spark.sql.catalyst.InternalRow]) =>
+            it.foldLeft(Map.empty[Int, Long]) { (m, r) =>
+              val p = r.getInt(0); m.updated(p, m.getOrElse(p, 0L) + 1) }).flatten.toMap
+        val offsets = (0 to counts.keys.max).scanLeft(0L)((acc, p) => acc + counts.getOrElse(p, 0L))
+        lit(offsets.init.toArray)(pid) + pos
+      }
+    (marked.withColumn(outCol, rank + lit(base)).drop("__mid__"), rows)
   }
+
   /** A parquet table as an XDF, through `sources.ParquetIO.read`: the
     * schema comes from one footer on the driver (no Spark job), or from
     * `spark.read.parquet` where Spark's inference would read more. */

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.graft.bridge.{checkpointLeaf, releaseCheckpoints}
+import org.apache.spark.sql.graft.bridge.{checkpointLeaf, releaseCheckpoints, withRowCount}
 
 /**
  * Graph algorithms over edge-list DataFrames with the reference's
@@ -322,15 +322,23 @@ object GraphOps {
    * (node_id, component) where component = the minimum node id reachable
    * (a null endpoint yields one (null, null) row and joins nothing).
    *
-   * Two regimes, decided once per call by sizing the symmetric edge view
-   * like every other loop ([[loopN]], `graft.loop.rowsPerPartition`):
-   *  - it fits ONE loop partition: union-find in one task
-   *    ([[unionFindComponents]]). The loop would run every stage as one
-   *    task anyway, and its ~30 jobs, planned and launched one after
-   *    another, cost far more in planning and job cadence than the work
-   *    on the data;
-   *  - otherwise: distributed label propagation with pointer doubling on
-   *    that many partitions ([[labelPropagation]]).
+   * The edge list is checkpointed once as (src, target), both cast to
+   * the common type the symmetric view's `array(struct, struct)` coerces
+   * them to (a hash map would take `1: Int` and `1L` for two nodes), its
+   * row count observed in the same job. Two regimes, decided from that
+   * count like every other loop ([[loopN]], `graft.loop.rowsPerPartition`):
+   *  - twice the edge rows, the symmetric view's upper bound, fits ONE
+   *    loop partition: union-find in one task straight over the edge leaf
+   *    ([[unionFindComponents]]), which needs neither the mirrored rows
+   *    nor their `distinct`. The loop would run every stage as one task
+   *    anyway, and its ~30 jobs, planned and launched one after another,
+   *    cost far more in planning and job cadence than the work on the
+   *    data. The result carries its observed row count as statistics, so
+   *    a small one can be broadcast or sorted in place;
+   *  - otherwise the symmetric distinct view is built and sized. When it
+   *    fits one loop partition after all (duplicate or mirrored edges),
+   *    union-find labels it; else distributed label propagation with
+   *    pointer doubling runs on that many partitions ([[labelPropagation]]).
    * `maxIter` bounds only the distributed loop (it guards against
    * adversarial topologies); the one-task regime always completes.
    *
@@ -339,21 +347,34 @@ object GraphOps {
    */
   def connectedComponents(edges: DataFrame, maxIter: Int = 20,
                           reliable: Boolean = false): DataFrame = {
-    // symmetric view via ONE explode pass, not union(edges, swapped): a
-    // self-union evaluates the upstream lineage twice, and CC callers feed
-    // it expensive lineages (the MinHash signature pipeline, a distributed
-    // ordinal). Its row count rides the checkpoint job and sizes the regime.
-    val (sym0, Seq(symRows)) = chk(edges.select(explode(array(
+    // the symmetric view via ONE explode pass, not union(edges, swapped):
+    // a self-union evaluates the upstream lineage twice. Built over the
+    // edge leaf, so CC callers' expensive lineages (the MinHash signature
+    // pipeline, a distributed ordinal) run once in either regime.
+    def symmetric(e: DataFrame): DataFrame = e.select(explode(array(
         struct(col("src").as("a"), col("target").as("b")),
         struct(col("target").as("a"), col("src").as("b")))).as("__e__"))
       .select(col("__e__.a").as("a"), col("__e__.b").as("b"))
-      .distinct(), reliable, Seq(count(lit(1))))
-    val n = loopN(sym0, symRows)
-    if (n == 1 && unionFindable(sym0.schema("b").dataType)) {
-      val out = checkpointLeaf(unionFindComponents(sym0), reliable)
-      releaseCheckpoints(sym0)
-      out
-    } else labelPropagation(sym0, n, maxIter, reliable)
+    val dt = symmetric(edges).schema("a").dataType
+    val (leaf, Seq(edgeRows)) = chk(edges.select(col("src").cast(dt).as("src"),
+      col("target").cast(dt).as("target")), reliable, Seq(count(lit(1))))
+    val unionFind = unionFindable(dt)
+    if (unionFind && loopN(leaf, 2 * edgeRows) == 1) unionFindLeaf(leaf, reliable)
+    else {
+      val (sym0, Seq(symRows)) = chk(symmetric(leaf).distinct(), reliable, Seq(count(lit(1))))
+      releaseCheckpoints(leaf)
+      val n = loopN(sym0, symRows)
+      if (unionFind && n == 1) unionFindLeaf(sym0, reliable)
+      else labelPropagation(sym0, n, maxIter, reliable)
+    }
+  }
+
+  /** [[unionFindComponents]] of the materialized edge leaf `e` (released)
+    * as a checkpoint leaf whose statistics are its observed row count. */
+  private def unionFindLeaf(e: DataFrame, reliable: Boolean): DataFrame = {
+    val (out, Seq(rows)) = chk(unionFindComponents(e), reliable, Seq(count(lit(1))))
+    releaseCheckpoints(e)
+    withRowCount(out, rows)
   }
 
   /** Id types whose Catalyst values are hash-map keys with the loop join's
@@ -366,14 +387,16 @@ object GraphOps {
     case _ => false
   }
 
-  /** Components of the materialized symmetric view in one task: union-find
-    * with path compression over an O(nodes) map, always hanging the larger
-    * root under the smaller, so each root is its component's minimum under
-    * Catalyst's ordering of the id type — the order the loop's `min` uses
-    * (UTF-8 bytes for strings, which UTF-16 `compareTo` contradicts). */
-  private def unionFindComponents(sym: DataFrame): DataFrame = {
-    val dt = sym.schema("b").dataType
-    val rows = sym.queryExecution.toRdd.coalesce(1).mapPartitions { it =>
+  /** Components of a materialized two-column edge frame, endpoints of one
+    * type, in one task: union-find with path compression over an O(nodes)
+    * map, always hanging the larger root under the smaller, so each root is
+    * its component's minimum under Catalyst's ordering of the id type — the
+    * order the loop's `min` uses (UTF-8 bytes for strings, which UTF-16
+    * `compareTo` contradicts). Edge direction, duplicates and self-loops
+    * do not change the components. */
+  private def unionFindComponents(edges: DataFrame): DataFrame = {
+    val dt = edges.schema(1).dataType
+    val rows = edges.queryExecution.toRdd.coalesce(1).mapPartitions { it =>
       import org.apache.spark.sql.catalyst.InternalRow
       val ord = org.apache.spark.sql.catalyst.types.PhysicalDataType.ordering(dt)
       val parent = new java.util.HashMap[Any, Any]()
@@ -402,7 +425,7 @@ object GraphOps {
       parent.keySet.toArray.iterator.map(k => InternalRow(k, find(k))) ++
         Iterator.fill(if (sawNull) 1 else 0)(InternalRow(null, null))
     }
-    org.apache.spark.sql.graft.bridge.internalCreateDataFrame(sym.sparkSession, rows,
+    org.apache.spark.sql.graft.bridge.internalCreateDataFrame(edges.sparkSession, rows,
       StructType(Seq(StructField("node_id", dt), StructField("component", dt))))
   }
 

@@ -27,19 +27,25 @@ object JobProfile {
     val stages = new AtomicInteger
     val tasks = new AtomicInteger
     val taskTimeMs = new AtomicLong
-    // SPARK_GRAFT_JOB_LOG=1: one line per job with duration + callsite,
-    // to attribute an iterative gate's wall time to its individual jobs
+    // SPARK_GRAFT_JOB_LOG=1: one line per job with its duration, its
+    // stages' names and the RDD-operation scopes its stages run
+    // (Exchange, BroadcastExchange, checkpoint, ...), to attribute an
+    // iterative gate's wall time to its individual jobs
     val jobLog = sys.env.get("SPARK_GRAFT_JOB_LOG").contains("1")
     val jobStart = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
         jobs.incrementAndGet()
-        if (jobLog) jobStart.put(e.jobId, (e.time,
-          Option(e.properties).map(_.getProperty("callSite.short", "?")).getOrElse("?")))
+        if (jobLog) {
+          val stageNames = e.stageInfos.map(_.name).distinct.mkString("; ")
+          val scopes = e.stageInfos.flatMap(_.rddInfos.flatMap(_.scope.map(_.name)))
+            .distinct.mkString(", ")
+          jobStart.put(e.jobId, (e.time, s"stages [$stageNames] scopes [$scopes]"))
+        }
       }
       override def onJobEnd(e: SparkListenerJobEnd): Unit = if (jobLog) {
-        Option(jobStart.remove(e.jobId)).foreach { case (t0, cs) =>
-          println(f"  [job] ${e.jobId}%4d ${(e.time - t0) / 1e3}%7.2fs  $cs")
+        Option(jobStart.remove(e.jobId)).foreach { case (t0, what) =>
+          println(f"  [job] ${e.jobId}%4d ${(e.time - t0) / 1e3}%7.2fs  $what")
         }
       }
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit =

@@ -8,6 +8,8 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.deploy.SparkHadoopUtil
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.Statistics
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, Partitioning,
   PartitioningCollection}
 import org.apache.spark.sql.classic.{Dataset, ExpressionUtils}
@@ -114,6 +116,24 @@ object bridge {
     Dataset.ofRows(session, LogicalRDD(output, rdd, partitioning,
       qe.executedPlan.outputOrdering, df.isStreaming)(session, stats, None))
   }
+
+  /** `leaf`, a [[checkpointLeaf]], with statistics from its row count as
+    * observed during its checkpoint job: `rowCount`, and `sizeInBytes`
+    * from Spark's per-row size estimate (`EstimationUtils.getSizePerRow`).
+    * For leaves whose source has no size estimate: an RDD wrapped by
+    * [[internalCreateDataFrame]] carries Spark's default of
+    * `Long.MaxValue` bytes, so nothing downstream can broadcast the leaf
+    * or sort it in place. */
+  def withRowCount(leaf: org.apache.spark.sql.DataFrame, rows: Long): org.apache.spark.sql.DataFrame =
+    leaf.queryExecution.analyzed match {
+      case lr: LogicalRDD =>
+        val session = leaf.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+        val stats = Statistics(EstimationUtils.getSizePerRow(lr.output) * rows, Some(BigInt(rows)))
+        Dataset.ofRows(session, LogicalRDD(lr.output, lr.rdd, lr.outputPartitioning,
+          lr.outputOrdering, lr.isStreaming)(session, Some(stats), None))
+      case other => throw new IllegalArgumentException(
+        s"withRowCount: expected a checkpoint leaf, got ${other.nodeName}")
+    }
 
   /** Unpersist the blocks of every local checkpoint leaf under `df`
     * (no-op for reliable checkpoint files). `Dataset.unpersist` only

@@ -1,15 +1,21 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import graft.operators.GraphOps
 
 /** How the graph loops are sized and what they cost in jobs.
-  * connectedComponents has two regimes: union-find in one task when the
-  * symmetric edge view fits one loop partition (`graft.loop.rowsPerPartition`,
+  * connectedComponents has two regimes: union-find in one task straight
+  * over the checkpointed edge list when twice its rows, the symmetric
+  * view's upper bound, fit one loop partition (`graft.loop.rowsPerPartition`,
   * default 1M rows — every fixture here), and the distributed
   * label-propagation loop otherwise (forced with rowsPerPartition = 1). */
-class GraphLoopSpec extends SparkTestBase {
+class GraphLoopSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   private def withLoopRows1[A](body: => A): A = {
@@ -139,15 +145,107 @@ class GraphLoopSpec extends SparkTestBase {
     assert(out.select("component").distinct().collect().toSeq == Seq(Row("n0")))
   }
 
-  test("job guard: connectedComponents on a small graph runs at most 3 jobs") {
+  test("job guard: connectedComponents on a small graph runs at most 2 jobs") {
     val edges = Seq(("a", "b"), ("b", "c"), ("x", "y"), ("p", "q"), ("q", "r"))
       .toDF("src", "target")
     val (out, jobs) = jobsOf(GraphOps.connectedComponents(edges))
-    // the symmetric view's checkpoint (its shuffle map stage and result
-    // stage) plus the union-find task; the loop ran about 30
-    assert(jobs <= 3, s"connectedComponents ran $jobs jobs")
+    // the edge leaf's checkpoint plus the union-find task; the symmetric
+    // distinct view (a map stage and a result stage) is not built, and
+    // the loop ran about 30
+    assert(jobs <= 2, s"connectedComponents ran $jobs jobs")
     assert(out.collect().toSet == Set(Row("a", "a"), Row("b", "a"), Row("c", "a"),
       Row("x", "x"), Row("y", "x"), Row("p", "p"), Row("q", "p"), Row("r", "p")))
+  }
+
+  test("law: union-find over the edge leaf == the loop with duplicate edges and mixed Int/Long ids") {
+    // string graphs with every other edge repeated and some mirrored
+    graphs(53, 12, dag = false).foreach { es0 =>
+      val es = es0 ++ es0.zipWithIndex.collect {
+        case (e, i) if i % 2 == 0 => if (i % 4 == 0) e else e.swap }
+      val edges = es.toDF("src", "target")
+      assert(collectReleased(GraphOps.connectedComponents(edges)).toSet ==
+        withLoopRows1(collectReleased(GraphOps.connectedComponents(edges)).toSet), s"edges $es")
+    }
+    val rnd = new scala.util.Random(29)
+    (1 to 4).foreach { g =>
+      val es = (1 to 10 + rnd.nextInt(30)).flatMap { _ =>
+        val a: java.lang.Integer = rnd.nextInt(20) - 10
+        val b: java.lang.Long = rnd.nextInt(20) - 10L
+        val e = rnd.nextInt(10) match {
+          case 0 => (a, java.lang.Long.valueOf(a.longValue)) // a self-loop across the types
+          case 1 if g % 2 == 0 => (a, null: java.lang.Long)
+          case 2 if g % 2 == 0 => (null: java.lang.Integer, b)
+          case _ => (a, b)
+        }
+        Seq.fill(1 + rnd.nextInt(2))(e)
+      }
+      val edges = es.toDF("src", "target")
+      val cc = GraphOps.connectedComponents(edges)
+      assert(cc.schema("node_id").dataType == org.apache.spark.sql.types.LongType)
+      val uf = collectReleased(cc).toSet
+      assert(uf == withLoopRows1(collectReleased(GraphOps.connectedComponents(edges)).toSet),
+        s"edges $es")
+      // 1: Int and 1L are one node
+      val nodes = uf.toSeq.filterNot(_.isNullAt(0)).map(_.getLong(0))
+      assert(nodes.size == nodes.distinct.size &&
+        nodes.toSet == es.flatMap(e => Seq[Any](e._1, e._2)).filter(_ != null)
+          .map(_.toString.toLong).toSet, s"edges $es")
+    }
+  }
+
+  test("regime boundary: 2 x edge rows above the loop-partition budget runs the loop, at it union-find") {
+    // distinct edges, none mirrored and no self-loop: the symmetric view
+    // has exactly 2 x 6 rows
+    val chain = (0 until 6).map(i => (s"n$i", s"n${i + 1}")).toDF("src", "target")
+    def run(budget: Int): (Set[Row], Int) = {
+      spark.conf.set("graft.loop.rowsPerPartition", budget.toString)
+      try {
+        val (cc, jobs) = jobsOf(GraphOps.connectedComponents(chain))
+        (collectReleased(cc).toSet, jobs)
+      } finally spark.conf.unset("graft.loop.rowsPerPartition")
+    }
+    val (atBudget, ufJobs) = run(12)
+    val (above, loopJobs) = run(11)
+    assert(ufJobs <= 2, s"at the budget: $ufJobs jobs")
+    // the symmetric view and the loop's rounds
+    assert(loopJobs > ufJobs + 2, s"above the budget: $loopJobs jobs")
+    assert(atBudget == above && atBudget == (0 to 6).map(i => Row(s"n$i", "n0")).toSet)
+  }
+
+  /** The executed plan of a noop write of `df` and the jobs it ran. */
+  private def noopWrite(df: DataFrame): (SparkPlan, Int) = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val l = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    try {
+      val (_, jobs) = jobsOf(df.write.format("noop").mode("overwrite").save())
+      assert(plans.size == 1)
+      (plans.peek(), jobs)
+    } finally spark.listenerManager.unregister(l)
+  }
+
+  private def rangeExchanges(plan: SparkPlan): Seq[SparkPlan] = collect(plan) {
+    case s: ShuffleExchangeLike if s.outputPartitioning.isInstanceOf[RangePartitioning] => s
+  }
+
+  test("a small graph's components sort in place: their leaf carries its row count") {
+    val edges = Seq(("a", "b"), ("b", "c"), ("x", "y"), ("p", "q"), ("q", "r"))
+      .toDF("src", "target")
+    val cc = GraphOps.connectedComponents(edges)
+    assert(cc.queryExecution.optimizedPlan.stats.rowCount.contains(BigInt(8)))
+    val (plan, jobs) = noopWrite(cc.orderBy("node_id"))
+    assert(rangeExchanges(plan).isEmpty && jobs == 1, s"$jobs jobs:\n$plan")
+    // below the leaf's size estimate AQE would spread it: the exchange stays
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize", "16")
+    try {
+      val (kept, _) = noopWrite(cc.orderBy("node_id"))
+      assert(rangeExchanges(kept).nonEmpty, s"expected the range exchange:\n$kept")
+    } finally spark.conf.unset("spark.sql.adaptive.coalescePartitions.minPartitionSize")
+    org.apache.spark.sql.graft.bridge.releaseCheckpoints(cc)
   }
 
   test("ancestorClosure seeds from the planned partitioning: a shuffled input runs once") {
@@ -183,15 +281,14 @@ class GraphLoopSpec extends SparkTestBase {
     assert(jobs == 0, s"loading orders ran $jobs jobs")
   }
 
-  test("q_graph_cc's builder call runs >= 9 jobs besides its table load") {
-    // the distributed ordinal plus the component step: the iterative_loops
-    // workload is q_graph_cc, and perfbench's traced run lists it as a loop
-    // gate (its report threshold, 10 builder jobs, still counts the schema
-    // job the table load no longer runs)
+  test("q_graph_cc's builder call runs at most 3 jobs and a noop write of the gate at most 4") {
+    // the ordinal's checkpoint (its sort in place), the edge leaf and the
+    // union-find leaf; the write sorts the small union-find leaf in place
     val dir = ccFixture
-    val (_, loadJobs) = jobsOf(Tables.load(spark, dir, "orders"))
-    val (_, jobs) = jobsOf(SparkEntry.queries("q_graph_cc")(spark, dir))
-    assert(jobs - loadJobs >= 9, s"q_graph_cc builder ran $jobs jobs, $loadJobs of them loading")
+    val (cc, jobs) = jobsOf(SparkEntry.queries("q_graph_cc")(spark, dir))
+    assert(jobs <= 3, s"q_graph_cc builder ran $jobs jobs")
+    val (_, writeJobs) = jobsOf(cc.write.format("noop").mode("overwrite").save())
+    assert(jobs + writeJobs <= 4, s"q_graph_cc ran $jobs + $writeJobs jobs")
   }
 
   test("law: bfsLevels equals a queue BFS (minimal level) on multi-partition layouts") {

@@ -1,0 +1,135 @@
+package graft
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
+import graft.core.XDF
+import graft.sources.ParquetIO
+
+/** The distributed ordinals (`XDF.globalOrdinal`, `scanOrdinal` and the
+  * operators built on them) number rows as `row_number()` over a global
+  * window would, in one checkpoint job for a one-file input, a counts job
+  * more for a multi-partition one, and with no broadcast job. */
+class OrdinalSpec extends SparkTestBase {
+
+  /** 60 rows: `k` in 0..6 with repeats (ties) and nulls, `s` unique. */
+  private def rows: DataFrame = spark.range(60).select(
+    when(col("id") % 9 === 4, lit(null)).otherwise((col("id") * 13) % 7).as("k"),
+    concat(lit("s"), lpad(col("id").cast("string"), 2, "0")).as("s"))
+
+  private def table(name: String, files: Int): String = {
+    val p = s"${graft.core.TempDirs.scratch("graft_ordinal")}/$name"
+    rows.repartition(files).write.parquet(p)
+    p
+  }
+
+  private lazy val oneFile = table("one", 1)
+  private lazy val threeFiles = table("three", 3)
+  private def read(p: String): DataFrame = ParquetIO.read(spark, p)
+
+  private def coalescingOff[A](body: => A): A = {
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    try body finally spark.conf.unset("spark.sql.adaptive.coalescePartitions.enabled")
+  }
+
+  /** (sort keys, ordinal) pairs, the part of a numbering that ties leave
+    * determined, in ordinal order. */
+  private def numbered(df: DataFrame, keys: Seq[String], ord: String): Seq[Row] =
+    df.select((keys :+ ord).map(col): _*).orderBy(ord).collect().toSeq
+
+  private def rowNumber(df: DataFrame, order: Seq[Column], ord: String): DataFrame =
+    df.withColumn(ord, row_number().over(Window.orderBy(order: _*)).cast("long"))
+
+  test("law: globalOrdinal equals row_number() over the same order") {
+    val orders = Seq(Seq(col("k")), Seq(col("k").desc_nulls_last), Seq(col("k"), col("s").desc))
+    for ((input, label) <- Seq(
+           (() => read(threeFiles), "3 files, coalescing off"),
+           (() => read(oneFile), "1 file"),
+           (() => read(oneFile).filter(col("k") > 100), "empty"));
+         order <- orders) {
+      val keys = Seq("k", "s")
+      val want = numbered(rowNumber(input(), order, "rn"), keys, "rn")
+      val got = coalescingOff(numbered(XDF.globalOrdinal(input(), order, "rn"), keys, "rn"))
+      if (order.size == 1) // ties: only (k, rn) is determined
+        assert(got.map(r => (r.get(0), r.get(2))) == want.map(r => (r.get(0), r.get(2))),
+          s"$label, $order")
+      else assert(got == want, s"$label, $order")
+      assert(got.map(_.getLong(2)) == (1L to want.size.toLong), s"$label, $order")
+    }
+  }
+
+  test("globalOrdinalWithCount's count equals count()") {
+    for (input <- Seq(read(threeFiles), read(oneFile), read(oneFile).filter(col("k") > 100))) {
+      val (_, n) = coalescingOff(XDF.globalOrdinalWithCount(input, Seq(col("k")), "rn"))
+      assert(n == input.count())
+    }
+  }
+
+  test("scanOrdinal keeps file order, 0-based or from a base") {
+    for (input <- Seq(read(threeFiles), read(oneFile))) {
+      val want = input.collect().toSeq
+      val got = XDF.scanOrdinal(input, "i").orderBy("i").collect().toSeq
+      assert(got.map(r => Row(r.get(0), r.get(1))) == want)
+      assert(got.map(_.getLong(2)) == want.indices.map(_.toLong))
+      assert(XDF.scanOrdinal(input, "i", base = 5L).agg(min("i")).head().getLong(0) == 5L)
+    }
+  }
+
+  test("addSeqNum, concatAsCols and windowAggregate number rows as the global window does") {
+    coalescingOff {
+      val d = read(threeFiles)
+      val seq = XDF(d).addSeqNum("sno", Seq("s")).toDF
+      assert(seq.columns.head == "sno")
+      assert(numbered(seq, Seq("s"), "sno").map(r => (r.getString(0), r.getInt(1).toLong)) ==
+        numbered(rowNumber(d, Seq(col("s")), "sno"), Seq("s"), "sno")
+          .map(r => (r.getString(0), r.getLong(1))))
+      // s ascending zips against s descending
+      val zipped = XDF(d.select("s")).concatAsCols(
+        XDF(d.select(col("s").as("t"))), Seq("s"), Seq("-t")).toDF.collect()
+        .map(r => r.getString(0) -> r.getString(1)).toMap
+      val ss = d.select("s").collect().map(_.getString(0)).sorted
+      assert(zipped == ss.zip(ss.reverse).toMap)
+      // windows of 2 consecutive distinct k values (nulls excluded)
+      val ks = d.select("k").collect().filterNot(_.isNullAt(0)).map(_.getLong(0))
+      val want = ks.distinct.map(_.toString).sorted.grouped(2).map { w =>
+        (s"${w.head} - ${w.last}", ks.count(k => w.contains(k.toString)).toLong)
+      }.toSet
+      val got = graft.core.WindowOps.windowAggregate(d, "k", Seq("k"), Seq("count"), 2)
+        .collect().map(r => (r.getString(0), r.getLong(1))).toSet
+      assert(got == want)
+    }
+  }
+
+  /** Jobs run, and whether any ran a broadcast exchange, while `body` runs. */
+  private def jobScopes[A](body: => A): (A, Int, Boolean) = {
+    val scopes = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        e.stageInfos.foreach(_.rddInfos.foreach(_.scope.foreach(s => scopes.add(s.name))))
+    }
+    sc.addSparkListener(l)
+    try {
+      val (out, jobs) = jobsOf(body)
+      (out, jobs, scopes.stream().anyMatch(_.contains("BroadcastExchange")))
+    } finally sc.removeSparkListener(l)
+  }
+
+  test("job laws: one job for a one-file input; no broadcast job; a counts job above one partition") {
+    val (_, one, b1) = jobScopes(XDF.globalOrdinal(read(oneFile), Seq(col("k")), "rn"))
+    // the sort runs in place inside the checkpoint job
+    assert(one == 1, s"one-file input ran $one jobs")
+    val (_, empty, b0) = jobScopes(
+      XDF.globalOrdinal(read(oneFile).filter(col("k") > 100), Seq(col("k")), "rn"))
+    assert(empty == 1, s"empty input ran $empty jobs")
+    // the range sample, its map stage, the checkpoint and one counts job
+    // (offsets joined by broadcast took 6: a counts aggregate's map stage
+    // and result and the broadcast, for the one counts job)
+    val (_, multi, b3) = coalescingOff(jobScopes(
+      XDF.globalOrdinal(read(threeFiles), Seq(col("k")), "rn")))
+    assert(multi <= 4, s"3-file input ran $multi jobs")
+    val (_, scan, bs) = jobScopes(XDF.scanOrdinal(read(threeFiles), "i"))
+    assert(scan == 2, s"scanOrdinal over 3 files ran $scan jobs")
+    assert(!(b1 || b0 || b3 || bs), "an ordinal ran a BroadcastExchange job")
+  }
+}
