@@ -281,7 +281,7 @@ class GraphLoopSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     assert(jobs == 0, s"loading orders ran $jobs jobs")
   }
 
-  test("q_graph_cc's builder call runs at most 3 jobs and a noop write of the gate at most 4") {
+  test("q_graph_cc's builder call runs <= 3 jobs and a noop write of the gate <= 4") {
     // the ordinal's checkpoint (its sort in place), the edge leaf and the
     // union-find leaf; the write sorts the small union-find leaf in place
     val dir = ccFixture
