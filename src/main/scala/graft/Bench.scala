@@ -142,8 +142,9 @@ object Bench {
         .sortBy(_._1).map { case (name, fn) =>
         val m0 = (memSpill.get, diskSpill.get, shufWrite.get, shufRead.get)
         val t0 = System.nanoTime()
-        // scoped: the query's operator persists are released when (and
-        // only when) ITS action finishes — never another query's
+        // scoped: the query's operator persists and checkpoint leaves are
+        // released when (and only when) ITS action finishes — never
+        // another query's
         val n = try graft.core.Caches.scoped { fn(spark, sfDir).count() } catch {
           case e: Throwable =>
             System.err.println(s"[bench] $name FAILED: ${e.getMessage.take(200)}")

@@ -131,12 +131,7 @@ object ParityQueries {
       val edges = rn.filter(col("rn") % 4 =!= 0)
         .select(lpad(col("rn").cast(StringType), 10, "0").as("src"),
           lpad((col("rn") + 1).cast(StringType), 10, "0").as("target"))
-      val cc = GraphOps.connectedComponents(edges)
-      // CC has materialized its own leaves: the ordinal's checkpoint
-      // blocks would otherwise stay pinned until a GC lets Spark's
-      // ContextCleaner find them
-      org.apache.spark.sql.graft.bridge.releaseCheckpoints(rn)
-      cc.orderBy("node_id")
+      GraphOps.connectedComponents(edges).orderBy("node_id")
     }),
 
     // ===== date-partitioned write + pruned scan =====

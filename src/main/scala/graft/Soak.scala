@@ -149,12 +149,8 @@ object Soak {
               if (isBatch &&
                   spark.conf.get("spark.sql.shuffle.partitions") != DriverParts)
                 confAnomalies.incrementAndGet()
-              // a finished frame's checkpoint blocks are freed the way a
-              // service frees them once it is done with a result (graph
-              // results are checkpoint leaves; no cache scope owns them)
-              val df = qs(g)(spark, sfDir)
-              val n = try df.count()
-                finally org.apache.spark.sql.graft.bridge.releaseCheckpoints(df)
+              // the scope's exit frees the gate's checkpoint leaves too
+              val n = qs(g)(spark, sfDir).count()
               if (isBatch &&
                   spark.conf.get("spark.sql.shuffle.partitions") != DriverParts)
                 confAnomalies.incrementAndGet()

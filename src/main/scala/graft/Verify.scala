@@ -29,8 +29,8 @@ object Verify {
         case _ => _ => true
       }
     SparkEntry.queries.filter(p => nameFilter(p._1)).foreach { case (name, fn) =>
-      // scoped: schema-inference / gram caches are per-query scratch,
-      // freed exactly when this query's write finishes
+      // scoped: schema-inference / gram caches and checkpoint leaves are
+      // per-query scratch, freed exactly when this query's write finishes
       try graft.core.Caches.scoped {
         // coalesce(1) keeps outputs tidy at driver scale (sf0.01); at the
         // big-fixture sweeps (sf10/sf100) it would single-thread a

@@ -88,7 +88,7 @@ object Reshape {
    * drops any key that only appears in the second invocation's results
    * (non-idempotent remote data, paging drift). Here at most ONE
    * SUCCESSFUL generator invocation per row is used: the produced maps
-   * materialize into a lineage-truncated intermediate (`localCheckpoint`),
+   * materialize into a lineage-truncated intermediate (a local checkpoint),
    * output keys derive from that materialized data, and the fan-out
    * projects from it. The eager fetch job itself is still a Spark job,
    * so task retries (`spark.task.maxFailures`) or speculation can
@@ -104,11 +104,12 @@ object Reshape {
    * the right failure mode for non-idempotent remote calls.
    *
    * Retention: the checkpointed intermediate (kryo-serialized kept
-   * columns + fetched maps) stays pinned in block-manager memory/disk
-   * until the returned plan becomes unreachable and ContextCleaner GCs
-   * it. Long-lived sessions issuing many fan-outs should use
-   * [[explodeMapsFetchedReleasable]] and call the release handle once the
-   * result is materialized (written / collected / checkpointed onward).
+   * columns + fetched maps) is a checkpoint leaf (`bridge.checkpointLeaf`):
+   * inside a query scope ([[Caches.scoped]]) it is freed at the scope's
+   * exit, so materialize the result (write / collect / checkpoint onward)
+   * inside it; outside any scope it stays pinned in block-manager
+   * memory/disk until the returned plan becomes unreachable and
+   * ContextCleaner GCs it.
    * For pure in-memory generators prefer [[explodeMaps]] (no
    * materialization) or [[explodeRows]] (declared schema, single pass).
    */
@@ -116,27 +117,15 @@ object Reshape {
                          f: Map[String, String] => Seq[Map[String, String]],
                          prefix: String, collapse: Boolean = true,
                          maxKeys: Int = 10000,
-                         strictOnce: Boolean = false): DataFrame =
-    explodeMapsFetchedReleasable(
-      df, cols, f, prefix, collapse, maxKeys, strictOnce)._1
-
-  /** [[explodeMapsFetched]] plus a release handle that unpersists the
-   * checkpointed fetch intermediate. Call it AFTER materializing the
-   * returned DataFrame (the result's lineage reads the checkpointed
-   * blocks; releasing first makes later actions fail). */
-  def explodeMapsFetchedReleasable(
-      df: DataFrame, cols: Seq[String],
-      f: Map[String, String] => Seq[Map[String, String]],
-      prefix: String, collapse: Boolean = true,
-      maxKeys: Int = 10000,
-      strictOnce: Boolean = false): (DataFrame, () => Unit) = {
+                         strictOnce: Boolean = false): DataFrame = {
     val inCols = cols
     def rowToMap(r: Row): Map[String, String] =
       inCols.map(c =>
         c -> Option(r.get(r.fieldIndex(c))).map(_.toString).getOrElse("")).toMap
     val keep = if (collapse) df.columns.filterNot(inCols.contains).toSeq
                else df.columns.toSeq
-    val fetched = df.map { r =>
+    val enc = Encoders.kryo[(Seq[Any], Seq[Map[String, String]])]
+    val fetchedRows = df.map { r =>
       // strictOnce: a retried/speculative fetch task would re-invoke the
       // generator for every row of a partition the failed attempt may
       // have already partially fetched — fail fast instead, BEFORE any
@@ -158,8 +147,10 @@ object Reshape {
               "only if the remote side tolerates duplicate fetches.")
       }
       (keep.map(c => r.get(r.fieldIndex(c))), f(rowToMap(r)))
-    }(Encoders.kryo[(Seq[Any], Seq[Map[String, String]])])
-      .localCheckpoint() // eager: the ONLY generator run, lineage cut here
+    }(enc)
+    // eager: the ONLY generator run, lineage cut here
+    val fetched = org.apache.spark.sql.graft.bridge.checkpointLeaf(fetchedRows.toDF(),
+      reliable = false).as(enc)
     val discovered = fetched
       .flatMap(_._2.iterator.flatMap(_.keys))(Encoders.STRING)
       .distinct().limit(maxKeys + 1).collect()
@@ -173,10 +164,9 @@ object Reshape {
     val outSchema = StructType(
       keep.map(c => df.schema(c)) ++
         keys.map(k => StructField(s"$prefix:$k", StringType)))
-    val out = fetched.flatMap { case (kept, maps) =>
+    fetched.flatMap { case (kept, maps) =>
       maps.map(m => Row.fromSeq(kept ++ keys.map(k => m.getOrElse(k, ""))))
     }(Encoders.row(outSchema))
-    (out, () => org.apache.spark.sql.graft.bridge.releaseCheckpoints(fetched))
   }
 
   /** Split N string cols by `sep` into aligned row fan-out

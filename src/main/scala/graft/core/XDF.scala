@@ -592,51 +592,29 @@ case class XDF(df: DataFrame) {
     * bounded per entity by contract). The reference's GLOBAL running sum
     * (empty partitionCols) does NOT use an unpartitioned window — that
     * moves the whole table through one task. It runs as a distributed
-    * prefix sum: range-partition in `orderCols` order, per-partition
-    * running sums (a window keyed by the BOUNDED spark_partition_id, one
-    * task per physical partition), and broadcast per-partition offsets —
-    * the textbook scan parallelization. Null handling matches the window
-    * exactly: a row's total is null iff no non-null value precedes it.
-    * The sorted frame is localCheckpoint'ed so the offsets job and the
-    * output job see identical partition memberships. */
+    * prefix scan ([[XDF.prefixScan]]): the globally sorted frame is one
+    * checkpoint leaf (sorted in place when small), a running window runs
+    * within each of its partitions, and each partition adds the sum and
+    * the value count of the partitions before it. Null handling matches
+    * the window exactly: a row's total is null iff no castable value
+    * precedes it. */
   def cumulativeSum(c: String, newCol: String, orderCols: Seq[String],
                     partitionCols: Seq[String] = Nil): XDF = {
+    val v = col(c).cast(DoubleType)
     if (partitionCols.nonEmpty) {
       val w = Window.partitionBy(partitionCols.map(col): _*)
         .orderBy(orderCols.map(col): _*)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      transform(newCol, sum(col(c).cast(DoubleType)).over(w))
+      transform(newCol, sum(v).over(w))
     } else {
-      val spark = df.sparkSession
-      val sorted = df.repartitionByRange(orderCols.map(col): _*)
-        .sortWithinPartitions(orderCols.map(col): _*)
-        .withColumn("__pid__", spark_partition_id())
-        .localCheckpoint()
-      val totals = sorted.groupBy(col("__pid__"))
-        .agg(sum(col(c).cast(DoubleType)).as("__t__"),
-          count(col(c).cast(DoubleType)).as("__n__"))
-        .collect()
-        .map(r => r.getInt(0) ->
-          ((if (r.isNullAt(1)) 0.0 else r.getDouble(1)), r.getLong(2)))
-        .toMap
-      val pids = totals.keys.toSeq.sorted
-      val offs = pids.zip(pids.scanLeft((0.0, 0L)) { case ((s, n), p) =>
-        (s + totals(p)._1, n + totals(p)._2) }).toMap
-      import spark.implicits._
-      val offsDf = pids.map(p => (p, offs(p)._1, offs(p)._2))
-        .toDF("__pid__", "__off__", "__offn__")
-      val w = Window.partitionBy(col("__pid__"))
-        .orderBy(orderCols.map(col): _*)
+      val scan = XDF.prefixScan(df.orderBy(orderCols.map(col): _*), v)
+      val w = Window.partitionBy(col("__part__")).orderBy(col("__mid__"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val localSum = sum(col(c).cast(DoubleType)).over(w)
-      // Count the CAST column: a non-null string whose double cast is null
-      // must not count as "a value preceded", matching the window branch.
-      val localCnt = count(col(c).cast(DoubleType)).over(w)
-      XDF(sorted.join(broadcast(offsDf), Seq("__pid__"), "left")
-        .withColumn(newCol,
-          when(coalesce(col("__offn__"), lit(0L)) + localCnt > 0,
-            coalesce(col("__off__"), lit(0.0)) + coalesce(localSum, lit(0.0))))
-        .drop("__pid__", "__off__", "__offn__"))
+      // count the CAST column: a non-null string whose double cast is null
+      // must not count as "a value preceded", matching the window branch
+      XDF(scan.leaf.withColumn(newCol, when(scan.countBefore + count(v).over(w) > 0,
+          scan.sumBefore + coalesce(sum(v).over(w), lit(0.0))))
+        .drop("__mid__", "__part__"))
     }
   }
 
@@ -1038,36 +1016,57 @@ object XDF {
 
   /** Partition-major (scan-order) ordinal from `base`, plus the row count,
     * without any shuffle or RDD hop — the Tungsten-native `zipWithIndex`:
-    * within a partition `monotonically_increasing_id` encodes the
-    * partition in its high bits and the local position in its low 33.
-    * The marked frame is MATERIALIZED as one checkpoint leaf, its row
-    * count observed in the same job: offsets read off a re-planned frame
-    * could see other partition memberships (range sampling, AQE
-    * coalescing) and corrupt the ranks. On a one-partition leaf the rank
-    * is the position, and the leaf's job is the only one. On more, one
-    * job counts each partition's rows and the offsets are a literal array
-    * indexed by partition — a map-side lookup, no join and no broadcast. */
+    * the rank is the row's position in its [[prefixScan]] partition plus
+    * the rows of the partitions before it. */
   private[graft] def scanOrdinalWithCount(d: DataFrame, outCol: String,
                                           base: Long = 0L): (DataFrame, Long) = {
-    val observed = d.withColumn("__mid__", monotonically_increasing_id())
-      .observe("__ordinal_rows__", count(lit(1)).as("rows"))
-    val marked = org.apache.spark.sql.graft.bridge.checkpointLeaf(observed, reliable = false)
-    val rows = observed.queryExecution.observedMetrics.get("__ordinal_rows__")
-      .map(_.getLong(0)).getOrElse(throw new IllegalStateException(
-        "scanOrdinal: the row count was not observed during the checkpoint job"))
-    val pid = shiftright(col("__mid__"), 33).cast("int")
+    val scan = prefixScan(d, lit(0.0))
+    // within a partition `monotonically_increasing_id` is the position in
+    // the low 33 bits
     val pos = col("__mid__").bitwiseAND(lit((1L << 33) - 1))
-    val rank =
-      if (rows == 0 || marked.queryExecution.toRdd.getNumPartitions <= 1) pos
+    (scan.leaf.withColumn(outCol, scan.countBefore + pos + lit(base)).drop("__mid__", "__part__"),
+      scan.rows)
+  }
+
+  /** A [[prefixScan]]: the marked leaf, its row count, and per row how
+    * many rows of the partitions before its own have a non-null `v`, and
+    * the sum of those values. */
+  private case class PrefixScan(leaf: DataFrame, rows: Long,
+                                countBefore: Column, sumBefore: Column)
+
+  /** The scan shape the ordinal and the global running sum share. `d`,
+    * marked with its scan order `__mid__` (`monotonically_increasing_id`)
+    * and partition `__part__`, is MATERIALIZED as one checkpoint leaf, its
+    * row count observed in the same job: offsets read off a re-planned
+    * frame could see other partition memberships (range sampling, AQE
+    * coalescing) and corrupt the scan. On one partition the offsets are 0,
+    * the leaf's job is the only one, and the leaf declares its
+    * one-partition layout, so a window by `__part__` plans no exchange.
+    * On more, one job folds each partition's (count, sum), and the
+    * offsets are literal arrays indexed by partition — a map-side lookup,
+    * no join and no broadcast. */
+  private def prefixScan(d: DataFrame, v: Column): PrefixScan = {
+    val observed = d.withColumn("__mid__", monotonically_increasing_id())
+      .withColumn("__part__", spark_partition_id())
+      .observe("__scan_rows__", count(lit(1)).as("rows"))
+    val marked = org.apache.spark.sql.graft.bridge.checkpointLeaf(
+      observed, reliable = false, Seq("__part__"))
+    val rows = observed.queryExecution.observedMetrics.get("__scan_rows__")
+      .map(_.getLong(0)).getOrElse(throw new IllegalStateException(
+        "prefixScan: the row count was not observed during the checkpoint job"))
+    val (countBefore, sumBefore) =
+      if (rows == 0 || marked.queryExecution.toRdd.getNumPartitions <= 1) (lit(0L), lit(0.0))
       else {
-        val counts = d.sparkSession.sparkContext.runJob(marked.select(pid).queryExecution.toRdd,
+        // one (count, sum) per partition, in partition order: a narrow
+        // projection of the leaf keeps its partitions
+        val totals = d.sparkSession.sparkContext.runJob(marked.select(v).queryExecution.toRdd,
           (it: Iterator[org.apache.spark.sql.catalyst.InternalRow]) =>
-            it.foldLeft(Map.empty[Int, Long]) { (m, r) =>
-              val p = r.getInt(0); m.updated(p, m.getOrElse(p, 0L) + 1) }).flatten.toMap
-        val offsets = (0 to counts.keys.max).scanLeft(0L)((acc, p) => acc + counts.getOrElse(p, 0L))
-        lit(offsets.init.toArray)(pid) + pos
+            it.foldLeft((0L, 0.0)) { case (acc @ (n, s), r) =>
+              if (r.isNullAt(0)) acc else (n + 1, s + r.getDouble(0)) })
+        val before = totals.scanLeft((0L, 0.0)) { case ((n, s), (pn, ps)) => (n + pn, s + ps) }.init
+        (lit(before.map(_._1))(col("__part__")), lit(before.map(_._2))(col("__part__")))
       }
-    (marked.withColumn(outCol, rank + lit(base)).drop("__mid__"), rows)
+    PrefixScan(marked, rows, countBefore, sumBefore)
   }
 
   /** A parquet table as an XDF, through `sources.ParquetIO.read`: the

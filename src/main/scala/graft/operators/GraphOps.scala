@@ -140,14 +140,17 @@ object GraphOps {
    * frame's), and when the loop keeps a `layout` the leaf is declared
    * hash(`layout`, that size), so the next round's joins on it plan no
    * exchange. Persists a round tracks in [[graft.core.Caches]] are
-   * released once its leaf is materialized.
+   * released once its leaf is materialized; the leaf itself belongs to the
+   * caller's query scope, which frees every leaf left at its exit, also
+   * after an exhaustion throw.
    *
    * Release. A released local checkpoint cannot recompute, so only frames
-   * nothing still reads are released. Without `keep` the state the new
-   * leaf supersedes is released every round (else maxIter copies pin
-   * block-manager memory). With `keep` the result reads every round's
-   * leaf (a union over them), so all are kept and returned, except an
-   * empty last leaf, which nothing reads. `reads` are the frames every
+   * nothing still reads are released here, early, before the query's
+   * action. Without `keep` the state the new leaf supersedes is released
+   * every round (else maxIter copies pin block-manager memory). With
+   * `keep` the result reads every round's leaf (a union over them), so
+   * all are kept and returned, except an empty last leaf, which nothing
+   * reads. `reads` are the frames every
    * round reads (loop-invariant edge leaves): never released as state,
    * and released after the loop unless the result is one of them.
    * Returns the live states: all kept ones with `keep`, else the last.
@@ -165,7 +168,7 @@ object GraphOps {
     try {
       while (i < maxIter && !done) {
         val n = size(states.last, prevRows)
-        val (leaf, Seq(d, r)) = graft.core.Caches.scoped {
+        val (leaf, Seq(d, r)) = graft.core.Caches.persistScoped {
           val (frame, delta) = round(states, n)
           chk(frame, reliable, Seq(delta, count(lit(1))), layout, Some(n))
         }
@@ -503,7 +506,7 @@ object GraphOps {
       // labels still moving at exhaustion are not yet proof of failure:
       // would one more round lower any label? Only then throw. Cost: one
       // extra job, only on exhaustion.
-      exhausted = labels => if (graft.core.Caches.scoped(
+      exhausted = labels => if (graft.core.Caches.persistScoped(
           propagate(labels).filter(col("__chg__")).limit(1).count() > 0))
         throw new IllegalStateException(
           s"connectedComponents did not converge in $maxIter rounds " +

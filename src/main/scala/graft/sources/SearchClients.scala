@@ -432,8 +432,8 @@ private[sources] object SearchProto {
       val schema = StructType(cols.map(c => StructField(c, StringType)))
       val rows = cached.rdd.map(m => Row.fromSeq(cols.map(c => m.getOrElse(c, ""))))
       // materialize before unpersist: createDataFrame is lazy
-      val out = spark.createDataFrame(rows, schema).localCheckpoint()
-      out
+      org.apache.spark.sql.graft.bridge.checkpointLeaf(
+        spark.createDataFrame(rows, schema), reliable = false)
     } finally cached.unpersist(false)
   }
 

@@ -10,14 +10,15 @@ import java.util.concurrent.atomic.AtomicInteger
   * HEALTHY side in the large: across many fan-outs in one long-lived
   * session, the guard never trips spuriously (no false-positive
   * IllegalStateException on first-attempt tasks), the generator runs
-  * EXACTLY once per input row per fan-out (the eager localCheckpoint is
+  * EXACTLY once per input row per fan-out (the eager local checkpoint is
   * the only generator run — lazy re-execution would double-invoke), and
-  * the Releasable handle returns the session to zero persisted blocks so
-  * a service issuing thousands of fan-outs does not accrete checkpoint
-  * residue.
+  * each fan-out's query scope returns the session to zero persisted
+  * blocks at its exit, so a service issuing thousands of fan-outs does
+  * not accrete checkpoint residue.
   *
-  * Per iteration: fan out `documents` (doc_id, lang, n_chars) 3-ways via
-  * explodeMapsFetchedReleasable(strictOnce = true), count, then release.
+  * Per iteration, inside one `Caches.scoped`: fan out `documents`
+  * (doc_id, lang, n_chars) 3-ways via explodeMapsFetched(strictOnce =
+  * true) and count.
   * Invocation counters (static — local mode shares the JVM) assert
   * per-row fetch count == 1 and total invocations == input rows, every
   * iteration. At the end the session must hold zero persisted RDDs.
@@ -71,18 +72,17 @@ object StrictOnceSoak extends Serializable {
       while (it < iters) {
         it += 1
         counts.clear()
-        val (out, release) = graft.core.Reshape.explodeMapsFetchedReleasable(
-          docs, Seq("doc_id", "lang", "n_chars"), gen, prefix = "f",
-          collapse = false, strictOnce = true)
-        try {
-          val n = out.count()
-          if (n != expected * 3 || total != expected || maxCount != 1) {
-            exactnessViolations += 1
-            System.err.println(s"[strict-soak] iter $it EXACTNESS violation:" +
-              s" rows=$n (want ${expected * 3}) invocations=$total " +
-              s"(want $expected) maxPerRow=$maxCount (want 1)")
-          }
-        } finally release()
+        val n = graft.core.Caches.scoped {
+          graft.core.Reshape.explodeMapsFetched(
+            docs, Seq("doc_id", "lang", "n_chars"), gen, prefix = "f",
+            collapse = false, strictOnce = true).count()
+        }
+        if (n != expected * 3 || total != expected || maxCount != 1) {
+          exactnessViolations += 1
+          System.err.println(s"[strict-soak] iter $it EXACTNESS violation:" +
+            s" rows=$n (want ${expected * 3}) invocations=$total " +
+            s"(want $expected) maxPerRow=$maxCount (want 1)")
+        }
         if (it % 10 == 0)
           System.err.println(s"[strict-soak] $it/$iters fan-outs, " +
             s"violations=$exactnessViolations, trips=$spuriousTrips")
@@ -107,7 +107,7 @@ object StrictOnceSoak extends Serializable {
         s"""documents table in one session; asserts zero spurious """ +
         s"""guard trips, exactly-once generator invocation per row per """ +
         s"""fan-out (counter-verified), and zero persisted blocks """ +
-        s"""after the release handles","sf_dir":"$sfDir",""" +
+        s"""after each fan-out's query scope","sf_dir":"$sfDir",""" +
         s""""iterations":$it,"rows_per_fanout":$expected,""" +
         s""""fanout_rows_out":${expected * 3},"wall_sec":$wallSec,""" +
         s""""spurious_trips":$spuriousTrips,""" +

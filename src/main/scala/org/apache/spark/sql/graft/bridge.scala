@@ -75,7 +75,14 @@ object bridge {
     * the session conf that only the calling thread sees; the shared conf
     * is never written, so concurrent loops cannot observe each other.
     * Loop lineages self-join earlier leaves, where inference only adds
-    * not-null filters; on q_graph_bfs it also costs one more AQE job. */
+    * not-null filters; on q_graph_bfs it also costs one more AQE job.
+    *
+    * Lifetime: the leaf's RDD is registered with the query scope open on
+    * the calling thread (`graft.core.Caches.scoped`), whose exit
+    * unpersists it, normally or after a throw; read the leaf inside that
+    * scope. With no query scope open nothing is registered, and Spark's
+    * ContextCleaner frees the blocks once the leaf is garbage-collected
+    * (or [[releaseCheckpoints]] frees them earlier). */
   def checkpointLeaf(df: org.apache.spark.sql.DataFrame, reliable: Boolean,
                      hashOn: Seq[String] = Nil,
                      numPartitions: Option[Int] = None): org.apache.spark.sql.DataFrame = {
@@ -90,6 +97,7 @@ object bridge {
         qe.executedPlan.resetMetrics()
         val rows = qe.executedPlan.execute().map(_.copy())
         if (reliable) rows.checkpoint() else rows.localCheckpoint()
+        _root_.graft.core.Caches.trackLeaf(rows) // before the job: a failed job's blocks go too
         rows.doCheckpoint() // the final job: computes and stores every partition
         rows
       }

@@ -132,4 +132,35 @@ class OrdinalSpec extends SparkTestBase {
     assert(scan == 2, s"scanOrdinal over 3 files ran $scan jobs")
     assert(!(b1 || b0 || b3 || bs), "an ordinal ran a BroadcastExchange job")
   }
+
+  test("law: cumulativeSum without partition columns equals the global running window") {
+    // values: halves (exact in binary, so no summation order can differ),
+    // nulls, and strings whose double cast is null (with ANSI on, the cast
+    // throws in both)
+    val v = when(col("id") % 5 === 1, lit(null).cast("string"))
+      .when(col("id") % 7 === 3, lit("x"))
+      .otherwise((col("id") * 0.5).cast("string")).as("v")
+    val p = s"${graft.core.TempDirs.scratch("graft_cumsum")}/three"
+    spark.range(60).select(col("id"), v).repartition(3).write.parquet(p)
+    def window(df: DataFrame): DataFrame = df.withColumn("cum", sum(col("v").cast("double"))
+      .over(Window.orderBy("id").rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try for ((input, label) <- Seq(
+           (() => read(p), "3 files"),
+           (() => read(p).filter(col("id") >= 3), "no value before the first number"),
+           (() => read(p).filter(col("id") > 100), "empty"))) {
+      val want = window(input()).orderBy("id").collect().toSeq
+      val (parts, got) = coalescingOff {
+        val out = XDF(input()).cumulativeSum("v", "cum", Seq("id")).toDF
+        (out.queryExecution.toRdd.getNumPartitions, out.orderBy("id").collect().toSeq)
+      }
+      // one partition out means the one-partition path ran
+      if (label == "3 files") assert(parts > 1, "the multi-partition path did not run")
+      assert(got == want, label)
+    } finally spark.conf.unset("spark.sql.ansi.enabled")
+    // a one-file input: the sort and the window run in the leaf's one job
+    val (_, jobs) = jobsOf(XDF(read(oneFile)).cumulativeSum("k", "cum", Seq("s")).toDF
+      .write.format("noop").mode("overwrite").save())
+    assert(jobs <= 2, s"one-file cumulativeSum ran $jobs jobs")
+  }
 }
