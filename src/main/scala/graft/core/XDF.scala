@@ -597,10 +597,11 @@ case class XDF(df: DataFrame) {
     * within each of its partitions, and each partition adds the sum and
     * the value count of the partitions before it. Null handling matches
     * the window exactly: a row's total is null iff no castable value
-    * precedes it. */
+    * precedes it. A value with no double reading (a non-numeric string)
+    * counts as no value, also under ANSI casts. */
   def cumulativeSum(c: String, newCol: String, orderCols: Seq[String],
                     partitionCols: Seq[String] = Nil): XDF = {
-    val v = col(c).cast(DoubleType)
+    val v = col(c).try_cast(DoubleType)
     if (partitionCols.nonEmpty) {
       val w = Window.partitionBy(partitionCols.map(col): _*)
         .orderBy(orderCols.map(col): _*)
@@ -993,7 +994,7 @@ object XDF {
    * which moves the whole table to ONE task. A global sort gives a
    * partition-major total order, and [[scanOrdinalWithCount]] numbers it.
    * The sort's range exchange runs only where the input needs it: a
-   * small one-split input is sorted in place (`plans.SortInPlace`) inside
+   * small one-split input is sorted in place (`plans.OneJobPlan`) inside
    * the ordinal's one checkpoint job. Ties land in one range partition,
    * so tie ordering is no weaker than the global window's.
    */

@@ -11,14 +11,16 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
  *  - graft's native expressions for SQL use: after it,
  *    `spark.sql("SELECT mmh3_64(s) FROM t")` plans the codegen'd native
  *    expression, no UDF registration per session;
- *  - `SortInPlace`, an AQE query-stage preparation rule: a global sort's
- *    range exchange becomes `CoalesceExec(1)` when AQE partition
- *    coalescing is on, the sort's input is, by its logical size
- *    estimate, small enough for AQE to coalesce it into one partition
+ *  - `OneJobPlan`, an AQE query-stage preparation rule: when AQE
+ *    partition coalescing is on and the plan shows it runs as exactly one
+ *    partition end to end, with every exchange's input and every build
+ *    side small enough, by its logical size estimate, for AQE to coalesce
+ *    it into one partition
  *    (`spark.sql.adaptive.coalescePartitions.minPartitionSize` under the
- *    default `parallelismFirst`), and the plan shows it runs as exactly
- *    one partition.
- *    The sort then needs no sample job and no map-stage job.
+ *    default `parallelismFirst`), every shuffle `EnsureRequirements` put
+ *    in becomes `CoalesceExec(1)` and every broadcast hash join but a
+ *    null-aware anti join builds its hash table in the task. The query
+ *    then runs as one job: no map-stage, sample or broadcast jobs.
  */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
@@ -42,6 +44,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         case _ => throw new IllegalArgumentException(
           "mmh3_64(expr[, seed]) takes 1 or 2 arguments")
       }))
-    e.injectQueryStagePrepRule(SortInPlace)
+    e.injectQueryStagePrepRule(OneJobPlan)
   }
 }

@@ -11,7 +11,11 @@ import org.apache.spark.sql.functions.{count, lit}
   * benchmark runs it: the builder call, then a noop write of every
   * column (a `count()` would let the optimizer drop work the gate's
   * consumer pays for, such as the presentation sort), rows counted with
-  * `observe`. Not part of the driver contract.
+  * `observe`. Each gate runs three times in a row and prints its fastest
+  * wall and task time and the min-max of its jobs, stages and tasks over
+  * the three: a gate's job count can move by a job between identical
+  * runs, so a change in it is read against that spread. Not part of the
+  * driver contract.
   * Usage: runMain graft.tools.JobProfile q_graph_cc ... */
 object JobProfile {
   def main(args: Array[String]): Unit = {
@@ -60,22 +64,28 @@ object JobProfile {
       catch { case _: java.util.concurrent.TimeoutException => Thread.sleep(500) }
 
     val names = if (args.nonEmpty) args.toSeq else Seq("q_graph_cc")
-    println(f"${"gate"}%-28s ${"wall_s"}%8s ${"jobs"}%5s ${"stages"}%7s ${"tasks"}%6s ${"tasktime_s"}%10s")
+    def range(xs: Seq[Int]): String = if (xs.min == xs.max) s"${xs.min}" else s"${xs.min}-${xs.max}"
+    println(f"${"gate"}%-28s ${"wall_s"}%8s ${"jobs"}%7s ${"stages"}%7s ${"tasks"}%7s ${"tasktime_s"}%10s")
     names.foreach { name =>
-      drain()
-      val (j0, s0, t0, tt0) = (jobs.get, stages.get, tasks.get, taskTimeMs.get)
-      val w0 = System.nanoTime()
-      val n = graft.core.Caches.scoped {
-        val obs = Observation()
-        graft.SparkEntry.queries(name)(spark, sfDir)
-          .observe(obs, count(lit(1)).as("rows"))
-          .write.format("noop").mode("overwrite").save()
-        obs.get("rows")
+      val passes = (1 to 3).map { _ =>
+        drain()
+        val (j0, s0, t0, tt0) = (jobs.get, stages.get, tasks.get, taskTimeMs.get)
+        val w0 = System.nanoTime()
+        val n = graft.core.Caches.scoped {
+          val obs = Observation()
+          graft.SparkEntry.queries(name)(spark, sfDir)
+            .observe(obs, count(lit(1)).as("rows"))
+            .write.format("noop").mode("overwrite").save()
+          obs.get("rows")
+        }
+        val wall = (System.nanoTime() - w0) / 1e9
+        graft.core.Caches.release()
+        drain()
+        (wall, jobs.get - j0, stages.get - s0, tasks.get - t0, (taskTimeMs.get - tt0) / 1e3, n)
       }
-      val wall = (System.nanoTime() - w0) / 1e9
-      graft.core.Caches.release()
-      drain()
-      println(f"$name%-28s $wall%8.2f ${jobs.get - j0}%5d ${stages.get - s0}%7d ${tasks.get - t0}%6d ${(taskTimeMs.get - tt0) / 1e3}%10.1f rows=$n")
+      println(f"$name%-28s ${passes.map(_._1).min}%8.2f ${range(passes.map(_._2))}%7s " +
+        f"${range(passes.map(_._3))}%7s ${range(passes.map(_._4))}%7s " +
+        f"${passes.map(_._5).min}%10.1f rows=${passes.head._6}")
     }
     spark.stop()
   }

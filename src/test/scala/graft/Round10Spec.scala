@@ -74,7 +74,7 @@ class Round10Spec extends SparkTestBase {
       df.collect() // finalize AQE
       val plan = unwrap(df.queryExecution.executedPlan)
       // the ONLY allowed exchange is the presentation orderBy's range
-      // partitioning (which graft.plans.SortInPlace removes when the
+      // partitioning (which graft.plans.OneJobPlan removes when the
       // sort's input is small and runs as one partition); a
       // HashPartitioning exchange means the join or the groupBy
       // re-shuffled data the buckets already co-located

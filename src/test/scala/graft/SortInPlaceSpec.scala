@@ -9,10 +9,10 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.bridge
 import graft.sources.ParquetIO
 
-/** graft.plans.SortInPlace: a global sort over a small input that runs as
-  * one partition sorts that partition in place, with no range exchange
-  * and no sample job, and returns the rows, in the order, that the range
-  * exchange's sort returns. Wherever the input runs as more than one
+/** graft.plans.OneJobPlan on global sorts: a global sort over a small
+  * input that runs as one partition sorts that partition in place, with
+  * no range exchange and no sample job, and returns the rows, in the
+  * order, that the range exchange's sort returns. Wherever the input runs as more than one
   * partition, is above the size AQE's coalescing packs into one
   * partition, or AQE coalescing is off, and for user repartitions, the
   * range exchange stays. */
@@ -190,12 +190,28 @@ class SortInPlaceSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
       df.queryExecution.executedPlan)
   }
 
-  test("a sort over a shuffle join keeps its range exchange") {
+  test("a sort over a shuffle join with a 3-split side keeps its range exchange") {
+    // the join's partition count is unknown when planned, and once its
+    // shuffle stages have run it is what AQE makes of them together, not
+    // one by one; the key columns alone keep the join small enough
     withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
-      val right = read(onePart).select(col("k").as("k2"), col("s").as("s2"))
-      val df = read(onePart).join(right, col("k") === col("k2")).orderBy("k")
+      val right = read(table("three_right", 3)).select(col("k").as("k2"))
+      val df = read(onePart).select("k").join(right, col("k") === col("k2")).orderBy("k")
       assert(df.collect().length == 39)
       assertRangeExchange(df)
+    }
+  }
+
+  test("a sort over a shuffle join of two one-split files runs in one job") {
+    // the key column alone: Spark bounds an inner join's size by the
+    // product of its sides' estimates, and whole rows put it above 1 MB
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      def joined(): DataFrame = {
+        val right = read(onePart).select(col("k").as("k2"))
+        read(onePart).select("k").join(right, col("k") === col("k2")).orderBy("k")
+      }
+      assert(sameAsRangeSort(() => joined()).length == 39)
+      assert(jobsOf(noop(joined()))._2 == 1)
     }
   }
 
