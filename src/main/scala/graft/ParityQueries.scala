@@ -123,9 +123,11 @@ object ParityQueries {
     // ===== graph: connected components over chain segments =====
     "q_graph_cc" -> ((s, dir) => {
       // chains of 4 consecutive order ranks (edge rank->rank+1 unless
-      // rank % 4 == 0); zero-padded ids so lexicographic = numeric order
-      // distributed ordinal, not row_number().over(Window.orderBy(...)) —
-      // even a fixture must not funnel the table through one task
+      // rank % 4 == 0); zero-padded ids so lexicographic = numeric order.
+      // XDF.globalOrdinal, not row_number().over(Window.orderBy(...)): the
+      // window funnels any table through one task, while the ordinal
+      // coalesces only an input that already runs as one small partition
+      // (then the scan, sort, ordinal, edges and union-find run in one task)
       val rn = graft.core.XDF.globalOrdinal(
         t(s, dir, "orders").select(col("o_orderkey")), Seq(col("o_orderkey")), "rn")
       val edges = rn.filter(col("rn") % 4 =!= 0)

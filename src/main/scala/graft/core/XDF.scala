@@ -193,9 +193,9 @@ case class XDF(df: DataFrame) {
 
   /** 1-based sequence number, prepended (dataframe.py:1707-1729).
     * Ordered by `orderCols` to be deterministic under parallelism;
-    * computed as a distributed global ordinal (a global sort + local
-    * positions + per-partition offsets, XDF.globalOrdinal) — no
-    * single-task window. */
+    * computed by XDF.globalOrdinal (a plain plan over an input that
+    * already runs as one small partition, else a global sort + local
+    * positions + per-partition offsets) — no single-task window. */
   def addSeqNum(name: String = "sno", orderCols: Seq[String]): XDF =
     XDF(XDF.globalOrdinal(df, orderCols.map(col), name)
       .withColumn(name, col(name).cast("int"))).reorder(name)
@@ -991,21 +991,38 @@ object XDF {
   /**
    * Distributed 1-based global ordinal in `sortExprs` order — the
    * scale-safe replacement for `row_number().over(Window.orderBy(...))`,
-   * which moves the whole table to ONE task. A global sort gives a
-   * partition-major total order, and [[scanOrdinalWithCount]] numbers it.
-   * The sort's range exchange runs only where the input needs it: a
-   * small one-split input is sorted in place (`plans.OneJobPlan`) inside
-   * the ordinal's one checkpoint job. Ties land in one range partition,
-   * so tie ordering is no weaker than the global window's.
+   * which moves the whole table to ONE task. Two regimes:
+   *  - the input already runs as one small partition (its global sort
+   *    passes `plans.OneJobPlan.runsAsOneTask`: AQE would coalesce the
+   *    sort's range exchange into that partition) and its plan is
+   *    deterministic: a plain plan, no job. The frame is coalesced to
+   *    one partition, sorted in it, and numbered by
+   *    `monotonically_increasing_id`, which counts the rows of partition
+   *    0 from 0. The coalesce keeps the frame one partition inside any
+   *    plan it is composed into, so a consumer that keeps its exchanges
+   *    (a join with a 3-partition frame) still reads 1..n. A
+   *    nondeterministic input (`rand()`) keeps the leaf below, so two
+   *    reads number the same rows alike;
+   *  - otherwise a global sort gives a partition-major total order, and
+   *    [[scanOrdinalWithCount]] numbers it as one checkpoint leaf (and a
+   *    counts job above one partition).
+   * In either regime ties land in one partition, so tie ordering is no
+   * weaker than the global window's.
    */
   private[graft] def globalOrdinal(d: DataFrame, sortExprs: Seq[Column],
                                    outCol: String): DataFrame =
-    globalOrdinalWithCount(d, sortExprs, outCol)._1
+    if (d.queryExecution.optimizedPlan.deterministic &&
+        graft.plans.OneJobPlan.runsAsOneTask(d.orderBy(sortExprs: _*)))
+      d.coalesce(1).sortWithinPartitions(sortExprs: _*)
+        .withColumn(outCol, monotonically_increasing_id() + lit(1L))
+    else globalOrdinalWithCount(d, sortExprs, outCol)._1
 
-  /** [[globalOrdinal]] plus the input's row count, observed during the
-    * ordinal's own checkpoint job — callers that need the cardinality
-    * anyway (zip validation, window sizing) save a whole count job over
-    * the input. */
+  /** [[globalOrdinal]]'s checkpoint regime plus the input's row count,
+    * observed during the ordinal's own checkpoint job — callers that need
+    * the cardinality anyway (zip validation, window sizing) save a whole
+    * count job over the input. The sort's range exchange runs only where
+    * the input needs it: a small one-split input is sorted in place
+    * (`plans.OneJobPlan`) inside the checkpoint job. */
   private[graft] def globalOrdinalWithCount(d: DataFrame, sortExprs: Seq[Column],
                                             outCol: String): (DataFrame, Long) =
     scanOrdinalWithCount(d.orderBy(sortExprs: _*), outCol, base = 1L)

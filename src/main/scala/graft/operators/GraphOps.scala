@@ -95,11 +95,13 @@ object GraphOps {
     * shuffle-partition sizing so a cluster's knob governs the ceiling.
     * Never a constant tuned to either local mode or one cluster. */
   private def loopN(df: DataFrame, rows: Long): Int = {
-    val conf = df.sparkSession.conf
-    val rowsPer = math.max(1L,
-      conf.get("graft.loop.rowsPerPartition", "1000000").toLong)
+    val rowsPer = loopRows(df)
     math.max(1, math.min(loopNCap(df), ((rows + rowsPer - 1) / rowsPer).toInt))
   }
+
+  /** `graft.loop.rowsPerPartition`, at least 1. */
+  private def loopRows(df: DataFrame): Long =
+    math.max(1L, df.sparkSession.conf.get("graft.loop.rowsPerPartition", "1000000").toLong)
 
   /** Ceiling for [[loopN]] and the sizing of seed frames whose row count
     * is not yet known: the session's shuffle-partition knob — the same
@@ -325,25 +327,34 @@ object GraphOps {
    * (node_id, component) where component = the minimum node id reachable
    * (a null endpoint yields one (null, null) row and joins nothing).
    *
-   * The edge list is checkpointed once as (src, target), both cast to
-   * the common type the symmetric view's `array(struct, struct)` coerces
-   * them to (a hash map would take `1: Int` and `1L` for two nodes), its
-   * row count observed in the same job. Two regimes, decided from that
-   * count like every other loop ([[loopN]], `graft.loop.rowsPerPartition`):
-   *  - twice the edge rows, the symmetric view's upper bound, fits ONE
-   *    loop partition: union-find in one task straight over the edge leaf
-   *    ([[unionFindComponents]]), which needs neither the mirrored rows
-   *    nor their `distinct`. The loop would run every stage as one task
-   *    anyway, and its ~30 jobs, planned and launched one after another,
-   *    cost far more in planning and job cadence than the work on the
-   *    data. The result carries its observed row count as statistics, so
-   *    a small one can be broadcast or sorted in place;
-   *  - otherwise the symmetric distinct view is built and sized. When it
-   *    fits one loop partition after all (duplicate or mirrored edges),
-   *    union-find labels it; else distributed label propagation with
-   *    pointer doubling runs on that many partitions ([[labelPropagation]]).
+   * The edges are read as (src, target), both cast to the common type the
+   * symmetric view's `array(struct, struct)` coerces them to (a hash map
+   * would take `1: Int` and `1L` for two nodes). Union-find in one task
+   * ([[unionFindComponents]]) labels them when twice the edge rows, the
+   * symmetric view's upper bound, fit ONE loop partition ([[loopN]],
+   * `graft.loop.rowsPerPartition`): it needs neither the mirrored rows nor
+   * their `distinct`, and the loop would run every stage as one task
+   * anyway, its ~30 jobs, planned and launched one after another, costing
+   * far more in planning and job cadence than the work on the data. The
+   * result carries its observed row count as statistics, so a small one
+   * can be broadcast or sorted in place. Three regimes:
+   *  - direct: the cast edge plan already runs as one task
+   *    (`plans.OneJobPlan.runsAsOneTask`: a small one-split scan and
+   *    what runs over it in place). Union-find reads that plan inside
+   *    its own checkpoint job, so the edge lineage and the labelling run
+   *    as one job and no edge leaf is written. The task checks the budget
+   *    as it reads: past it, it stops, emits no rows and counts the
+   *    overflow (no task fails, so none is retried), and the edges take
+   *    the counted regimes;
+   *  - counted: the edge list is checkpointed once, its row count
+   *    observed in the same job. Within the budget union-find labels that
+   *    leaf; otherwise the symmetric distinct view is built and sized.
+   *    When it fits one loop partition after all (duplicate or mirrored
+   *    edges), union-find labels it; else distributed label propagation
+   *    with pointer doubling runs on that many partitions
+   *    ([[labelPropagation]]).
    * `maxIter` bounds only the distributed loop (it guards against
-   * adversarial topologies); the one-task regime always completes.
+   * adversarial topologies); union-find always completes.
    *
    * Beyond-parity: the reference has no component/closure operator — its
    * graph layer stops at BFS levels (reference GT:7-78).
@@ -353,32 +364,49 @@ object GraphOps {
     // the symmetric view via ONE explode pass, not union(edges, swapped):
     // a self-union evaluates the upstream lineage twice. Built over the
     // edge leaf, so CC callers' expensive lineages (the MinHash signature
-    // pipeline, a distributed ordinal) run once in either regime.
+    // pipeline, a distributed ordinal) run once in the counted regimes.
     def symmetric(e: DataFrame): DataFrame = e.select(explode(array(
         struct(col("src").as("a"), col("target").as("b")),
         struct(col("target").as("a"), col("src").as("b")))).as("__e__"))
       .select(col("__e__.a").as("a"), col("__e__.b").as("b"))
     val dt = symmetric(edges).schema("a").dataType
-    val (leaf, Seq(edgeRows)) = chk(edges.select(col("src").cast(dt).as("src"),
-      col("target").cast(dt).as("target")), reliable, Seq(count(lit(1))))
+    val cast = edges.select(col("src").cast(dt).as("src"), col("target").cast(dt).as("target"))
     val unionFind = unionFindable(dt)
-    if (unionFind && loopN(leaf, 2 * edgeRows) == 1) unionFindLeaf(leaf, reliable)
-    else {
-      val (sym0, Seq(symRows)) = chk(symmetric(leaf).distinct(), reliable, Seq(count(lit(1))))
-      releaseCheckpoints(leaf)
-      val n = loopN(sym0, symRows)
-      if (unionFind && n == 1) unionFindLeaf(sym0, reliable)
-      else labelPropagation(sym0, n, maxIter, reliable)
+    // the most edges union-find may read: twice that fits one loop partition
+    val budget = if (loopNCap(edges) <= 1) Long.MaxValue else loopRows(edges) / 2
+    val direct =
+      if (unionFind && budget >= 1 && graft.plans.OneJobPlan.runsAsOneTask(cast))
+        unionFindLeaf(cast, reliable, budget)
+      else None
+    direct.getOrElse {
+      val (leaf, Seq(edgeRows)) = chk(cast, reliable, Seq(count(lit(1))))
+      if (unionFind && edgeRows <= budget) unionFindReleasing(leaf, reliable)
+      else {
+        val (sym0, Seq(symRows)) = chk(symmetric(leaf).distinct(), reliable, Seq(count(lit(1))))
+        releaseCheckpoints(leaf)
+        val n = loopN(sym0, symRows)
+        if (unionFind && n == 1) unionFindReleasing(sym0, reliable)
+        else labelPropagation(sym0, n, maxIter, reliable)
+      }
     }
   }
 
-  /** [[unionFindComponents]] of the materialized edge leaf `e` (released)
-    * as a checkpoint leaf whose statistics are its observed row count. */
-  private def unionFindLeaf(e: DataFrame, reliable: Boolean): DataFrame = {
-    val (out, Seq(rows)) = chk(unionFindComponents(e), reliable, Seq(count(lit(1))))
-    releaseCheckpoints(e)
-    withRowCount(out, rows)
+  /** [[unionFindComponents]] of `edges` as a checkpoint leaf whose
+    * statistics are its observed row count; None, the leaf released, when
+    * `edges` has more than `budget` rows. */
+  private def unionFindLeaf(edges: DataFrame, reliable: Boolean,
+                            budget: Long): Option[DataFrame] = {
+    val over = edges.sparkSession.sparkContext.longAccumulator
+    val (out, Seq(rows)) = chk(unionFindComponents(edges, budget, over), reliable,
+      Seq(count(lit(1))))
+    if (over.sum > 0) { releaseCheckpoints(out); None }
+    else Some(withRowCount(out, rows))
   }
+
+  /** [[unionFindLeaf]] of the materialized edge leaf `e`, read whole;
+    * `e` is released. */
+  private def unionFindReleasing(e: DataFrame, reliable: Boolean): DataFrame =
+    try unionFindLeaf(e, reliable, Long.MaxValue).get finally releaseCheckpoints(e)
 
   /** Id types whose Catalyst values are hash-map keys with the loop join's
     * equality; binary, floating-point, collated-string and nested ids
@@ -390,14 +418,16 @@ object GraphOps {
     case _ => false
   }
 
-  /** Components of a materialized two-column edge frame, endpoints of one
-    * type, in one task: union-find with path compression over an O(nodes)
-    * map, always hanging the larger root under the smaller, so each root is
-    * its component's minimum under Catalyst's ordering of the id type — the
+  /** Components of a two-column edge frame, endpoints of one type, in one
+    * task: union-find with path compression over an O(nodes) map, always
+    * hanging the larger root under the smaller, so each root is its
+    * component's minimum under Catalyst's ordering of the id type — the
     * order the loop's `min` uses (UTF-8 bytes for strings, which UTF-16
     * `compareTo` contradicts). Edge direction, duplicates and self-loops
-    * do not change the components. */
-  private def unionFindComponents(edges: DataFrame): DataFrame = {
+    * do not change the components. A task that finds more than `budget`
+    * edges stops reading, emits no rows and adds 1 to `over`. */
+  private def unionFindComponents(edges: DataFrame, budget: Long,
+                                  over: org.apache.spark.util.LongAccumulator): DataFrame = {
     val dt = edges.schema(1).dataType
     val rows = edges.queryExecution.toRdd.coalesce(1).mapPartitions { it =>
       import org.apache.spark.sql.catalyst.InternalRow
@@ -417,15 +447,19 @@ object GraphOps {
         v
       }
       var sawNull = false
-      it.foreach { r =>
+      var read = 0L
+      while (read < budget && it.hasNext) {
+        val r = it.next()
         val (a, b) = (node(r, 0), node(r, 1))
         if (a == null || b == null) sawNull = true
         else {
           val (ra, rb) = (find(a), find(b))
           if (ord.lt(ra, rb)) parent.put(rb, ra) else if (ord.lt(rb, ra)) parent.put(ra, rb)
         }
+        read += 1
       }
-      parent.keySet.toArray.iterator.map(k => InternalRow(k, find(k))) ++
+      if (it.hasNext) { over.add(1L); Iterator.empty }
+      else parent.keySet.toArray.iterator.map(k => InternalRow(k, find(k))) ++
         Iterator.fill(if (sawNull) 1 else 0)(InternalRow(null, null))
     }
     org.apache.spark.sql.graft.bridge.internalCreateDataFrame(edges.sparkSession, rows,

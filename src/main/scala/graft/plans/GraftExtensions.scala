@@ -13,9 +13,9 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
  *    expression, no UDF registration per session;
  *  - `OneJobPlan`, an AQE query-stage preparation rule: when AQE
  *    partition coalescing is on and the plan shows it runs as exactly one
- *    partition end to end, with every exchange's input and every build
- *    side small enough, by its logical size estimate, for AQE to coalesce
- *    it into one partition
+ *    partition end to end, with every exchange's input (of a known
+ *    partition count) and every build side small enough, by its logical
+ *    size estimate, for AQE to coalesce it into one partition
  *    (`spark.sql.adaptive.coalescePartitions.minPartitionSize` under the
  *    default `parallelismFirst`), every shuffle `EnsureRequirements` put
  *    in becomes `CoalesceExec(1)` and every broadcast hash join but a

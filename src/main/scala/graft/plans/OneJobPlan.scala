@@ -1,13 +1,13 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.PlanExpression
 import org.apache.spark.sql.catalyst.optimizer.BuildLeft
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.{CoalesceExec, FileSourceScanExec, PartitionedFileUtil,
   RDDScanExec, SparkPlan, UnaryExecNode, UnionExec}
-import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, CoalesceShufflePartitions,
-  ShuffleQueryStageExec}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AQEShuffleReadExec,
+  CoalesceShufflePartitions, ShuffleQueryStageExec}
 import org.apache.spark.sql.execution.datasources.FilePartition
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ENSURE_REQUIREMENTS,
   Exchange, ShuffleExchangeExec}
@@ -23,12 +23,13 @@ import org.apache.spark.sql.internal.SQLConf
  * broadcasts every small join side. Each shuffle costs a map-stage job (a
  * global sort's range exchange also a `RangePartitioner` sample job) and
  * each broadcast a build job; AQE then coalesces the small reduce sides
- * back into the one partition the input already was. When the plan runs
- * as exactly one partition (see `oneJob`), this rule rewrites
+ * back into one partition. When the rewritten plan runs as exactly one
+ * partition (see `oneJob`), this rule rewrites
  *  - every `ShuffleExchangeExec(_, child, ENSURE_REQUIREMENTS)` (hash,
- *    range or single-partition) into `CoalesceExec(1, child)`, whose
- *    `SinglePartition` satisfies every distribution the consumer asks
- *    for;
+ *    range or single-partition) whose child runs as a known number of
+ *    partitions into `CoalesceExec(1, child)`, whose `SinglePartition`
+ *    satisfies every distribution the consumer asks for (a union of two
+ *    one-split scans is read by one task, not shuffled);
  *  - every `BroadcastHashJoinExec` whose build side runs as one partition
  *    into a `ShuffledHashJoinExec` over the same two children, the
  *    `BroadcastExchangeExec` unwrapped, so the join builds its hash table
@@ -74,10 +75,10 @@ case class OneJobPlan(session: SparkSession) extends Rule[SparkPlan] {
     * one split, a checkpointed RDD leaf, and a materialized shuffle stage
     * as AQE's own coalescing would read it; a unary node runs as its
     * child, a union as the sum of its children, a broadcast hash join as
-    * its streamed side, a collapsed exchange as one partition, and a
-    * shuffled join as its children when they all run as the same exact
-    * count. A co-partitioned operator thus never sees children of
-    * different partition counts. */
+    * its streamed side, a collapsed exchange (over a child of any known
+    * count) as one partition, and a shuffled join as its children when
+    * they all run as the same exact count. A co-partitioned operator thus
+    * never sees children of different partition counts. */
   private def oneJob(p: SparkPlan): Option[Parts] = p match {
     case s: FileSourceScanExec =>
       val plain = !s.bucketedScan &&
@@ -93,7 +94,7 @@ case class OneJobPlan(session: SparkSession) extends Rule[SparkPlan] {
         case _ => Some(Parts(s.shuffle.numPartitions, exact = s.shuffle.numPartitions == 1, s))
       }
     case ShuffleExchangeExec(_, child, ENSURE_REQUIREMENTS, _) =>
-      oneJob(child).collect { case Parts(1, _, c) if small(child) =>
+      oneJob(child).collect { case Parts(_, _, c) if small(child) =>
         Parts(1, exact = true, CoalesceExec(1, c))
       }
     case j: BroadcastHashJoinExec => broadcastJoin(j)
@@ -191,5 +192,24 @@ case class OneJobPlan(session: SparkSession) extends Rule[SparkPlan] {
       }
     }.sortBy(-_.length)
     FilePartition.getFilePartitions(session, splits, maxSplitBytes).size == 1
+  }
+}
+
+object OneJobPlan {
+
+  /** Whether `df` runs as one task, read from its physical plan without
+    * running anything: after AQE's query-stage preparation no exchange is
+    * left (the rule collapsed it, or there was none) and the plan runs as
+    * one partition by the rule's own count. Such a frame is cheaper read
+    * again as a plan than materialized once as a checkpoint leaf, which
+    * costs a job and its blocks. A session without AQE is asked of its
+    * executed plan, where any exchange Spark planned is still in place. */
+  def runsAsOneTask(df: DataFrame): Boolean = {
+    val plan = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.initialPlan
+      case p => p
+    }
+    !plan.exists(_.isInstanceOf[Exchange]) &&
+      OneJobPlan(df.sparkSession).oneJob(plan).exists(_.n == 1)
   }
 }

@@ -37,24 +37,33 @@ class CheckpointLeafSpec extends SparkTestBase {
   }
 
   test("leaves declared on hash(k, 3) join on k with no shuffle; undeclared ones shuffle") {
-    withConf("spark.sql.autoBroadcastJoinThreshold", "-1") {
-      val l = (1 to 2000).map(i => (i % 97, i)).toDF("k", "v").repartition(3, col("k"))
-      val r = (1 to 500).map(i => (i % 97, s"x$i")).toDF("k", "name").repartition(3, col("k"))
-      def join(declare: Boolean): DataFrame = {
-        def leaf(df: DataFrame) =
-          if (declare) bridge.checkpointLeaf(df, reliable = false, Seq("k"), Some(3))
-          else bridge.checkpointLeaf(df, reliable = false)
-        leaf(l).join(leaf(r), "k")
+    val l = (1 to 2000).map(i => (i % 97, i)).toDF("k", "v").repartition(3, col("k"))
+    val r = (1 to 500).map(i => (i % 97, s"x$i")).toDF("k", "name").repartition(3, col("k"))
+    def join(declare: Boolean): DataFrame = {
+      def leaf(df: DataFrame) =
+        if (declare) bridge.checkpointLeaf(df, reliable = false, Seq("k"), Some(3))
+        else bridge.checkpointLeaf(df, reliable = false)
+      leaf(l).join(leaf(r), "k")
+    }
+    // coalescing off: with it on, OneJobPlan reads leaves this small in
+    // one task, and the undeclared join shuffles nothing either (below)
+    withConf("spark.sql.adaptive.coalescePartitions.enabled", "false") {
+      withConf("spark.sql.autoBroadcastJoinThreshold", "-1") {
+        val declared = join(declare = true)
+        val undeclared = join(declare = false)
+        assert(shuffles(declared) == 0)
+        // the finding the declaration exists for: AQE drops the layout a
+        // plain checkpoint's plan placed, so the join re-shuffles both leaves
+        assert(shuffles(undeclared) >= 1)
+        assert(declared.collect().toSet == undeclared.collect().toSet)
+        assert(declared.count() == (0 until 97).map(k =>
+          (1 to 2000).count(_ % 97 == k).toLong * (1 to 500).count(_ % 97 == k)).sum)
       }
-      val declared = join(declare = true)
-      val undeclared = join(declare = false)
-      assert(shuffles(declared) == 0)
-      // the finding the declaration exists for: AQE drops the layout a
-      // plain checkpoint's plan placed, so the join re-shuffles both leaves
-      assert(shuffles(undeclared) >= 1)
-      assert(declared.collect().toSet == undeclared.collect().toSet)
-      assert(declared.count() == (0 until 97).map(k =>
-        (1 to 2000).count(_ % 97 == k).toLong * (1 to 500).count(_ % 97 == k)).sum)
+    }
+    withConf("spark.sql.autoBroadcastJoinThreshold", "-1") {
+      val oneTask = join(declare = false)
+      assert(shuffles(oneTask) == 0)
+      assert(oneTask.collect().toSet == join(declare = true).collect().toSet)
     }
   }
 

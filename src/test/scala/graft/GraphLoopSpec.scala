@@ -10,11 +10,12 @@ import org.apache.spark.sql.util.QueryExecutionListener
 import graft.operators.GraphOps
 
 /** How the graph loops are sized and what they cost in jobs.
-  * connectedComponents has two regimes: union-find in one task straight
-  * over the checkpointed edge list when twice its rows, the symmetric
-  * view's upper bound, fit one loop partition (`graft.loop.rowsPerPartition`,
-  * default 1M rows — every fixture here), and the distributed
-  * label-propagation loop otherwise (forced with rowsPerPartition = 1). */
+  * connectedComponents labels by union-find in one task when twice the
+  * edge rows, the symmetric view's upper bound, fit one loop partition
+  * (`graft.loop.rowsPerPartition`, default 1M rows — every fixture here):
+  * straight over an edge plan that runs as one task (a one-file scan), else
+  * over the checkpointed edge list (a local Seq). The distributed
+  * label-propagation loop runs otherwise (forced with rowsPerPartition = 1). */
 class GraphLoopSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
@@ -126,6 +127,80 @@ class GraphLoopSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
       assert(uf == withLoopRows1(components(edges)), s"edges $es")
       assert(uf.forall(r => r.isNullAt(0) || r.getLong(1) <= r.getLong(0)))
     }
+  }
+
+  /** `df` written as one parquet file and read back: a one-split scan,
+    * so an edge plan over it runs as one task. */
+  private def oneFile(df: DataFrame): DataFrame = {
+    val p = s"${graft.core.TempDirs.scratch("graft_cc_one_file")}/edges"
+    df.coalesce(1).write.parquet(p)
+    graft.sources.ParquetIO.read(spark, p)
+  }
+
+  test("law: direct union-find on one-file edges == counted union-find == the loop") {
+    val rnd = new scala.util.Random(59)
+    def id(): String = ids(rnd.nextInt(ids.size)) + rnd.nextInt(5)
+    val stringGraphs = Seq.empty[(String, String)] +: Seq(("｡", "😀")) +: (1 to 5).map { g =>
+      (1 to 10 + rnd.nextInt(30)).map { _ =>
+        val a = id()
+        rnd.nextInt(10) match {
+          case 0 => (a, a)                  // self-loop
+          case 1 if g % 2 == 0 => (a, null) // null endpoint
+          case 2 if g % 2 == 0 => (null, a)
+          case _ => (a, id())               // cycles, mirrored and repeated edges
+        }
+      }
+    }
+    val mixed = (1 to 3).map { g =>
+      (1 to 10 + rnd.nextInt(30)).map { _ =>
+        val a: java.lang.Integer = rnd.nextInt(20) - 10
+        rnd.nextInt(10) match {
+          case 0 => (a, java.lang.Long.valueOf(a.longValue)) // a self-loop across the types
+          case 1 if g != 2 => (a, null: java.lang.Long)
+          case 2 if g != 2 => (null: java.lang.Integer, java.lang.Long.valueOf(rnd.nextInt(9)))
+          case _ => (a, java.lang.Long.valueOf(rnd.nextInt(20) - 10L))
+        }
+      }
+    }
+    for (edges <- stringGraphs.map(_.toDF("src", "target")) ++
+                  mixed.map(_.toDF("src", "target"))) {
+      val one = oneFile(edges)
+      // one job: the union-find leaf reads the scan in its own task
+      val (cc, jobs) = jobsOf(GraphOps.connectedComponents(one))
+      val direct = collectReleased(cc).toSet
+      assert(jobs == 1, s"the direct regime ran $jobs jobs")
+      // a local Seq's partition count is unknown to the plan: the edge leaf
+      val counted = collectReleased(GraphOps.connectedComponents(edges)).toSet
+      val loop = withLoopRows1(collectReleased(GraphOps.connectedComponents(one)).toSet)
+      val es = edges.collect().toSeq
+      assert(direct == counted && direct == loop, s"edges $es")
+      if (es.exists(r => r.isNullAt(0) || r.isNullAt(1)))
+        assert(direct.contains(Row(null, null)), s"edges $es")
+    }
+  }
+
+  test("direct union-find past its budget falls back and leaves nothing persisted") {
+    // rowsPerPartition = 8: at most 4 edges; 10 run the counted regimes
+    val chain = (0 until 10).map(i => (s"n$i", s"n${i + 1}")).toDF("src", "target")
+    val (small, big) = (oneFile(chain.limit(4)), oneFile(chain))
+    spark.conf.set("graft.loop.rowsPerPartition", "8")
+    try {
+      val (atBudget, jobs) = jobsOf(collectReleased(GraphOps.connectedComponents(small)).toSet)
+      assert(jobs == 2 && atBudget == (0 to 4).map(i => Row(s"n$i", "n0")).toSet,
+        s"at the budget: $jobs jobs (the leaf and the collect)")
+      val before = sc.getPersistentRDDs.keySet
+      val (got, fellBack) = jobsOf(graft.core.Caches.scoped(
+        GraphOps.connectedComponents(big).collect().toSet))
+      val deadline = System.currentTimeMillis() + 30000
+      while ((sc.getPersistentRDDs.keySet -- before).nonEmpty &&
+             System.currentTimeMillis() < deadline) Thread.sleep(50)
+      val left = sc.getPersistentRDDs.keySet -- before
+      assert(left.isEmpty, s"left RDDs $left after the scope's exit")
+      // the direct attempt, the edge leaf, the symmetric view and the loop
+      assert(fellBack > 4, s"past the budget: $fellBack jobs")
+      assert(got == withLoopRows1(collectReleased(GraphOps.connectedComponents(chain)).toSet))
+      assert(got == (0 to 10).map(i => Row(s"n$i", "n0")).toSet)
+    } finally spark.conf.unset("graft.loop.rowsPerPartition")
   }
 
   test("ids without hash-map value equality (binary) take the loop and stay correct") {
@@ -281,14 +356,14 @@ class GraphLoopSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     assert(jobs == 0, s"loading orders ran $jobs jobs")
   }
 
-  test("q_graph_cc's builder call runs <= 3 jobs and a noop write of the gate <= 4") {
-    // the ordinal's checkpoint (its sort in place), the edge leaf and the
-    // union-find leaf; the write sorts the small union-find leaf in place
+  test("q_graph_cc's builder call runs <= 1 job and a noop write of the gate <= 2") {
+    // the union-find leaf: its one task scans, sorts, numbers, builds the
+    // edges and labels them; the write sorts the small leaf in place
     val dir = ccFixture
     val (cc, jobs) = jobsOf(SparkEntry.queries("q_graph_cc")(spark, dir))
-    assert(jobs <= 3, s"q_graph_cc builder ran $jobs jobs")
+    assert(jobs <= 1, s"q_graph_cc builder ran $jobs jobs")
     val (_, writeJobs) = jobsOf(cc.write.format("noop").mode("overwrite").save())
-    assert(jobs + writeJobs <= 4, s"q_graph_cc ran $jobs + $writeJobs jobs")
+    assert(jobs + writeJobs <= 2, s"q_graph_cc ran $jobs + $writeJobs jobs")
   }
 
   test("law: bfsLevels equals a queue BFS (minimal level) on multi-partition layouts") {

@@ -144,8 +144,9 @@ class OneJobPlanSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
 
   test("a union of one-split scans into a join and an aggregate keeps its exchange") {
     // q_graph_merge_leaves' shape: a union of two one-partition scans runs
-    // as two partitions, so the aggregate's exchange above it stays and no
-    // operator zips 2 partitions with 1
+    // as two partitions, and no operator may zip 2 partitions with 1. The
+    // aggregate's exchange above the join stays: Spark bounds the join's
+    // size by the product of its sides', above the one-partition size
     val build = () => {
       val u = read(left).select("k", "g").union(read(right).select("k", "g"))
       val dims = read(right).groupBy("g").agg(min("r").as("r"))
@@ -154,6 +155,15 @@ class OneJobPlanSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     assertSparksPlan(sameAsSpark(build))
     // with the dimension joined as a plain hash join too
     withConf(noBroadcast)(assertSparksPlan(sameAsSpark(build)))
+  }
+
+  test("a union of two one-split scans under a sort or a keyed aggregate runs 1 job") {
+    val u = () => read(left).select("k", "s").union(read(right).select(col("k"), col("r").as("s")))
+    // `s` is unique: the sort fixes the order, so compare it too
+    val bySort = () => u().orderBy("s")
+    assert(bySort().collect().toSeq == coalescingOff(bySort().collect().toSeq))
+    assertOneJob(bySort)
+    assertOneJob(() => u().groupBy("k").agg(count(lit(1)).as("n"), max("s").as("s")))
   }
 
   test("one-split joined to 3-split or to a hash(k, 3) leaf keeps its exchanges") {

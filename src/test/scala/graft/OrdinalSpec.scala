@@ -9,8 +9,10 @@ import graft.sources.ParquetIO
 
 /** The distributed ordinals (`XDF.globalOrdinal`, `scanOrdinal` and the
   * operators built on them) number rows as `row_number()` over a global
-  * window would, in one checkpoint job for a one-file input, a counts job
-  * more for a multi-partition one, and with no broadcast job. */
+  * window would: a small one-file input's `globalOrdinal` as a plain plan
+  * (no job until its consumer runs), other inputs in one checkpoint job
+  * and a counts job more for a multi-partition one, and with no
+  * broadcast job. */
 class OrdinalSpec extends SparkTestBase {
 
   /** 60 rows: `k` in 0..6 with repeats (ties) and nulls, `s` unique. */
@@ -115,13 +117,18 @@ class OrdinalSpec extends SparkTestBase {
     } finally sc.removeSparkListener(l)
   }
 
-  test("job laws: one job for a one-file input; no broadcast job; a counts job above one partition") {
-    val (_, one, b1) = jobScopes(XDF.globalOrdinal(read(oneFile), Seq(col("k")), "rn"))
-    // the sort runs in place inside the checkpoint job
-    assert(one == 1, s"one-file input ran $one jobs")
-    val (_, empty, b0) = jobScopes(
-      XDF.globalOrdinal(read(oneFile).filter(col("k") > 100), Seq(col("k")), "rn"))
-    assert(empty == 1, s"empty input ran $empty jobs")
+  private def noop(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
+
+  test("job laws: one file: 0 builder jobs, 1 write; no broadcast; counts job above one") {
+    for ((input, label) <- Seq((() => read(oneFile), "one-file"),
+                               (() => read(oneFile).filter(col("k") > 100), "empty"))) {
+      // a plain plan: the sort and the numbering run in the consumer's job
+      val (o, builder, b1) = jobScopes(XDF.globalOrdinal(input(), Seq(col("k")), "rn"))
+      assert(builder == 0, s"$label input's builder ran $builder jobs")
+      val (_, write, b2) = jobScopes(noop(o))
+      assert(write == 1, s"a noop write of the $label ordinal ran $write jobs")
+      assert(!(b1 || b2), s"the $label ordinal ran a BroadcastExchange job")
+    }
     // the range sample, its map stage, the checkpoint and one counts job
     // (offsets joined by broadcast took 6: a counts aggregate's map stage
     // and result and the broadcast, for the one counts job)
@@ -130,7 +137,76 @@ class OrdinalSpec extends SparkTestBase {
     assert(multi <= 4, s"3-file input ran $multi jobs")
     val (_, scan, bs) = jobScopes(XDF.scanOrdinal(read(threeFiles), "i"))
     assert(scan == 2, s"scanOrdinal over 3 files ran $scan jobs")
-    assert(!(b1 || b0 || b3 || bs), "an ordinal ran a BroadcastExchange job")
+    assert(!(b3 || bs), "an ordinal ran a BroadcastExchange job")
+  }
+
+  /** Whether `df` reads a checkpoint leaf. */
+  private def readsLeaf(df: DataFrame): Boolean = df.queryExecution.analyzed.collectLeaves()
+    .exists(_.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD])
+
+  test("law: under the shipped session a one-file ordinal is a plan == row_number()") {
+    val orders = Seq(Seq(col("k")), Seq(col("k").desc), Seq(col("k").desc_nulls_last),
+      Seq(col("k"), col("s").desc))
+    for ((input, label) <- Seq((() => read(oneFile), "1 file"),
+                               (() => read(oneFile).filter(col("k") > 100), "empty"));
+         order <- orders) {
+      val keys = Seq("k", "s")
+      val want = numbered(rowNumber(input(), order, "rn"), keys, "rn")
+      val (o, builder) = jobsOf(XDF.globalOrdinal(input(), order, "rn"))
+      assert(builder == 0 && !readsLeaf(o), s"$label, $order: $builder builder jobs")
+      val got = numbered(o, keys, "rn")
+      if (order.size == 1) // ties: only (k, rn) is determined
+        assert(got.map(r => (r.get(0), r.get(2))) == want.map(r => (r.get(0), r.get(2))),
+          s"$label, $order")
+      else assert(got == want, s"$label, $order")
+      assert(got.map(_.getLong(2)) == (1L to want.size.toLong), s"$label, $order")
+    }
+  }
+
+  test("law: two actions and a self-join on the ordinal read one plan-path numbering") {
+    val o = XDF.globalOrdinal(read(oneFile), Seq(col("k")), "rn")
+    assert(!readsLeaf(o))
+    val pairs = () => o.select("k", "rn").orderBy("rn").collect().toSeq
+    val first = pairs()
+    assert(first == pairs() && first.map(_.getLong(1)) == (1L to 60L))
+    // each side of the join numbers the rows itself
+    val joined = o.select(col("rn"), col("k"), col("s"))
+      .join(o.select(col("rn"), col("k").as("k2"), col("s").as("s2")), "rn").collect()
+    assert(joined.length == 60 && joined.forall(r => r.get(1) == r.get(3) && r.get(2) == r.get(4)))
+  }
+
+  test("law: a plan-path ordinal joined to 3 parts or unioned with 3 files numbers 1..n") {
+    val o = XDF.globalOrdinal(read(oneFile), Seq(col("s")), "rn")
+    assert(!readsLeaf(o))
+    val want = numbered(rowNumber(read(oneFile), Seq(col("s")), "rn"), Seq("s"), "rn")
+    for (confs <- Seq(Seq.empty[(String, String)],
+                      Seq("spark.sql.autoBroadcastJoinThreshold" -> "-1"))) {
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      try {
+        val three = read(threeFiles).select("s").repartition(3, col("s"))
+        assert(numbered(three.join(o, "s"), Seq("s"), "rn") == want, confs)
+        val unioned = o.select(col("s"), col("rn"))
+          .unionByName(read(threeFiles).select(col("s"), lit(-1L).as("rn")))
+        assert(numbered(unioned.filter(col("rn") > 0), Seq("s"), "rn") == want, confs)
+      } finally confs.foreach { case (k, _) => spark.conf.unset(k) }
+    }
+  }
+
+  test("rand(), 3 files and an input above minPartitionSize keep the checkpoint leaf") {
+    def ordinal(d: DataFrame): (DataFrame, Int) = jobsOf(XDF.globalOrdinal(d, Seq(col("k")), "rn"))
+    val (random, rj) = ordinal(read(oneFile).withColumn("r", rand(7)))
+    // the leaf numbers the rows once, so two reads agree on every column
+    assert(readsLeaf(random) && rj == 1, s"rand(): $rj builder jobs")
+    assert(random.orderBy("rn").collect().toSeq == random.orderBy("rn").collect().toSeq)
+    val (three, tj) = ordinal(read(threeFiles))
+    assert(readsLeaf(three) && tj >= 1, s"3 files: $tj builder jobs")
+    assert(three.select("rn").collect().map(_.getLong(0)).sorted.toSeq == (1L to 60L))
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize", "16")
+    try {
+      val (big, bj) = ordinal(read(oneFile))
+      assert(readsLeaf(big) && bj >= 1, s"above minPartitionSize: $bj builder jobs")
+      assert(big.select("rn").collect().map(_.getLong(0)).sorted.toSeq == (1L to 60L))
+    } finally spark.conf.unset("spark.sql.adaptive.coalescePartitions.minPartitionSize")
   }
 
   test("law: cumulativeSum without partition columns equals the global running window") {
