@@ -9,10 +9,10 @@ argument. Optionally follows with solo bands (fresh JVM, one gate,
 N passes) on BOTH binaries for named gates.
 
 Usage:
-  bench_ab.py --sf-dir /tmp/sf10 --gates-from BENCH_FULL_r15_sf10.json \
+  bench_ab.py --sf-dir /tmp/sf10 --gates-from history/BENCH_FULL_r15_sf10.json \
       --arm r14=/tmp/r14ab/target/scala-2.13/classes \
       --arm head=/root/repo/target/scala-2.13/classes \
-      --label "round 16" --out BENCH_SF10_AB_r16.json \
+      --label "round 16" --out history/BENCH_SF10_AB_r16.json \
       [--passes 3] [--solo q_zorder_value --solo-passes 5] [--metrics]
 
 The artifact records, per arm: the full per-query map (best/times/rows/

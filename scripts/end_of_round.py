@@ -31,7 +31,7 @@ Usage:
   end_of_round.py --round 16 [--prev 15] [--phases bench_sf10,solo_bands]
                   [--resume] [--mover-threshold 1.3]
 
-Writes EOR_MANIFEST_r{N}.json incrementally (every phase appends its
+Writes history/EOR_MANIFEST_r{N}.json incrementally (every phase appends its
 status + artifacts + wall seconds); --resume skips phases the manifest
 already marks ok. Exit 0 iff every requested phase passed.
 """
@@ -55,6 +55,14 @@ def atomic_dump(obj, path, **kw):
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 RM = os.path.join(REPO, "scripts", "run_main.sh")
+# every per-round artifact (bench, check, curve, audit, soak and manifest
+# files) is read and written here, never at the repo root
+HISTORY = os.path.join(REPO, "history")
+
+
+def art(name):
+    """Path of the per-round artifact `name`."""
+    return os.path.join(HISTORY, name)
 
 SF1_SKIP = ("q_dedup_minhash_cc,q_dedup_cluster_sizes,q_dedup_elect,"
             "q_curation_pipeline,q_dedup_simhash_hamming,q_dedup_embed_cc,"
@@ -139,7 +147,7 @@ class Runner:
         self.args = args
         self.n, self.prev = args.round, args.prev
         self.label = f"round {self.n}"
-        self.manifest_path = os.path.join(REPO, f"EOR_MANIFEST_r{self.n}.json")
+        self.manifest_path = art(f"EOR_MANIFEST_r{self.n}.json")
         self.manifest = {"round": self.n, "prev": self.prev, "phases": {}}
         if args.resume and os.path.exists(self.manifest_path):
             self.manifest = json.load(open(self.manifest_path))
@@ -154,9 +162,6 @@ class Runner:
         self.save()
         print(f"[eor] phase {phase}: {'OK' if ok else 'FAIL'}", flush=True)
         return ok
-
-    def art(self, name):
-        return os.path.join(REPO, name)
 
     # ---------- phases ----------
 
@@ -199,7 +204,7 @@ class Runner:
         # fixture bytes AND the box speed its numbers were measured at)
         calib = calibrate(phase)
         env = {"SPARK_GRAFT_SF_DIR": sf_dir,
-               "SPARK_GRAFT_BENCH_OUT": self.art(out_name)}
+               "SPARK_GRAFT_BENCH_OUT": art(out_name)}
         if gates:
             env["SPARK_GRAFT_QUERY_FILTER"] = ",".join(sorted(gates))
         if metrics:
@@ -209,12 +214,12 @@ class Runner:
         log = f"{self.scratch}/{phase}.log"
         rc = sh([RM, "graft.Bench"], env=env, log=log)
         try:
-            full = json.load(open(self.art(out_name)))
+            full = json.load(open(art(out_name)))
         except Exception as e:
             return self.record(phase, False, error=f"no artifact: {e}", log=log)
         if calib is not None:
             full["calibration"] = calib
-            atomic_dump(full, self.art(out_name))
+            atomic_dump(full, art(out_name))
         ok = rc == 0 and full.get("failed", 1) == 0
         if gates and sorted(full.get("queries", {})) != sorted(gates):
             ok = False
@@ -232,7 +237,7 @@ class Runner:
                            f"BENCH_FULL_r{self.n:02d}_sf1.json")
 
     def _prior_gates(self, name):
-        p = self.art(name)
+        p = art(name)
         if not os.path.exists(p):
             sys.exit(f"end_of_round: prior artifact {name} not found — the "
                      "gate subset comes from it (never retyped)")
@@ -259,8 +264,8 @@ class Runner:
     BAND_ONLY = {"q_fuzz_77": (6.0, 14.1)}
 
     def solo_bands(self):
-        cur = json.load(open(self.art(f"BENCH_FULL_r{self.n:02d}_sf10.json")))
-        prv = json.load(open(self.art(f"BENCH_FULL_r{self.prev:02d}_sf10.json")))
+        cur = json.load(open(art(f"BENCH_FULL_r{self.n:02d}_sf10.json")))
+        prv = json.load(open(art(f"BENCH_FULL_r{self.prev:02d}_sf10.json")))
         movers, band_refuted = [], []
         for g, q in cur["queries"].items():
             p = prv["queries"].get(g)
@@ -288,7 +293,7 @@ class Runner:
                 f"{max(prv['queries'][g]['times'])},prior-insweep"
                 for g, _ in movers]
         rc = sh(["python3", "scripts/solo_bands.py", "--sf-dir", "/tmp/sf10",
-                 "--out", self.art(out), "--label", self.label] + refs +
+                 "--out", art(out), "--label", self.label] + refs +
                 [g for g, _ in movers],
                 log=f"{self.scratch}/solo_bands.log")
         return self.record("solo_bands", rc == 0, artifact=out,
@@ -304,17 +309,17 @@ class Runner:
                 log=log)
         replay_ok = rc == 0
         n_skip = len(SF1_SKIP.split(","))
-        art = {"note": f"Full sf1 value sweep on round-{self.n} final code "
-                       "(check_oracle SQL compare + sf1_check.py recursive-"
-                       "CTE replays), produced by scripts/end_of_round.py.",
-               "generated": self.label,
-               "fixture": fixture_stamp.stamp("/tmp/sf1"),
-               "oracle_compare": msg, "replayed_gates": SF1_SKIP.split(","),
-               "replay_pass": replay_ok,
-               "fail": 0 if (ok and replay_ok) else 1,
-               "replay_tail": open(log).read().splitlines()[-3:]}
+        check = {"note": f"Full sf1 value sweep on round-{self.n} final code "
+                         "(check_oracle SQL compare + sf1_check.py recursive-"
+                         "CTE replays), produced by scripts/end_of_round.py.",
+                 "generated": self.label,
+                 "fixture": fixture_stamp.stamp("/tmp/sf1"),
+                 "oracle_compare": msg, "replayed_gates": SF1_SKIP.split(","),
+                 "replay_pass": replay_ok,
+                 "fail": 0 if (ok and replay_ok) else 1,
+                 "replay_tail": open(log).read().splitlines()[-3:]}
         name = f"SF1_CHECK_r{self.n}.json"
-        atomic_dump(art, self.art(name), indent=1)
+        atomic_dump(check, art(name), indent=1)
         return self.record("verify_sf1", ok and replay_ok, artifact=name,
                            oracle=msg, replayed=n_skip)
 
@@ -332,7 +337,7 @@ class Runner:
         name = f"SF100_CHECK_r{self.n}.json"
         log2 = f"{self.scratch}/sf100_check.log"
         rc = sh(["python3", "scripts/sf100_check.py", "/tmp/sf100", out_dir,
-                 self.art(name)],
+                 art(name)],
                 env={"SF100_ROUND_LABEL": self.label}, log=log2)
         return self.record("verify_sf100", rc == 0, artifact=name,
                            tail=open(log2).read().splitlines()[-3:])
@@ -346,11 +351,11 @@ class Runner:
     def scale_curve(self):
         name = f"SCALE_CURVE_r{self.n}.json"
         rc = sh(["python3", "scripts/scale_curve.py",
-                 self.art(f"BENCH_FULL_r{self.n:02d}_sf01.json"),
-                 self.art(f"BENCH_FULL_r{self.n:02d}_sf1.json"),
-                 self.art(f"BENCH_FULL_r{self.n:02d}_sf10.json"),
-                 self.art(name),
-                 self.art(f"BENCH_FULL_r{self.n:02d}_sf100.json")],
+                 art(f"BENCH_FULL_r{self.n:02d}_sf01.json"),
+                 art(f"BENCH_FULL_r{self.n:02d}_sf1.json"),
+                 art(f"BENCH_FULL_r{self.n:02d}_sf10.json"),
+                 art(name),
+                 art(f"BENCH_FULL_r{self.n:02d}_sf100.json")],
                 log=f"{self.scratch}/scale_curve.log")
         return self.record("scale_curve", rc == 0, artifact=name)
 
@@ -359,7 +364,7 @@ class Runner:
         log = f"{self.scratch}/plan_audit.log"
         rc = sh([RM, "graft.PlanAudit"], log=log)
         lines = [l for l in open(log) if l.startswith("[audit]")]
-        open(self.art(name), "w").writelines(lines)
+        open(art(name), "w").writelines(lines)
         errors = [l for l in lines if " ERROR " in l]
         return self.record("plan_audit", rc == 0 and not errors,
                            artifact=name, audited=len(lines),
@@ -367,11 +372,11 @@ class Runner:
 
     def soak(self):
         name = f"SOAK_r{self.n}.json"
-        rc = sh([RM, "graft.Soak", "/root/testdata/sf0.001", self.art(name)],
+        rc = sh([RM, "graft.Soak", "/root/testdata/sf0.001", art(name)],
                 log=f"{self.scratch}/soak.log")
         ok = rc == 0
         try:
-            ok = ok and json.load(open(self.art(name))).get("pass") is True
+            ok = ok and json.load(open(art(name))).get("pass") is True
         except Exception:
             ok = False
         return self.record("soak", ok, artifact=name)

@@ -4,8 +4,9 @@ shifted keys, STREAMING one copy at a time through a ParquetWriter so
 memory stays ~1 copy regardless of N (make_sf1.py concat's all copies
 in RAM — fine for x10/x100, ~60 GB at x1000).
 
-Same key-shift table as make_sf1.py; steps hold to x1000 (largest id:
-l_orderkey ~ 10^10 < int64). Small dims copy through unchanged.
+The key-shift table is make_sf1.py's (imported); steps hold to x1000
+(largest id: l_orderkey ~ 10^10 < int64). Small dims copy through
+unchanged.
 
 Usage: make_sf_big.py [srcDir] [dstDir] [copies] [table ...]
   (tables default to all; pass a subset to build only what a gate
@@ -15,23 +16,13 @@ import sys, os, shutil
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pyarrow.compute as pc
+from make_sf1 import COPY_THROUGH, SHIFTS
 
 src = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
 dst = sys.argv[2] if len(sys.argv) > 2 else "/tmp/sf100"
 copies = int(sys.argv[3]) if len(sys.argv) > 3 else 1000
 only = set(sys.argv[4:])
 os.makedirs(dst, exist_ok=True)
-
-SHIFTS = {
-    "lineitem": {"l_orderkey": 10_000_000, "l_partkey": 2_000_000},
-    "orders": {"o_orderkey": 10_000_000, "o_custkey": 1_500_000},
-    "customer": {"c_custkey": 1_500_000},
-    "part": {"p_partkey": 2_000_000},
-    "events": {"event_id": 10_000_000, "user_id": 100_000},
-    "documents": {"doc_id": 10_000_000},
-    "embeddings": {"vec_id": 10_000_000},
-}
-COPY_THROUGH = ["region", "nation", "supplier"]
 
 for t in COPY_THROUGH:
     if only and t not in only:

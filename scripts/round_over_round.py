@@ -14,8 +14,8 @@ ratio — a slow night then shows up as a calibration delta, not as a
 phantom code regression.
 
 Usage:
-  round_over_round.py BENCH_FULL_r17_sf10.json BENCH_FULL_r16_sf10.json
-                      [--out OUT.json] [--top 8]
+  round_over_round.py history/BENCH_FULL_r17_sf10.json \
+                      history/BENCH_FULL_r16_sf10.json [--out OUT.json] [--top 8]
 
 Prints: shared-gate geomean cur/prev (raw), the calibration ratio
 cur/prev, the corrected geomean (raw / calib ratio), and the biggest

@@ -22,9 +22,9 @@ Usage:
   sf_big_bench.py --round 17 [--sf-dir /tmp/sf300] [--copies 3000]
                   [--partitions 512] [--passes 2] [--skip-verify]
 
-Writes BENCH_FULL_r{N}_sfBIG.json (merged solo runs + calibration +
-fixture stamp) and SFBIG_CHECK_r{N}.json (value checks), then deletes
-the Verify output dir (it is tens of GB).
+Writes history/BENCH_FULL_r{N}_sfBIG.json (merged solo runs +
+calibration + fixture stamp) and history/SFBIG_CHECK_r{N}.json (value
+checks), then deletes the Verify output dir (it is tens of GB).
 """
 import argparse, json, os, shutil, subprocess, sys, tempfile
 import fixture_stamp
@@ -113,7 +113,7 @@ def main():
         "calibration": calib,
         "queries": queries,
     }
-    end_of_round.atomic_dump(artifact, os.path.join(REPO, art_name), indent=1)
+    end_of_round.atomic_dump(artifact, end_of_round.art(art_name), indent=1)
     print(f"[sfbig] wrote {art_name}", flush=True)
     if failed:
         sys.exit(1)
@@ -188,7 +188,7 @@ def main():
                                 "rank-bound", "replay")},
         "detail": merged["detail"],
     }
-    end_of_round.atomic_dump(summary, os.path.join(REPO, check_name), indent=1)
+    end_of_round.atomic_dump(summary, end_of_round.art(check_name), indent=1)
     print(f"[sfbig] wrote {check_name}: total {merged['total']} "
           f"fail {merged['fail']}", flush=True)
     sys.exit(1 if merged["fail"] else 0)

@@ -10,7 +10,7 @@ mechanical instead of a hand-run judgment call — the round-14 bands were
 hand-run; this makes the protocol step reproducible.
 
 Usage:
-  solo_bands.py --sf-dir /tmp/sf1 --out BENCH_SOLO_BANDS_r15.json \
+  solo_bands.py --sf-dir /tmp/sf1 --out history/BENCH_SOLO_BANDS_r15.json \
       [--passes 5] [--note "..."] [--label "round 15"] \
       [--ref GATE=LO,HI,KIND]... GATE[=SF_DIR]...
 

@@ -66,27 +66,11 @@ object Bench {
     // shuffle-partition sizing a cluster job does (SCALE.md) applies
     val shufflePartitions =
       sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    // AQE auto-sizing alternative to the manual decade knob above: when
-    // set, every shuffle STARTS at this many partitions and AQE's
-    // partition coalescing merges them down to fit the data — one config
-    // across scale decades instead of a per-decade
-    // SPARK_GRAFT_SHUFFLE_PARTITIONS a user must know to turn (SCALE.md
-    // round-15 experiment)
-    // parsed at read time: a typo ("auto") would otherwise surface as
-    // invalid JSON in the artifact or a late Spark config error
-    val aqeInitial: Option[Int] =
-      sys.env.get("SPARK_GRAFT_AQE_INITIAL_PARTITIONS").map { s =>
-        s.toIntOption.getOrElse(sys.error(
-          s"SPARK_GRAFT_AQE_INITIAL_PARTITIONS must be an integer, got '$s'"))
-      }
     // the shipped engine config (GraftSession), sized by the env knobs
-    val sessionBuilder = GraftSession.builder("graft-bench", shufflePartitions.toInt)
+    val spark = GraftSession.builder("graft-bench", shufflePartitions.toInt)
       .master(s"local[$cpus]")
       .config("spark.ui.enabled", "false")
-    aqeInitial.foreach(n => sessionBuilder.config(
-      "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-      n.toString))
-    val spark = sessionBuilder.getOrCreate()
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // JIT/codegen + scheduler warm-up so the first timed query doesn't
     // absorb session startup
@@ -216,17 +200,13 @@ object Bench {
       }.getOrElse("")
       s""""$k":{"best":$best,"rows":$n,"times":[${times.mkString(",")}],"spread":${fmt3(spread)}$tm}"""
     }.mkString("{", ",", "}")
-    // artifacts must be self-describing (round-14 lesson: growth claims
-    // name their denominators) — record the AQE knob alongside the manual
-    // one so cross-round compares can't mix sizing regimes unnoticed
-    val aqeField = aqeInitial.map(n => s""","aqe_initial_partitions":$n""").getOrElse("")
     // fixture integrity stamp (round-16): WHICH bytes this bench ran
     // against, so cross-round compares can prove they divided numbers
     // from the same pinned fixture (a regeneration changed row-group
     // layout and moved scan-bound gates up to 11x in round 14)
     val fixtureJson = stampFixture(sfDir)
     val fullJson =
-      s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","passes":$passes,"failed":$failed,"shuffle_partitions":$shufflePartitions$aqeField,"fixture":$fixtureJson,"queries":$perQuery}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","passes":$passes,"failed":$failed,"shuffle_partitions":$shufflePartitions,"fixture":$fixtureJson,"queries":$perQuery}"""
     try {
       val p = java.nio.file.Paths.get(outPath)
       if (p.getParent != null) java.nio.file.Files.createDirectories(p.getParent)
@@ -248,7 +228,7 @@ object Bench {
     val fixtureFp = "\"fingerprint\":\"([0-9a-f]+|unavailable)\"".r
       .findFirstMatchIn(fixtureJson).map(_.group(1)).getOrElse("unavailable")
     val compact =
-      s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","passes":$passes,"failed":$failed,"shuffle_partitions":$shufflePartitions$aqeField,"fixture_fingerprint":"$fixtureFp","queries_count":${results.size},"slowest":$slowest,"full":"$outPath"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","passes":$passes,"failed":$failed,"shuffle_partitions":$shufflePartitions,"fixture_fingerprint":"$fixtureFp","queries_count":${results.size},"slowest":$slowest,"full":"$outPath"}"""
     println(compact)
     // ...and a stderr copy: if a future harness decorates stdout again,
     // the summary still survives somewhere undecorated

@@ -1064,14 +1064,10 @@ object XDF {
     * offsets are literal arrays indexed by partition — a map-side lookup,
     * no join and no broadcast. */
   private def prefixScan(d: DataFrame, v: Column): PrefixScan = {
-    val observed = d.withColumn("__mid__", monotonically_increasing_id())
-      .withColumn("__part__", spark_partition_id())
-      .observe("__scan_rows__", count(lit(1)).as("rows"))
-    val marked = org.apache.spark.sql.graft.bridge.checkpointLeaf(
-      observed, reliable = false, Seq("__part__"))
-    val rows = observed.queryExecution.observedMetrics.get("__scan_rows__")
-      .map(_.getLong(0)).getOrElse(throw new IllegalStateException(
-        "prefixScan: the row count was not observed during the checkpoint job"))
+    val (marked, Seq(rows)) = org.apache.spark.sql.graft.bridge.observedLeaf(
+      d.withColumn("__mid__", monotonically_increasing_id())
+        .withColumn("__part__", spark_partition_id()),
+      reliable = false, Seq(count(lit(1))), Seq("__part__"))
     val (countBefore, sumBefore) =
       if (rows == 0 || marked.queryExecution.toRdd.getNumPartitions <= 1) (lit(0L), lit(0.0))
       else {

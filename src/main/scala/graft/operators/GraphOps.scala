@@ -3,7 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.graft.bridge.{checkpointLeaf, releaseCheckpoints, withRowCount}
+import org.apache.spark.sql.graft.bridge.{checkpointLeaf, observedLeaf, releaseCheckpoints,
+  withRowCount}
 
 /**
  * Graph algorithms over edge-list DataFrames with the reference's
@@ -15,59 +16,26 @@ import org.apache.spark.sql.graft.bridge.{checkpointLeaf, releaseCheckpoints, wi
  * each round fully distributed and checkpointed; a loop supplies only
  * its seed, its round, its probe and its exhaustion action. No
  * GraphFrames dependency.
+ *
+ * Every loop frame is a checkpoint leaf (`bridge.observedLeaf`): origin
+ * stats, no constraints, the hash layout the loop placed declared on the
+ * leaf (so per-round joins against it never re-shuffle it), and the
+ * round's fixpoint probe observed in the leaf's own job. A separate
+ * `count()` over each new leaf would cost a plan and a job per round:
+ * about half of a small-graph closure gate's wall time was driver
+ * planning between jobs. Probes that compare value sums across rounds
+ * (forwardPaths' total-path fixpoint) rely on observed values being
+ * exact, which holds with speculative execution off.
+ *
+ * `reliable = false` (the default) checkpoints locally: fast, but the
+ * blocks live only in the executors' block managers, so an executor
+ * lost mid-loop kills the job. `reliable = true` writes reliable
+ * checkpoint files (call `spark.sparkContext.setCheckpointDir(...)`
+ * first, typically on the cluster's DFS), so loops survive executor
+ * loss — the mode to run at cluster scale (SCALE.md "Reliable
+ * checkpointing").
  */
 object GraphOps {
-
-  /**
-   * Iteration checkpoint strategy. `reliable = false` (default) uses
-   * local checkpoints — fast, lineage-truncating, but blocks live only in
-   * executor block managers: an executor loss mid-iteration kills the job.
-   * `reliable = true` writes reliable checkpoint files (caller must
-   * `spark.sparkContext.setCheckpointDir(...)` first, typically on the
-   * cluster's DFS) so iterative jobs survive executor loss — the mode to
-   * run at cluster scale (see SCALE.md "Reliable checkpointing").
-   *
-   * Every loop frame is a [[checkpointLeaf]]: origin stats, no
-   * constraints, and the hash layout the loop placed declared on the
-   * leaf (`hashOn`/`n`), so per-round joins against it never re-shuffle
-   * it. `probes` are aggregates computed DURING the checkpoint's own job
-   * via `Dataset.observe` — the loops need a fixpoint probe every round,
-   * and a separate `count()` over the new leaf costs a full Catalyst plan
-   * + job per round (measured: about half of a small-graph closure gate's
-   * wall time is driver planning between jobs). A probe must be null-safe
-   * on an empty frame (sum -> null): a present-but-null value reads as 0,
-   * but a MISSING probe entry is an engine-contract breach
-   * (CollectMetricsExec failed to surface the node) and THROWS — reading
-   * it as 0 would make every iterative loop silently "converge" on round
-   * 1 with wrong results (ADVICE r18).
-   *
-   * Exactness note: probes that compare VALUE SUMS across rounds (e.g.
-   * forwardPaths' total-path fixpoint) additionally assume observed
-   * metrics are exact — true here because speculative execution is off
-   * in every shipped session config; a speculatively re-run task can
-   * double-count into a `Dataset.observe` accumulator.
-   */
-  private def chk(df: DataFrame, reliable: Boolean, probes: Seq[Column],
-                  hashOn: Seq[String] = Nil,
-                  n: Option[Int] = None): (DataFrame, Seq[Long]) = {
-    val observed = df.observe("__chk_probe__",
-      probes.head.as("m0"), probes.tail.zipWithIndex.map {
-        case (m, i) => m.as(s"m${i + 1}") }: _*)
-    val out = checkpointLeaf(observed, reliable, hashOn, n)
-    val row = observed.queryExecution.observedMetrics.getOrElse("__chk_probe__",
-      throw new IllegalStateException(
-        "chk: '__chk_probe__' missing from observedMetrics after " +
-          "checkpoint materialization — the fixpoint probe did not run; " +
-          "refusing to treat it as converged"))
-    val vs = probes.indices.map { i =>
-      Option(row.get(i)).map {
-        case l: java.lang.Long    => l.longValue
-        case i2: java.lang.Integer => i2.longValue
-        case x                    => x.toString.toLong
-      }.getOrElse(0L)
-    }
-    (out, vs)
-  }
 
   /** Checkpoint a loop-invariant frame on a declared hash(`key`) layout,
     * so the per-round joins against it never re-shuffle it. The layout is
@@ -133,8 +101,9 @@ object GraphOps {
    *  - `exhausted`, called once on the last state when `maxIter` rounds
    *    end short of the fixpoint: it warns or throws.
    *
-   * The driver owns the rest. Each round is ONE [[chk]] job carrying the
-   * probe plus a row count, so a round costs no separate count plan+job.
+   * The driver owns the rest. Each round is ONE [[observedLeaf]] job
+   * carrying the probe plus a row count, so a round costs no separate
+   * count plan+job.
    * A checkpoint, not a cache: it truncates lineage, so the plan does not
    * grow with the round count (a cache alone leaves a recursive DAG that
    * re-plans ever larger each round). The row count sizes the next round
@@ -172,7 +141,7 @@ object GraphOps {
         val n = size(states.last, prevRows)
         val (leaf, Seq(d, r)) = graft.core.Caches.persistScoped {
           val (frame, delta) = round(states, n)
-          chk(frame, reliable, Seq(delta, count(lit(1))), layout, Some(n))
+          observedLeaf(frame, reliable, Seq(delta, count(lit(1))), layout, Some(n))
         }
         done = stop(prev, d)
         if (keep) { if (r > 0L || !done) states :+= leaf else releaseCheckpoints(leaf) }
@@ -379,10 +348,11 @@ object GraphOps {
         unionFindLeaf(cast, reliable, budget)
       else None
     direct.getOrElse {
-      val (leaf, Seq(edgeRows)) = chk(cast, reliable, Seq(count(lit(1))))
+      val (leaf, Seq(edgeRows)) = observedLeaf(cast, reliable, Seq(count(lit(1))))
       if (unionFind && edgeRows <= budget) unionFindReleasing(leaf, reliable)
       else {
-        val (sym0, Seq(symRows)) = chk(symmetric(leaf).distinct(), reliable, Seq(count(lit(1))))
+        val (sym0, Seq(symRows)) =
+          observedLeaf(symmetric(leaf).distinct(), reliable, Seq(count(lit(1))))
         releaseCheckpoints(leaf)
         val n = loopN(sym0, symRows)
         if (unionFind && n == 1) unionFindReleasing(sym0, reliable)
@@ -397,7 +367,7 @@ object GraphOps {
   private def unionFindLeaf(edges: DataFrame, reliable: Boolean,
                             budget: Long): Option[DataFrame] = {
     val over = edges.sparkSession.sparkContext.longAccumulator
-    val (out, Seq(rows)) = chk(unionFindComponents(edges, budget, over), reliable,
+    val (out, Seq(rows)) = observedLeaf(unionFindComponents(edges, budget, over), reliable,
       Seq(count(lit(1))))
     if (over.sum > 0) { releaseCheckpoints(out); None }
     else Some(withRowCount(out, rows))
@@ -616,7 +586,7 @@ object GraphOps {
     // (subset clustering), and the emptiness probe rides the seeding
     // checkpoint job.
     val nSeed = seedN(e)
-    val (seed, Seq(rows)) = chk(
+    val (seed, Seq(rows)) = observedLeaf(
       e.select(col("target").as("node_id"), col("src").as("anc"))
         .repartition(nSeed, col("node_id"))
         .dropDuplicates("node_id", "anc")
@@ -713,7 +683,7 @@ object GraphOps {
     // hash(target, nF); rows never move, so the leaf provably carries
     // hash(head, nF) — declared so hop 1's three-way join on head is
     // exchange-free on every side. Its count is the emptiness probe.
-    val (seed, Seq(nActive)) = chk(
+    val (seed, Seq(nActive)) = observedLeaf(
       edges.select(col("target")).repartition(nF, col("target")).distinct()
         .select(col("target").as("dest"), col("target").as("head"),
           col("target").cast(StringType).as("path")),
@@ -810,7 +780,7 @@ object GraphOps {
     // clustering). The initial emptiness probe rides the seeding
     // checkpoint job.
     val nSeed = seedN(e)
-    val (seed, Seq(rows)) = chk(
+    val (seed, Seq(rows)) = observedLeaf(
       prune(e.select(col("target").as("node_id"),
         col("src").as("anc"), col("__ts__").as("__f__"),
         col("__ts__").as("__l__")).repartition(nSeed, col("node_id"))),

@@ -125,6 +125,31 @@ object bridge {
       qe.executedPlan.outputOrdering, df.isStreaming)(session, stats, None))
   }
 
+  /** [[checkpointLeaf]] of `df`, with the aggregates `metrics` computed
+    * during its checkpoint job (`Dataset.observe`) and read as Longs: a
+    * row count or a fixpoint probe costs no second job and no second
+    * plan over the leaf. A null value (a sum over no rows) reads as 0. A
+    * missing observation means the observing node did not run, and
+    * throws: read as 0 it would make a fixpoint loop stop after one round
+    * with a wrong result. The values are exact while speculative
+    * execution is off, as in every shipped session config: a
+    * speculatively re-run task can add to an observation twice. */
+  def observedLeaf(df: org.apache.spark.sql.DataFrame, reliable: Boolean, metrics: Seq[Column],
+                   hashOn: Seq[String] = Nil, numPartitions: Option[Int] = None)
+      : (org.apache.spark.sql.DataFrame, Seq[Long]) = {
+    val named = metrics.zipWithIndex.map { case (m, i) => m.as(s"m$i") }
+    val observed = df.observe("__leaf_metrics__", named.head, named.tail: _*)
+    val leaf = checkpointLeaf(observed, reliable, hashOn, numPartitions)
+    val row = observed.queryExecution.observedMetrics.getOrElse("__leaf_metrics__",
+      throw new IllegalStateException("observedLeaf: the metrics were not observed " +
+        "during the checkpoint job; refusing to read them as 0"))
+    (leaf, metrics.indices.map(i => Option(row.get(i)).fold(0L) {
+      case l: java.lang.Long => l.longValue
+      case n: java.lang.Integer => n.longValue
+      case x => x.toString.toLong
+    }))
+  }
+
   /** `leaf`, a [[checkpointLeaf]], with statistics from its row count as
     * observed during its checkpoint job: `rowCount`, and `sizeInBytes`
     * from Spark's per-row size estimate (`EstimationUtils.getSizePerRow`).

@@ -112,15 +112,27 @@ class Round15Spec extends SparkTestBase {
   }
 
   test("explodeMapsFetched fetch-once law holds across many partitions") {
-    Round15FetchCounter.reset()
     val df = spark.range(200).selectExpr("id", "cast(id as string) AS s")
       .repartition(16)
-    val out = graft.core.Reshape.explodeMapsFetched(df, Seq("s"),
+    def fanOut(strictOnce: Boolean) = graft.core.Reshape.explodeMapsFetched(df, Seq("s"),
       m => { Round15FetchCounter.calls.incrementAndGet(); Seq(Map("v" -> m("s"))) },
-      prefix = "p")
-    assert(out.count() == 200)
+      prefix = "p", strictOnce = strictOnce)
+    Round15FetchCounter.reset()
+    assert(fanOut(strictOnce = false).count() == 200)
     assert(Round15FetchCounter.calls.get == 200,
       s"generator ran ${Round15FetchCounter.calls.get} times for 200 rows")
+    // the healthy side of strictOnce: first attempts never trip the
+    // guard, the generator still runs once per row, and the query scope
+    // leaves nothing persisted behind it
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet.toSet
+    Round15FetchCounter.reset()
+    val n = graft.core.Caches.scoped(fanOut(strictOnce = true).count())
+    assert(n == 200)
+    assert(Round15FetchCounter.calls.get == 200,
+      s"strictOnce: generator ran ${Round15FetchCounter.calls.get} times for 200 rows")
+    assert((sc.getPersistentRDDs.keySet -- before).isEmpty,
+      "strictOnce: the fan-out's leaves outlived its query scope")
   }
 
   test("image decode is identical with the per-call memory cache and never " +
